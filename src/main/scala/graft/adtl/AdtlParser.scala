@@ -154,8 +154,6 @@ final class AdtlParser private (
     if (java.nio.file.Paths.get(p).isAbsolute) p
     else specDir.map(d => s"$d/$p").getOrElse(p)
 
-  def tableNames: List[String] = spec.tables.keys.toList
-
   // ---- execution --------------------------------------------------------
 
   /** The CSV reader parseCsv uses (DictReader semantics — all strings). */
@@ -191,7 +189,6 @@ final class AdtlParser private (
       skipValidation: Boolean = false,
       orderCol: Option[String] = None,
       requireOrderCol: Boolean = false): Map[String, DataFrame] = {
-    Uuid5Expr.register(spark) // codegen'd uuid5 for generate rules
     // release the previous parse's cached input (if this parser cached it):
     // repeated parses on one parser would otherwise accumulate
     // InMemoryRelations and leak executor storage memory. Lazy unpersist —
@@ -201,26 +198,14 @@ final class AdtlParser private (
       lastParseInput.foreach { case (prev, _) => prev.unpersist(false) }
       lastParseCached = false
     }
-    var df = orderCol match {
-      case Some(c) => source.withColumn(ROW_ID, col(c).cast("long"))
+    val rowId = orderCol match {
+      case Some(c) => col(c).cast("long")
       case None =>
-        val groupTables = spec.tables.collect {
-          case (t, m) if m.kind == "groupBy" => t }
         if (requireOrderCol && groupTables.nonEmpty)
           throw new IllegalArgumentException(
             s"requireOrderCol: groupBy tables (${groupTables.mkString(", ")}) " +
               "need an explicit orderCol for deterministic lastNotNull/" +
               "firstNonNull/list semantics under splittable multi-file reads")
-        // the "never" cache policy re-scans the source per table action, so
-        // a scan-order id is not even stable WITHIN one parse — groupBy
-        // results could diverge table-to-table; enforce the doc'd contract
-        // instead of warning (withCachedInput pins one scan and is exempt)
-        if (groupTables.nonEmpty && inputCachePolicy == "never" && !cacheInput)
-          throw new IllegalArgumentException(
-            s"inputCachePolicy=never: groupBy tables (${groupTables.mkString(", ")}) " +
-              "need an explicit orderCol — each table's action re-scans the " +
-              "source and recomputes the scan-order id, so lastNotNull/" +
-              "firstNonNull/list results can diverge across tables and runs")
         if (groupTables.nonEmpty)
           System.err.println(
             "Warning: groupBy tables use scan order as \"file order\" " +
@@ -229,15 +214,9 @@ final class AdtlParser private (
               "indexes — under splittable multi-file reads pass orderCol (an " +
               "explicit sequence column) for deterministic lastNotNull/" +
               "firstNonNull/list semantics at scale.")
-        source.withColumn(ROW_ID, monotonically_increasing_id())
+        monotonically_increasing_id()
     }
-    spec.header.emptyFields.foreach { sentinel =>
-      df = df.select(df.columns.map { c =>
-        if (c == ROW_ID) col(c)
-        else when(col(c).cast("string") === sentinel, "")
-          .otherwise(col(c).cast("string")).as(c)
-      }: _*)
-    }
+    val (prepared, compiler) = prepare(source, rowId)
     // Rebalance the parse input when its scan cannot feed the session's
     // cores (round-15 stage audit: the compiled rule chains — 10 date
     // parses/row on apply-dates specs, coercion CASE cascades — ran as
@@ -255,45 +234,67 @@ final class AdtlParser private (
     // the expensive kernels, apply-transforms moderate, plain fields
     // cheap); a caller that already spread its input is unaffected
     // (cpuRebalance's caller-exchange check runs first).
-    if (specParseCost + (if (spec.header.emptyFields.nonEmpty)
-        df.columns.length - 1 else 0) >= RebalanceCostFloor)
-      df = graft.ops.Pipeline.cpuRebalance(df, col(ROW_ID))
-    val doCache = cacheInput || (inputCachePolicy match {
-      case "never" => false
-      case "always" => true
-      case _ => spec.tables.size > 1
-    })
-    if (doCache) df = df.cache()
-
-    val compiler = new RuleCompiler(
-      df.columns.filterNot(_ == ROW_ID).toSeq, spec.header, spec.dateFields.toSet,
-      registry, spec.namespaceUuid)
+    val spread =
+      if (specParseCost + (if (spec.header.emptyFields.nonEmpty)
+          prepared.columns.length - 1 else 0) >= RebalanceCostFloor)
+        graft.ops.Pipeline.cpuRebalance(prepared, col(ROW_ID))
+      else prepared
+    // every table re-reads the input: materialize it once when more than
+    // one table consumes it (or a post-parse diagnostic will)
+    val doCache = cacheInput || spec.tables.size > 1
+    val df = if (doCache) spread.cache() else spread
     lastParseInput = Some((df, compiler))
     lastParseCached = doCache
 
     spec.tables.map { case (tname, meta) =>
-      var out = meta.kind match {
-        case "constant" => execConstant(spark, tname)
-        case "oneToOne" => execOneToOne(df, compiler, tname)
-        case "groupBy" => execGroupBy(df, compiler, tname, meta)
-        case "oneToMany" => execOneToMany(df, compiler, tname, meta)
-      }
-      if (canonicalNumbers) {
-        // reference auto-int/float rendering for un-schema'd string attrs
-        val stringAttrs = out.schema.fields.collect {
-          case f if f.dataType == org.apache.spark.sql.types.StringType &&
-            coerceTypeFor(tname, f.name).isEmpty => f.name
-        }
-        stringAttrs.foreach { a =>
-          out = out.withColumn(a, compiler.canonicalNumber(col(a)))
-        }
-      }
-      val validated =
-        if (!skipValidation && spec.schemas.contains(tname))
-          withValidation(out, tname, meta)
-        else out
-      tname -> validated
+      tname -> buildTable(spark, df, compiler, tname, meta, validate = !skipValidation)
     }
+  }
+
+  private lazy val groupTables: List[String] =
+    spec.tables.collect { case (t, m) if m.kind == "groupBy" => t }.toList
+
+  /** The input-prep step shared by every entry point: assign the order id,
+    * scrub `emptyFields` sentinels to "" (stringifying every column — CSV
+    * semantics), and build the rule compiler over the source columns. */
+  private def prepare(source: DataFrame, rowId: Column): (DataFrame, RuleCompiler) = {
+    Uuid5Expr.register(source.sparkSession) // codegen'd uuid5 for generate rules
+    val df = spec.header.emptyFields.foldLeft(source.withColumn(ROW_ID, rowId)) {
+      (d, sentinel) =>
+        d.select(d.columns.map { c =>
+          if (c == ROW_ID) col(c)
+          else when(col(c).cast("string") === sentinel, "")
+            .otherwise(col(c).cast("string")).as(c)
+        }: _*)
+    }
+    val compiler = new RuleCompiler(
+      df.columns.filterNot(_ == ROW_ID).toSeq, spec.header, spec.dateFields.toSet,
+      registry, spec.namespaceUuid)
+    (df, compiler)
+  }
+
+  /** One output table over the prepared input: the kind's plan, the opt-in
+    * numeric canonicalization, then (for schema'd tables) validation. */
+  private def buildTable(spark: SparkSession, df: DataFrame, compiler: RuleCompiler,
+      tname: String, meta: TableMeta, validate: Boolean): DataFrame = {
+    var out = meta.kind match {
+      case "constant" => execConstant(spark, tname)
+      case "oneToOne" => execOneToOne(df, compiler, tname)
+      case "groupBy" => execGroupBy(df, compiler, tname, meta)
+      case "oneToMany" => execOneToMany(df, compiler, tname, meta)
+    }
+    if (canonicalNumbers) {
+      // reference auto-int/float rendering for un-schema'd string attrs
+      val stringAttrs = out.schema.fields.collect {
+        case f if f.dataType == org.apache.spark.sql.types.StringType &&
+          coerceTypeFor(tname, f.name).isEmpty => f.name
+      }
+      stringAttrs.foreach { a =>
+        out = out.withColumn(a, compiler.canonicalNumber(col(a)))
+      }
+    }
+    if (validate && spec.schemas.contains(tname)) withValidation(out, tname, meta)
+    else out
   }
 
   /** Opt-in reference numeric canonicalization ("007"→"7", "1.50"→"1.5")
@@ -323,49 +324,29 @@ final class AdtlParser private (
       orderCol: Option[String] = None): Map[String, DataFrame] = {
     require(source.isStreaming, "parseStream expects a streaming DataFrame")
     AdtlParser.ensureProgressListener(spark)
-    val groupTables = spec.tables.collect { case (t, m) if m.kind == "groupBy" => t }
     if (groupTables.nonEmpty && orderCol.isEmpty)
       throw new SpecValidationError(
         s"groupBy tables (${groupTables.mkString(", ")}) need an explicit " +
           "orderCol in streaming mode: arrival order is not file order " +
           "across micro-batches")
-    Uuid5Expr.register(spark)
-    var df = orderCol match {
-      case Some(c) => source.withColumn(ROW_ID, col(c).cast("long"))
-      case None => source.withColumn(ROW_ID, lit(0L)) // unused without groupBy
-    }
-    spec.header.emptyFields.foreach { sentinel =>
-      df = df.select(df.columns.map { c =>
-        if (c == ROW_ID) col(c)
-        else when(col(c).cast("string") === sentinel, "")
-          .otherwise(col(c).cast("string")).as(c)
-      }: _*)
-    }
-    val compiler = new RuleCompiler(
-      df.columns.filterNot(_ == ROW_ID).toSeq, spec.header, spec.dateFields.toSet,
-      registry, spec.namespaceUuid)
+    // monotonically_increasing_id is rejected on streams; without groupBy
+    // tables the order id is never read
+    val (df, compiler) = prepare(source, orderCol.fold(lit(0L))(c => col(c).cast("long")))
     spec.tables.collect {
       case (tname, meta) if meta.kind != "constant" =>
-        val out = meta.kind match {
-          case "oneToOne" => execOneToOne(df, compiler, tname)
-          case "oneToMany" => execOneToMany(df, compiler, tname, meta)
-          case "groupBy" => execGroupBy(df, compiler, tname, meta)
-        }
-        val validated =
-          if (spec.schemas.contains(tname)) {
-            // streaming counterpart of report(): valid/total ride as
-            // OBSERVED metrics on the output — zero extra jobs, read back
-            // from query progress via streamingReport. groupBy tables in
-            // Complete mode re-emit the whole result each batch, so the
-            // latest batch's metrics ARE the batch-report accounting;
-            // stateless tables in Append observe each batch's slice (sum
-            // across progresses for a running total).
-            withValidation(out, tname, meta).observe(
-              s"${AdtlParser.ReportMetricPrefix}$tname",
-              count(lit(1)).as("total"),
-              count(when(col("adtl_valid") === true, lit(1))).as("valid"))
-          } else out
-        tname -> validated
+        val out = buildTable(spark, df, compiler, tname, meta, validate = true)
+        // streaming counterpart of report(): valid/total ride as OBSERVED
+        // metrics on the output — zero extra jobs, read back from query
+        // progress via streamingReport. groupBy tables in Complete mode
+        // re-emit the whole result each batch, so the latest batch's
+        // metrics ARE the batch-report accounting; stateless tables in
+        // Append observe each batch's slice (sum across progresses for a
+        // running total).
+        tname -> (if (spec.schemas.contains(tname)) out.observe(
+          s"${AdtlParser.ReportMetricPrefix}$tname",
+          count(lit(1)).as("total"),
+          count(when(col("adtl_valid") === true, lit(1))).as("valid"))
+        else out)
     }
   }
 
@@ -638,33 +619,10 @@ final class AdtlParser private (
 
   /** Opt-in: cache the scrubbed parse input even for single-table specs, so
     * post-parse diagnostics (`-v` overwriteCounts) reuse the materialized
-    * frame instead of re-scanning the source through lineage. Wins over
-    * the policy below. */
+    * frame instead of re-scanning the source through lineage. Multi-table
+    * parses always cache it. */
   private var cacheInput: Boolean = false
   def withCachedInput(): this.type = { cacheInput = true; this }
-
-  /** Input materialization policy for multi-table parses:
-    *
-    *  - "auto" (default): cache the scrubbed input when more than one table
-    *    consumes it — the interactive/CLI shape, where the source is one
-    *    modest CSV every table re-reads.
-    *  - "never": skip the cache so EACH table's plan prunes columns at the
-    *    source scan — the 100 TB shape. A full-width cache materializes
-    *    every column once (memory + spill pressure at petabyte inputs and
-    *    no column pruning through InMemoryRelation), while N pruned scans
-    *    each read only the columns that table maps, with the emptyFields
-    *    scrub projection collapsed onto the pruned set by Catalyst.
-    *    Requires an explicit orderCol for groupBy determinism (scan-order
-    *    ids are only stable across re-scans of a single ordered source).
-    *  - "always": cache even single-table parses.
-    */
-  private var inputCachePolicy: String = "auto"
-  def withInputCachePolicy(p: String): this.type = {
-    require(Set("auto", "never", "always")(p),
-      s"unknown input cache policy: $p (auto|never|always)")
-    inputCachePolicy = p
-    this
-  }
 
   /** Overwrite diagnostics for the most recent parseDataFrame/parseCsv call,
     * computed from its cached groupBy input — no second source scan. */
@@ -675,18 +633,7 @@ final class AdtlParser private (
   }
 
   def overwriteCounts(spark: SparkSession, source: DataFrame): Map[String, Map[String, Long]] = {
-    Uuid5Expr.register(spark)
-    var df = source.withColumn(ROW_ID, monotonically_increasing_id())
-    spec.header.emptyFields.foreach { sentinel =>
-      df = df.select(df.columns.map { c =>
-        if (c == ROW_ID) col(c)
-        else when(col(c).cast("string") === sentinel, "")
-          .otherwise(col(c).cast("string")).as(c)
-      }: _*)
-    }
-    val compiler = new RuleCompiler(
-      df.columns.filterNot(_ == ROW_ID).toSeq, spec.header, spec.dateFields.toSet,
-      registry, spec.namespaceUuid)
+    val (df, compiler) = prepare(source, monotonically_increasing_id())
     overwriteCountsOn(df, compiler)
   }
 

@@ -59,7 +59,13 @@ object Main {
     while (i < args.length) {
       args(i) match {
         case "-o" | "--output" => output = Some(args(i + 1)); i += 2
-        case "--format" => format = args(i + 1); i += 2
+        case "--format" =>
+          format = args(i + 1)
+          if (format != "csv" && format != "parquet") {
+            System.err.println(s"Invalid format: $format")
+            usage(); sys.exit(1)
+          }
+          i += 2
         case "--parquet" => format = "parquet"; i += 1
         case "--encoding" => encoding = args(i + 1); i += 2
         case "--include-def" => includeDefs :+= args(i + 1); i += 2
@@ -91,13 +97,7 @@ object Main {
         // it so they never re-scan the source
         if (verbose) parser.withCachedInput()
         val tables = parser.parseCsv(spark, df, encoding)
-        val prefix = output.getOrElse(parser.spec.header.name)
-        tables.keys.foreach { t =>
-          format match {
-            case "parquet" => parser.writeParquet(tables, t, s"$prefix-$t.parquet")
-            case _ => parser.writeCsv(tables, t, s"$prefix-$t.csv")
-          }
-        }
+        parser.save(tables, output.getOrElse(parser.spec.header.name), format)
         // diagnostics reuse the parse's cached groupBy input — the opt-in
         // flag must not cost a second full source scan at 100 TB
         if (verbose) printOverwriteWarnings(parser.overwriteCounts())

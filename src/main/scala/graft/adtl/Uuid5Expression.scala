@@ -1,6 +1,6 @@
 package graft.adtl
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -58,14 +58,5 @@ object Uuid5Expr {
         "scala_udf")
       registered += id
     }
-  }
-
-  /** Column form: uuid5(namespace, seedColumn). */
-  def uuid5Col(spark: SparkSession, namespace: java.util.UUID, seed: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("graft_uuid5",
-      org.apache.spark.sql.functions.lit(namespace.getMostSignificantBits),
-      org.apache.spark.sql.functions.lit(namespace.getLeastSignificantBits),
-      seed)
   }
 }

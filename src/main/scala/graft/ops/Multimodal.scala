@@ -79,9 +79,6 @@ object Multimodal {
       nChannels = 3, format = "fake/rgb8")
   }
 
-  /** Metadata via the default (JDK ImageIO) codec, fallback for the rest. */
-  def decodeMedia(payload: Array[Byte]): MediaMeta = decodeFull(payload)._1
-
   /** One decode pass producing metadata AND the feature vector, so
     * decodeImages never reads the same payload twice. Payloads the codec
     * reads get a REAL feature (8-bin luminance histogram over the decoded

@@ -22,11 +22,6 @@ object TextAnalysis {
     when(size(t) > 0, size(array_distinct(t)).cast("double") / size(t).cast("double"))
   }
 
-  /** BPE-ish subword count estimate: unicode words + digits runs + symbols
-    * (a cheap deterministic proxy for tokenizer counts). */
-  def subwordEstimate(text: Column): Column =
-    size(filter(split(text, "(?<=[a-z0-9])(?=[A-Z])|[^A-Za-z0-9]+"), t => t =!= ""))
-
   def punctRatio(text: Column): Column = {
     val n = length(text)
     when(n > 0,

@@ -310,7 +310,7 @@ class AdtlParserSpec extends SparkSpec {
     assert(out.getAs[String]("c") == "x")
   }
 
-  test("input cache policy: 'never' prunes to source scans, same outputs") {
+  test("input cache: a multi-table parse plans its scrubbed input cached") {
     val spec = """{
       |  "adtl": {"name": "s", "description": "d", "tables": {
       |    "a": {"kind": "oneToOne"},
@@ -319,49 +319,12 @@ class AdtlParserSpec extends SparkSpec {
       |  "b": [{"if": {"y": {"!=": ""}}, "name": "y", "value": {"field": "y"}}]
       |}""".stripMargin
     val df = strDf(Seq("x", "y"), Seq(Seq("1", "a"), Seq("2", ""), Seq("3", "b")))
-    def collectAll(p: AdtlParser) = {
-      val t = p.parseDataFrame(spark, df)
-      (t("a").collect().toList, t("b").collect().toList,
-        t("a").queryExecution.optimizedPlan.collect {
-          case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
-        }.nonEmpty)
-    }
-    // never FIRST (Spark's CacheManager substitutes cached plans into any
-    // later matching fragment, so the auto parse must not run yet):
-    // plans read the source directly, each table's column pruning reaches
-    // the scan (the 100 TB shape)
-    val (aDirect, bDirect, directHasIMR) = collectAll(
-      AdtlParser.fromJsonString(spec).withInputCachePolicy("never"))
-    assert(!directHasIMR)
-    // default (auto): multi-table spec caches the scrubbed input
-    val (aCached, bCached, cachedHasIMR) = collectAll(AdtlParser.fromJsonString(spec))
-    assert(cachedHasIMR)
-    assert(aCached == aDirect && bCached == bDirect)
-    intercept[IllegalArgumentException](
-      AdtlParser.fromJsonString(spec).withInputCachePolicy("sometimes"))
-  }
-
-  test("input cache policy 'never' + groupBy enforces an explicit orderCol") {
-    val spec = """{
-      |  "adtl": {"name": "s", "description": "d", "tables": {
-      |    "t": {"kind": "groupBy", "groupBy": "sid", "aggregation": "lastNotNull"}}},
-      |  "t": {"sid": {"field": "sid"}, "v": {"field": "v"}}
-      |}""".stripMargin
-    val df = strDf(Seq("seq", "sid", "v"), Seq(Seq("1", "a", "x"), Seq("2", "a", "y")))
-    // without the cache, scan-order ids are recomputed per action — refuse
-    val e = intercept[IllegalArgumentException] {
-      AdtlParser.fromJsonString(spec).withInputCachePolicy("never")
-        .parseDataFrame(spark, df)
-    }
-    assert(e.getMessage.contains("inputCachePolicy=never"))
-    // an explicit order column restores determinism without a cache
-    val out = AdtlParser.fromJsonString(spec).withInputCachePolicy("never")
-      .parseDataFrame(spark, df, orderCol = Some("seq"))("t").collect()
-    assert(out.length == 1 && out(0).getAs[String]("v") == "y")
-    // withCachedInput pins one scan — scan order is stable, policy allowed
-    val cached = AdtlParser.fromJsonString(spec).withInputCachePolicy("never")
-      .withCachedInput().parseDataFrame(spark, df)("t").collect()
-    assert(cached.length == 1 && cached(0).getAs[String]("v") == "y")
+    val t = AdtlParser.fromJsonString(spec).parseDataFrame(spark, df)
+    assert(t("a").queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+    }.nonEmpty)
+    assert(t("a").collect().map(_.getString(0)).sorted.toList == List("1", "2", "3"))
+    assert(t("b").collect().map(_.getAs[String]("value")).sorted.toList == List("a", "b"))
   }
 
   test("re-parsing on one parser releases the previous parse's cached input") {

@@ -102,6 +102,21 @@ class CliParitySpec extends SparkSpec {
     assert(json.contains("\"validation_errors\": {}"))
   }
 
+  test("parse rejects an unknown --format: usage and exit 1, nothing written") {
+    // sys.exit ends the JVM, so the CLI runs in a child process
+    val javaBin = java.nio.file.Paths.get(
+      System.getProperty("java.home"), "bin", "java").toString
+    val proc = new ProcessBuilder(javaBin, "-cp", System.getProperty("java.class.path"),
+      "graft.adtl.Main", "parse", s"$tmp/spec.toml", s"$tmp/data.csv",
+      "-o", s"$tmp/xl", "--format", "xlsx")
+      .redirectErrorStream(true).start()
+    val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
+    assert(proc.waitFor() == 1, out)
+    assert(out.contains("Invalid format: xlsx"), out)
+    assert(out.contains("usage: adtlspark parse"), out)
+    assert(!new java.io.File(s"$tmp/xl-t.csv").exists())
+  }
+
   test("check with no data file validates the spec only") {
     val out = withOutCapture {
       Main.main(Array("check", s"$tmp/spec.toml"))

@@ -351,4 +351,64 @@ class StreamingParseSpec extends SparkSpec {
     assert(byId("S001").getAs[String]("admission_date") == "2022-01-05")
     assert(byId("S002").getAs[String]("sex_at_birth") == "female")
   }
+
+  test("parseStream honours withCanonicalNumbers like the batch parse") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+
+    val parser = AdtlParser.fromJsonString(
+      """{"adtl": {"name": "s", "description": "d", "tables": {"t": {"kind": "oneToOne"}}},
+          "t": {"code": {"field": "code"}, "dose": {"field": "dose"}}}""")
+      .withCanonicalNumbers()
+    val mem = MemoryStream[(String, String)]
+    val q = parser.parseStream(spark, mem.toDF().toDF("code", "dose"))("t").writeStream
+      .format("memory").queryName("adtl_stream_canonical")
+      .outputMode("append").start()
+    mem.addData(("007", "1.50"))
+    q.processAllAvailable()
+    q.stop()
+
+    val rows = spark.table("adtl_stream_canonical").collect()
+      .map(r => (r.getAs[String]("code"), r.getAs[String]("dose"))).toList
+    assert(rows == List(("7", "1.5")))
+  }
+
+  test("emptyFields scrub is identical in parseDataFrame, parseStream and overwriteCounts") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+
+    val parser = AdtlParser.fromJsonString(
+      """{"adtl": {"name": "s", "description": "d", "emptyFields": "NA", "tables": {
+          "t": {"kind": "groupBy", "groupBy": "sid", "aggregation": "lastNotNull"}}},
+          "t": {"sid": {"field": "sid"}, "v": {"field": "v"}}}""")
+    // (seq, sid, v): A's later "NA" must not overwrite "x"; B holds only
+    // the sentinel; C has two real values; the "NA" key drops out
+    val rows = Seq(
+      (1L, "A", "x"), (2L, "A", "NA"), (3L, "B", "NA"),
+      (4L, "C", "y"), (5L, "C", "z"), (6L, "NA", "w"))
+    val expected = List(("A", "x"), ("B", null), ("C", "z"))
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("sid").collect()
+        .map(r => (r.getAs[String]("sid"), r.getAs[String]("v"))).toList
+
+    val source = rows.toDF("seq", "sid", "v")
+    assert(pairs(parser.parseDataFrame(spark, source, orderCol = Some("seq"))("t")) ==
+      expected)
+
+    val mem = MemoryStream[(Long, String, String)]
+    val q = parser.parseStream(spark, mem.toDF().toDF("seq", "sid", "v"),
+      orderCol = Some("seq"))("t").writeStream
+      .format("memory").queryName("adtl_stream_scrub")
+      .outputMode("complete").start()
+    mem.addData(rows: _*)
+    q.processAllAvailable()
+    q.stop()
+    assert(pairs(spark.table("adtl_stream_scrub")) == expected)
+
+    // unscrubbed, A would hold two distinct values ("x", "NA"); scrubbed,
+    // only C overwrites
+    assert(parser.overwriteCounts(spark, source) == Map("t" -> Map("v" -> 1L)))
+  }
 }

@@ -9,10 +9,9 @@
 # that rises or falls across the session lands on both sides
 # symmetrically instead of all on whichever side ran last.
 #
-# Writes BENCH_PREV.json at the repo root; graft.Bench reads it (if
-# present) and emits prev_commit/prev_commit_total in its JSON line, so
-# the driver's BENCH_r{N}.json carries the A/B context. The file also
-# carries both sides' per-query minima and the interleaved ratio.
+# Writes BENCH_PREV.json at the repo root: both sides' per-query minima
+# and the interleaved ratio. It is this tool's own attribution artifact;
+# graft.Bench never reads it and always reports its live run.
 #
 # Usage: tools/bench_ab.sh [prev-commit]
 #   prev-commit defaults to the most recent driver round-artifact commit
@@ -74,9 +73,8 @@ B1=$(run_cur);  echo "B1(cur)  $B1"
 A2=$(run_prev); echo "A2(prev) $A2"
 B2=$(run_cur);  echo "B2(cur)  $B2"
 
-# cur-side provenance: graft.Bench adopts the A/B basis only while HEAD's
-# src/main+build.sbt are unchanged vs cur_commit (round-12 advice — a
-# perf-affecting edit after this run must drop the stale A/B numbers).
+# cur-side provenance: whether src/main or build.sbt had uncommitted
+# edits when the cur side ran (its minima then measure no commit).
 CUR_DIRTY=false
 if [ -n "$(git status --porcelain -- src/main build.sbt)" ]; then
   CUR_DIRTY=true
@@ -99,9 +97,7 @@ doc = {
     "cur_dirty": os.environ["CUR_DIRTY"] == "true",
     "total": round(sum(amin.values()), 3),
     "sf": os.environ["SF_DIR"],
-    # graft.Bench adopts the cur-side minima ONLY when this run's cpus+sf
-    # match the artifact's (round-15 verdict item 1b): the driver's
-    # lower-core scaling run must report its own live numbers.
+    # the core count both sides ran at
     "cpus": int(os.environ["CPUS"]),
     "at": datetime.datetime.now(datetime.timezone.utc)
         .strftime("%Y-%m-%dT%H:%M:%SZ"),
