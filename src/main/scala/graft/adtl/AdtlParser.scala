@@ -198,6 +198,8 @@ final class AdtlParser private (
       lastParseInput.foreach { case (prev, _) => prev.unpersist(false) }
       lastParseCached = false
     }
+    // likewise forget the previous parse's write observations
+    observedWrites.clear()
     val rowId = orderCol match {
       case Some(c) => col(c).cast("long")
       case None =>
@@ -234,9 +236,21 @@ final class AdtlParser private (
     // the expensive kernels, apply-transforms moderate, plain fields
     // cheap); a caller that already spread its input is unaffected
     // (cpuRebalance's caller-exchange check runs first).
+    //
+    // And skipped when the input is at most one per-task unit
+    // (Pipeline.BytesPerTask) of source bytes: one split's worth of rows
+    // fanned out to the session width is 32 near-empty tasks plus a
+    // shuffle, and the CSV sink's coalesce(1) folds everything after the
+    // exchange back into one task anyway. Measured on the perfbench
+    // site_batches workload (two ~0.1 MB site CSVs through a 128-rule,
+    // 3-table spec per pass; local[4], 32 shuffle partitions, 4-core VM),
+    // together with the report riding the sink write: per pass 16 → 8
+    // jobs, 140 → 8 tasks, 343 KB → 0 shuffle bytes, 5.8 → 0.14 s task
+    // wait; median wall 0.79× over 16 interleaved pairs, each won.
     val spread =
       if (specParseCost + (if (spec.header.emptyFields.nonEmpty)
-          prepared.columns.length - 1 else 0) >= RebalanceCostFloor)
+          prepared.columns.length - 1 else 0) >= RebalanceCostFloor &&
+          graft.ops.Pipeline.leafBytes(prepared) > graft.ops.Pipeline.BytesPerTask)
         graft.ops.Pipeline.cpuRebalance(prepared, col(ROW_ID))
       else prepared
     // every table re-reads the input: materialize it once when more than
@@ -335,18 +349,17 @@ final class AdtlParser private (
     spec.tables.collect {
       case (tname, meta) if meta.kind != "constant" =>
         val out = buildTable(spark, df, compiler, tname, meta, validate = true)
-        // streaming counterpart of report(): valid/total ride as OBSERVED
-        // metrics on the output — zero extra jobs, read back from query
-        // progress via streamingReport. groupBy tables in Complete mode
-        // re-emit the whole result each batch, so the latest batch's
+        // streaming counterpart of report(): the report aggregates ride as
+        // OBSERVED metrics on the output — zero extra jobs, read back from
+        // query progress via streamingReport. groupBy tables in Complete
+        // mode re-emit the whole result each batch, so the latest batch's
         // metrics ARE the batch-report accounting; stateless tables in
         // Append observe each batch's slice (sum across progresses for a
         // running total).
-        tname -> (if (spec.schemas.contains(tname)) out.observe(
-          s"${AdtlParser.ReportMetricPrefix}$tname",
-          count(lit(1)).as("total"),
-          count(when(col("adtl_valid") === true, lit(1))).as("valid"))
-        else out)
+        tname -> (if (spec.schemas.contains(tname)) {
+          val aggs = reportAggs(tname)
+          out.observe(s"${AdtlParser.ReportMetricPrefix}$tname", aggs.head, aggs.tail: _*)
+        } else out)
     }
   }
 
@@ -723,15 +736,64 @@ final class AdtlParser private (
       .select(fields.map(f => col(s"__e.$f").as(f)): _*)
   }
 
-  /** Append adtl_valid / adtl_error annotation columns. */
+  /** Append adtl_valid / adtl_error annotation columns, and keep the
+    * table's compile-time messages for its report aggregates. */
   private def withValidation(out: DataFrame, tname: String, meta: TableMeta): DataFrame = {
     val schema = spec.schemas(tname)
     val v = SchemaValidate.compile(
       schema, meta.discriminator, meta.kind == "oneToMany", tname,
       a => if (out.columns.contains(a)) col(a) else lit(null).cast("string"))
+    reportMessages += tname -> (v.messages -> v.fallback)
     out.withColumn("adtl_valid", v.valid)
       .withColumn("adtl_error", v.error)
   }
+
+  // ---- validation report -----------------------------------------------
+
+  /** Per validated table: the messages `adtl_error` can take that are
+    * known at compile time, and whether the data-dependent oneOf fallback
+    * ("No validator found for attribute '…'") can occur. Spec-derived, so
+    * it is the same for every parse. */
+  private var reportMessages: Map[String, (Seq[String], Boolean)] = Map.empty
+
+  /** A table this parser did not validate has no known messages: every
+    * error it carries is counted as `other`. */
+  private def messagesOf(tname: String): (Seq[String], Boolean) =
+    reportMessages.getOrElse(tname, (Nil, true))
+
+  /** Each table's report aggregates, one row: `total`, `valid`, `m<i>` =
+    * rows whose error is the i-th known message, and (when the fallback
+    * can occur) `other` = rows with any other error. */
+  private def reportAggs(tname: String): Seq[Column] = {
+    val (messages, fallback) = messagesOf(tname)
+    val err = col("adtl_error")
+    Seq(count(lit(1)).as("total"),
+      count(when(col("adtl_valid") === true, lit(1))).as("valid")) ++
+      messages.zipWithIndex.map { case (m, i) => count(when(err === m, lit(1))).as(s"m$i") } ++
+      (if (fallback) Seq(count(when(otherError(messages), lit(1))).as("other")) else Nil)
+  }
+
+  private def otherError(messages: Seq[String]): Column =
+    if (messages.isEmpty) col("adtl_error").isNotNull
+    else col("adtl_error").isNotNull && !col("adtl_error").isin(messages: _*)
+
+  /** The observation of each table's last completed sink write since the
+    * latest parse, with the exact frame that was written. Recorded only
+    * after the write returns: a failed write never completes its
+    * Observation, and report() would wait `ObservationWait` for it. */
+  private val observedWrites =
+    scala.collection.mutable.Map.empty[String, (DataFrame, org.apache.spark.sql.Observation)]
+
+  /** Run `write` over `df` with the table's report aggregates observed
+    * on it (tables without validation columns are written as they are). */
+  private def observedWrite(tname: String, df: DataFrame)(write: DataFrame => Unit): Unit =
+    if (!df.columns.contains("adtl_valid")) write(df)
+    else {
+      val obs = new org.apache.spark.sql.Observation(s"${AdtlParser.ReportMetricPrefix}$tname")
+      val aggs = reportAggs(tname)
+      write(df.observe(obs, aggs.head, aggs.tail: _*))
+      observedWrites(tname) = df -> obs
+    }
 
   // ---- sinks ------------------------------------------------------------
 
@@ -744,9 +806,11 @@ final class AdtlParser private (
       throw new IllegalArgumentException(s"Invalid table name: $tname"))
 
   def writeCsv(tables: Map[String, DataFrame], tname: String, path: String): Unit =
-    renderForCsv(readTable(tables, tname)).coalesce(1)
-      .write.mode("overwrite").option("header", "true").option("emptyValue", "")
-      .csv(path)
+    observedWrite(tname, readTable(tables, tname)) { df =>
+      renderForCsv(df).coalesce(1)
+        .write.mode("overwrite").option("header", "true").option("emptyValue", "")
+        .csv(path)
+    }
 
   def renderForCsv(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.ArrayType
@@ -776,11 +840,12 @@ final class AdtlParser private (
     if (spec.header.returnUnmatched)
       throw new IllegalArgumentException(
         "returnUnmatched is not compatible with parquet output")
-    val df = readTable(tables, tname)
-    val validationCols = List("adtl_valid", "adtl_error").filter(df.columns.contains)
-    val dataCols = df.columns.filterNot(validationCols.contains).toList
-    df.select((validationCols ++ dataCols).map(col): _*)
-      .write.mode("overwrite").parquet(path)
+    observedWrite(tname, readTable(tables, tname)) { df =>
+      val validationCols = List("adtl_valid", "adtl_error").filter(df.columns.contains)
+      val dataCols = df.columns.filterNot(validationCols.contains).toList
+      df.select((validationCols ++ dataCols).map(col): _*)
+        .write.mode("overwrite").parquet(path)
+    }
   }
 
   /** Save every table as {prefix}-{table}.{csv,parquet} (save,
@@ -794,16 +859,35 @@ final class AdtlParser private (
       }
     }
 
-  /** Validation report: valid/total per table + error-message counts — a
-    * single aggregation per table (show_report, parser.py:845-863). */
+  /** Validation report: valid/total per table + error-message counts
+    * (show_report, parser.py:845-863), for every table with validation
+    * columns. A table whose exact frame went through writeCsv/writeParquet
+    * since the latest parse is read from the metrics observed on that
+    * write — no Spark job. Any other frame runs the same aggregates as
+    * one `agg` job. Data-dependent oneOf fallback messages are the only
+    * ones not counted by name: when the counters see such rows, one
+    * filtered groupBy over just those rows names them. */
   def report(tables: Map[String, DataFrame]): Map[String, (Long, Long, Map[String, Long])] =
     tables.collect { case (tname, df) if df.columns.contains("adtl_valid") =>
-      val counts = df.groupBy("adtl_valid", "adtl_error").count().collect()
-      val total = counts.map(_.getLong(2)).sum
-      val valid = counts.filter(r => !r.isNullAt(0) && r.getBoolean(0)).map(_.getLong(2)).sum
-      val errors = counts.filter(r => !r.isNullAt(1))
-        .map(r => r.getString(1) -> r.getLong(2)).toMap
-      tname -> (valid, total, errors)
+      // The observation arrives on the listener bus after the write
+      // returns. It completes empty when the write produced no metrics,
+      // and never when the bus dropped the event: both fall back to agg.
+      val observed = observedWrites.get(tname).collect { case (w, obs) if w eq df => obs }
+        .flatMap(obs => scala.util.Try(scala.concurrent.Await.result(
+          obs.future, AdtlParser.ObservationWait)).toOption)
+        .filter(_.length > 0)
+      val counts = observed.getOrElse {
+        val aggs = reportAggs(tname)
+        df.agg(aggs.head, aggs.tail: _*).head()
+      }
+      def n(k: String): Long = counts.getAs[Long](k)
+      val messages = messagesOf(tname)._1
+      val known = messages.indices.map(i => messages(i) -> n(s"m$i"))
+      val other =
+        if (!counts.schema.fieldNames.contains("other") || n("other") == 0) Nil
+        else df.filter(otherError(messages)).groupBy("adtl_error").count()
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+      tname -> (n("valid"), n("total"), (known ++ other).filter(_._2 > 0).toMap)
     }
 
   /** Spec-vs-data field diff (check_spec_fields, parser.py:915-932). */
@@ -814,8 +898,13 @@ final class AdtlParser private (
 }
 
 object AdtlParser {
-  /** Observed-metric name prefix for streaming validation accounting. */
+  /** Observed-metric name prefix for validation accounting (sink writes
+    * and streaming). */
   val ReportMetricPrefix = "adtl_report_"
+
+  /** How long report() waits for a completed write's observed metrics
+    * before aggregating the table itself. */
+  private val ObservationWait = scala.concurrent.duration.Duration(60, "s")
 
   /** Per-query accumulated append-mode slices, fed by ONE
     * StreamingQueryListener per SparkSession (registered lazily at the

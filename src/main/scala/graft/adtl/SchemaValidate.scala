@@ -14,7 +14,13 @@ import Spec.Raw
   */
 object SchemaValidate {
 
-  final case class Validation(valid: Column, error: Column)
+  /** `messages`: every message `error` can take that is known at compile
+    * time (distinct, schema order). `fallback`: whether `error` can also
+    * take the data-dependent oneOf message "No validator found for
+    * attribute '…' in table '…'", whose text carries the row's
+    * discriminator value. */
+  final case class Validation(valid: Column, error: Column,
+      messages: Seq[String], fallback: Boolean)
 
   /** attr → its output Column (post-compilation), for property checks. */
   def compile(
@@ -30,7 +36,7 @@ object SchemaValidate {
       val generalReq = required(schema)
       val options = schema.getOrElse("oneOf", Nil).asInstanceOf[List[Raw]]
       // per-discriminator-value validator dispatch
-      val branches: List[(List[String], Column)] = options.map { sub =>
+      val branches: List[(List[String], (Column, List[String]))] = options.map { sub =>
         val subProps = props(sub)
         val keys: List[String] = subProps.get(disc) match {
           case Some(p: Raw @unchecked) =>
@@ -44,8 +50,11 @@ object SchemaValidate {
           "required" -> (generalReq ++ required(sub)).distinct)
         keys -> firstError(merged, attr)
       }
+      val messages = branches.collect {
+        case (keys, (_, ms)) if keys.nonEmpty => ms
+      }.flatten.distinct
       val discCol = attr(disc).cast("string")
-      val err = branches.foldLeft(None: Option[Column]) { case (acc, (keys, e)) =>
+      val err = branches.foldLeft(None: Option[Column]) { case (acc, (keys, (e, _))) =>
         if (keys.isEmpty) acc
         else {
           val cond = keys.map(k => discCol === k).reduce(_ || _)
@@ -57,12 +66,16 @@ object SchemaValidate {
       }.map(_.otherwise(
           concat(lit(s"No validator found for attribute '"),
             coalesce(discCol, lit("None")), lit(s"' in table '$tableName'"))))
-        .getOrElse(firstError(schema, attr))
-      Validation(err.isNull, err)
-    } else {
-      val err = firstError(schema, attr)
-      Validation(err.isNull, err)
-    }
+      err match {
+        case Some(e) => Validation(e.isNull, e, messages, fallback = true)
+        case None => validation(firstError(schema, attr))
+      }
+    } else validation(firstError(schema, attr))
+  }
+
+  private def validation(checked: (Column, List[String])): Validation = {
+    val (err, messages) = checked
+    Validation(err.isNull, err, messages.distinct, fallback = false)
   }
 
   private def props(s: Raw): Raw =
@@ -73,19 +86,21 @@ object SchemaValidate {
   private def hasOneOfProperties(schema: Raw): Boolean =
     schema.get("oneOf").exists(_.asInstanceOf[List[Raw]].exists(_.contains("properties")))
 
-  /** First failing check's message, null when valid. Check order mirrors the
-    * reference validator's practical behavior: required first, then
-    * per-property enum/type/format/pattern in schema order. */
-  private def firstError(schema: Raw, attr: String => Column): Column = {
+  /** First failing check's message, null when valid, plus every message
+    * it can take. Check order mirrors the reference validator's practical
+    * behavior: required first, then per-property enum/type/format/pattern
+    * in schema order. */
+  private def firstError(schema: Raw, attr: String => Column): (Column, List[String]) = {
     val reqd = required(schema)
     val properties = props(schema)
-    val checks = scala.collection.mutable.ListBuffer[Column]()
+    val checks = scala.collection.mutable.ListBuffer[(Column, String)]()
+    def check(failed: Column, msg: String): Unit = checks += (when(failed, msg) -> msg)
 
     if (reqd.nonEmpty) {
       val missing = reqd.map(r => attr(r).isNull)
       val anyMissing = missing.reduce(_ || _)
       val msg = s"data must contain ${reqd.map(r => s"'$r'").mkString("[", ", ", "]")} properties"
-      checks += when(anyMissing, msg)
+      check(anyMissing, msg)
     }
 
     properties.foreach { case (prop, spec0) =>
@@ -101,7 +116,7 @@ object SchemaValidate {
         val strs = allowed.filter(_ != null).map(_.toString)
         val ok = c.cast("string").isin(strs: _*)
         val msg = s"data.$prop must be one of ${allowed.map(v => renderJson(v)).mkString("[", ", ", "]")}"
-        checks += when(present && !coalesce(ok, lit(false)), msg)
+        check(present && !coalesce(ok, lit(false)), msg)
       }
       spec.get("type").foreach { t =>
         val types = t match {
@@ -119,26 +134,27 @@ object SchemaValidate {
             case _ => lit(true)
           }.reduce(_ || _)
           val msg = s"data.$prop must be ${types.mkString(" or ")}"
-          checks += when(present && !coalesce(ok, lit(false)), msg)
+          check(present && !coalesce(ok, lit(false)), msg)
         }
       }
       spec.get("format").foreach {
         case "date" =>
           val ok = try_to_timestamp(c.cast("string"), lit("yyyy-MM-dd")).isNotNull
-          checks += when(present && !coalesce(ok, lit(false)), s"data.$prop must be date")
+          check(present && !coalesce(ok, lit(false)), s"data.$prop must be date")
         case "date-time" =>
           val ok = try_to_timestamp(c.cast("string")).isNotNull
-          checks += when(present && !coalesce(ok, lit(false)), s"data.$prop must be date-time")
+          check(present && !coalesce(ok, lit(false)), s"data.$prop must be date-time")
         case _ =>
       }
       spec.get("pattern").foreach { p =>
         val ok = c.cast("string").rlike(p.toString)
-        checks += when(present && !coalesce(ok, lit(false)),
+        check(present && !coalesce(ok, lit(false)),
           s"data.$prop must match pattern ${p.toString}")
       }
     }
 
-    if (checks.isEmpty) lit(null).cast("string") else coalesce(checks.toSeq: _*)
+    val err = if (checks.isEmpty) lit(null).cast("string") else coalesce(checks.map(_._1).toSeq: _*)
+    (err, checks.map(_._2).toList)
   }
 
   private def renderJson(v: Any): String = v match {

@@ -62,7 +62,7 @@ object Linkage {
     // the exchange by its (small) input bytes — round-16 audit measured
     // the JW sibling's kernel coalesced onto 4 tasks. Width is
     // input-keyed (session floor at gate scale, grows with bytes).
-    val pairWidth = Pipeline.cpuWidthLeaf(df, bytesPerTask = 256L << 10)
+    val pairWidth = Pipeline.cpuWidthLeaf(df)
     lo.repartition(pairWidth, col("blk"), col("lo"), col("hi"))
       .join(hi.repartition(pairWidth, col("blk"), col("lo"), col("hi"))
         .hint("SHUFFLE_HASH"), Seq("blk", "lo", "hi"))
@@ -135,7 +135,7 @@ object Linkage {
       col("s_a"), col("s_b"))
     // width pin: see fuzzyPairs — the JW kernel ran on 4 AQE-coalesced
     // tasks (round-16 audit: 2 stages × 4 tasks, ~9 task-sec)
-    val pairWidth = Pipeline.cpuWidthLeaf(df, bytesPerTask = 256L << 10)
+    val pairWidth = Pipeline.cpuWidthLeaf(df)
     lo.repartition(pairWidth, col("blk"), col("lo"), col("hi"))
       .join(hi.repartition(pairWidth, col("blk"), col("lo"), col("hi"))
         .hint("SHUFFLE_HASH"), Seq("blk", "lo", "hi"))

@@ -23,6 +23,13 @@ object Pipeline {
     conv(substring(md5(concat(lit(salt), lit(":"), id.cast("string"))),
       1, 15), 16, 10).cast("long")
 
+  /** Source bytes one CPU-dense task is budgeted: the unit of the
+    * [[cpuWidth]] rule, the width of [[cpuRebalance]], and the size at or
+    * below which a scan is one split that no rebalance can usefully
+    * spread. 256 KB budgets single-digit-second tasks for gram-explode
+    * kernels measured at ~15–20 task-seconds per source MB. */
+  private[graft] val BytesPerTask: Long = 256L << 10
+
   /** The session's configured shuffle width — [[cpuWidth]]'s clamp floor
     * and the threshold above which an explicit AQE-exempt exchange is
     * worth pinning (see Dedup.widen). */
@@ -60,16 +67,14 @@ object Pipeline {
     *
     * Width = estimated plan bytes / `bytesPerTask`, clamped to
     * [session shuffle width, session width × `maxFactor`]. The estimate
-    * is [[planBytes]]. The default 256 KB/task budgets
-    * single-digit-second tasks for gram-explode kernels measured at
-    * ~15–20 task-seconds per source MB; the clamp floor keeps small
-    * inputs at the session's natural width (the pre-round-13 plan,
-    * bit-identical results either way) and the ceiling reproduces the
-    * round-13 wide plan exactly where the 100× audit needed it. An
-    * unavailable estimate (≤ 0) falls back to the conservative wide
-    * form. */
+    * is [[planBytes]], `bytesPerTask` defaults to [[BytesPerTask]]; the
+    * clamp floor keeps small inputs at the session's natural width (the
+    * pre-round-13 plan, bit-identical results either way) and the
+    * ceiling reproduces the round-13 wide plan exactly where the 100×
+    * audit needed it. An unavailable estimate (≤ 0) falls back to the
+    * conservative wide form. */
   private[graft] def cpuWidth(frame: DataFrame,
-      bytesPerTask: Long = 256L << 10, maxFactor: Int = 8): Int = {
+      bytesPerTask: Long = BytesPerTask, maxFactor: Int = 8): Int = {
     val parts = sessionWidth(frame.sparkSession)
     val cap = math.max(parts, parts * maxFactor)
     val est = planBytes(frame)
@@ -96,7 +101,7 @@ object Pipeline {
     * the session width (the conservative small side, NOT the wide cap —
     * callers here size exchanges that exist at every scale). */
   private[graft] def cpuWidthLeaf(df: DataFrame,
-      bytesPerTask: Long = 256L << 10, maxFactor: Int = 8): Int = {
+      bytesPerTask: Long = BytesPerTask, maxFactor: Int = 8): Int = {
     val parts = sessionWidth(df.sparkSession)
     val est = leafBytes(df)
     if (est <= 0) parts
@@ -158,9 +163,10 @@ object Pipeline {
       val parts = sessionWidth(spark)
       if (naturalSplits >= BigInt(parts)) df
       else {
-        // width keyed to the leaf bytes (the cpuWidth rule at 256 KB of
-        // source bytes per task), clamped to [session width, 8x]
-        val w = ((est + (256L << 10) - 1) / (256L << 10))
+        // width keyed to the leaf bytes (the cpuWidth rule at
+        // BytesPerTask of source bytes per task), clamped to
+        // [session width, 8x]
+        val w = ((est + BytesPerTask - 1) / BytesPerTask)
           .min(BigInt(parts * 8)).max(BigInt(parts)).toInt
         if (cols.isEmpty) df.repartition(w)
         else df.repartition(w, cols: _*)
@@ -202,7 +208,17 @@ object Pipeline {
     * prefix-sum shape (one corpus-wide window shuffle, one tiny offsets
     * window, one broadcast join back), with every (value, outCol) pair
     * sharing the bucket assignment, the window sort and the offsets
-    * frame — a caller needing k prefix sums pays one pass, not k. */
+    * frame — a caller needing k prefix sums pays one pass, not k.
+    *
+    * The offsets frame has |groups| × `buckets` rows (group key, bucket
+    * and k longs each) and is BROADCAST by hint — the driver collects it
+    * and ships it to every executor, whatever
+    * `spark.sql.autoBroadcastJoinThreshold` says. That is cheap for the
+    * few-groups case this primitive exists for; do not use it once
+    * |groups| × `buckets` passes ~10^6 rows (~10^5 groups at the usual
+    * 8–32 buckets). With that many groups the plain per-group window
+    * `sum over (partition by part order by ord)` already spreads across
+    * tasks and needs no broadcast. */
   private[ops] def runningSumN(df: DataFrame, orderCol: String,
       values: Seq[(Column, String)], buckets: Int,
       partCols: Seq[String] = Nil, tieCols: Seq[String] = Nil,

@@ -33,11 +33,14 @@ object Profile {
     * (1.0E7) and other engines' (%g / 1e+07) disagree above 10^7, while
     * a fixed-scale decimal renders identically everywhere. */
   def profileTable(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.{DoubleType, FloatType}
+    import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType, FloatType,
+      MapType, StructType}
     val cols = df.columns.toSeq
     def render(c: String) = df.schema(c).dataType match {
       case DoubleType | FloatType =>
         (x: org.apache.spark.sql.Column) => x.cast("decimal(28,6)").cast("string")
+      // maps have no ordering: min/max stay null
+      case _: MapType => (_: org.apache.spark.sql.Column) => lit(null).cast("string")
       case _ => (x: org.apache.spark.sql.Column) => x.cast("string")
     }
     // TWO passes instead of the former single multi-count_distinct
@@ -66,12 +69,16 @@ object Profile {
     // equality equals the column type's distinct semantics: float and
     // double normalize -0.0 → 0.0 (x + 0.0) to match Spark's
     // NormalizeFloatingNumbers aggregation-key behavior; any NaN
-    // renders "NaN", matching NaN-equals-NaN distinct semantics; every
-    // other type's CAST AS STRING is injective.
+    // renders "NaN", matching NaN-equals-NaN distinct semantics. Arrays,
+    // maps and structs render as JSON and binary as hex: their CAST AS
+    // STRING is not injective (array('a, b') and array('a', 'b') both
+    // cast to "[a, b]"). Every other type's CAST AS STRING is injective.
     def distinctRender(c: String): org.apache.spark.sql.Column =
       df.schema(c).dataType match {
         case DoubleType => (col(c) + lit(0.0)).cast("string")
         case FloatType => (col(c) + lit(0.0f)).cast("string")
+        case _: ArrayType | _: MapType | _: StructType => to_json(col(c))
+        case BinaryType => hex(col(c))
         case _ => col(c).cast("string")
       }
     val aggsA = cols.flatMap { c =>

@@ -489,8 +489,10 @@ object EngineQueries {
     // S7: the validation REPORT numbers themselves — valid/total and the
     // per-error-message histogram the markdown/JSON report renders
     // (parser.py report surface), pinned through the actual report() API
-    // (one aggregation job; the tiny result is re-lifted into a DataFrame
-    // for the hash compare)
+    // (the table is never written, so no write observed its counts: one
+    // aggregation counts valid/total and each known message, and one
+    // filtered groupBy names the "No validator found" fallback rows; the
+    // tiny result is re-lifted into a DataFrame for the hash compare)
     "v_report_errors" -> { (s, d) =>
       val tmp = java.nio.file.Files.createTempDirectory("graft-vre")
       java.nio.file.Files.writeString(tmp.resolve("obs-schema.json"), validationSchema)

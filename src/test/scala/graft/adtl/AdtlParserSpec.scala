@@ -343,6 +343,42 @@ class AdtlParserSpec extends SparkSpec {
       org.apache.spark.storage.StorageLevel.NONE)
   }
 
+  test("parse-input rebalance: skipped for a sub-split input, kept above the per-task unit") {
+    // two date rules: well over the rebalance cost floor
+    val p = AdtlParser.fromJsonString("""{
+      |  "adtl": {"name": "s", "description": "d", "tables": {"t": {"kind": "oneToOne"}}},
+      |  "t": {
+      |    "id": {"field": "id"},
+      |    "d1": {"field": "d1", "source_date": "%Y-%m-%d", "date": "%d/%m/%Y"},
+      |    "d2": {"field": "d2", "source_date": "%Y-%m-%d", "date": "%d/%m/%Y"}
+      |  }
+      |}""".stripMargin)
+    val dir = java.nio.file.Files.createTempDirectory("adtlrebalance")
+    def csv(name: String, n: Int): String = {
+      val f = dir.resolve(name)
+      java.nio.file.Files.writeString(f, (0 until n)
+        .map(i => f"$i%08d,2022-01-${i % 28 + 1}%02d,2021-12-${i % 28 + 1}%02d")
+        .mkString("id,d1,d2\n", "\n", "\n"))
+      f.toString
+    }
+    def repartitions(file: String) =
+      p.parseCsv(spark, file)("t").queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionOperation => r
+      }
+    val small = csv("small.csv", 100)
+    val large = csv("large.csv", 10000) // 10000 × 31 B ≈ 303 KB
+    assert(java.nio.file.Files.size(java.nio.file.Paths.get(small)) <=
+      graft.ops.Pipeline.BytesPerTask)
+    assert(java.nio.file.Files.size(java.nio.file.Paths.get(large)) >
+      graft.ops.Pipeline.BytesPerTask)
+    assert(repartitions(small).isEmpty)
+    assert(!p.parseCsv(spark, small)("t").queryExecution.executedPlan.toString
+      .contains("Exchange"))
+    assert(repartitions(large).size == 1)
+    assert(p.parseCsv(spark, small)("t").count() == 100)
+    assert(p.parseCsv(spark, large)("t").count() == 10000)
+  }
+
   test("uuid5 generation is deterministic and seed-order sensitive") {
     val spec =
       """{

@@ -352,6 +352,38 @@ class StreamingParseSpec extends SparkSpec {
     assert(byId("S002").getAs[String]("sex_at_birth") == "female")
   }
 
+  test("streaming report readers return valid/total from the shared report aggregates") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+
+    // epoch.json: oneToOne + date-format schema; batch 2 has one bad date
+    val parser = AdtlParser.fromFile("src/test/resources/golden/parsers/epoch.json")
+    val mem = MemoryStream[(String, String, String, String)]
+    val tables = parser.parseStream(spark,
+      mem.toDF().toDF("Entry_ID", "Epoch", "SomeDate", "Text"))
+    val q = tables("table").writeStream
+      .format("memory").queryName("adtl_stream_report_aggs")
+      .outputMode("append").start()
+    mem.addData(("1", "11/01/1999", "24/01/1999", "a"))
+    q.processAllAvailable()
+    mem.addData(("2", "19/12/2022", "27/01/2023", "b"), ("3", "bad", "27/01/2023", "c"))
+    q.processAllAvailable()
+    q.stop()
+
+    assert(parser.streamingReport(q) == Map("table" -> (1L, 2L))) // latest batch
+    assert(parser.streamingReportTotals(q) == Map("table" -> (2L, 3L)))
+    // the observed row also carries the per-message counters the batch
+    // report reads; they account for every invalid row of the batch
+    val row = q.recentProgress.reverseIterator
+      .map(_.observedMetrics.get(s"${AdtlParser.ReportMetricPrefix}table"))
+      .find(_ != null).get
+    val counters = row.schema.fieldNames.filter(f => f != "total" && f != "valid")
+    assert(counters.nonEmpty)
+    assert(counters.map(row.getAs[Long]).sum ==
+      row.getAs[Long]("total") - row.getAs[Long]("valid"))
+  }
+
   test("parseStream honours withCanonicalNumbers like the batch parse") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._

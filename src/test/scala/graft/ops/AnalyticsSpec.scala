@@ -464,6 +464,22 @@ class AnalyticsSpec extends SparkSpec {
       ("s", "string", 3L, 2L, 2L, "x", "y")))
   }
 
+  test("profileTable: complex and binary columns count values whose string casts collide; maps get no min/max") {
+    // the two values of arr, st and mp CAST AS STRING to the same text
+    val df = spark.sql("""SELECT * FROM VALUES
+      |  (array('a, b'), named_struct('x', 'a, b', 'y', 'c'), map('a', 'b -> c'), X'FF'),
+      |  (array('a', 'b'), named_struct('x', 'a', 'y', 'b, c'), map('a -> b', 'c'), X'FE')
+      |  AS t(arr, st, mp, bin)""".stripMargin)
+    Seq("arr", "st", "mp").foreach { c =>
+      assert(df.select(col(c).cast("string")).distinct().count() == 1)
+    }
+    val profile = Profile.profileTable(df).collect().map(r => r.getString(0) -> r).toMap
+    assert(profile.map { case (c, r) => c -> r.getLong(4) } ==
+      Map("arr" -> 2L, "st" -> 2L, "mp" -> 2L, "bin" -> 2L))
+    // maps have no ordering: no min/max
+    assert(profile("mp").isNullAt(5) && profile("mp").isNullAt(6))
+  }
+
   test("profileTableApprox: HLL estimate within bound, exact base columns, all-null = 0") {
     import spark.implicits._
     // 5000 ids (distinct), a 7-value categorical, a half-null double with

@@ -2,8 +2,8 @@
 # Same-session INTERLEAVED A/B bench: this box's throughput drifts up to
 # ~1.6x within an hour (round-8 measured 49->70s on untouched queries), so
 # a single prev-then-cur pair cannot separate a code regression from
-# environmental drift. This runs the PREVIOUS round's commit and the
-# current working tree ALTERNATING (A,B,A,B), takes the per-query MIN of
+# environmental drift. This runs a previous commit (HEAD by default) and
+# the current working tree ALTERNATING (A,B,A,B), takes the per-query MIN of
 # each side's two runs (the noise-robust statistic on a contended box),
 # and reports the like-for-like ratio over the shared query set — drift
 # that rises or falls across the session lands on both sides
@@ -13,24 +13,19 @@
 # and the interleaved ratio. It is this tool's own attribution artifact;
 # graft.Bench never reads it and always reports its live run.
 #
-# Usage: tools/bench_ab.sh [prev-commit]
-#   prev-commit defaults to the most recent driver round-artifact commit
-#   (message "round N: ...").
+# Usage: tools/bench_ab.sh [prev-commit [query ...]]
+#   prev-commit defaults to HEAD, so with no argument the working tree is
+#   measured against its own last commit. Any further arguments are
+#   passed to graft.Bench as its query list (e.g. only the adtl gates);
+#   without them both sides run the full suite.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}"
 CPUS="${SPARK_GRAFT_CPUS:-32}"
-# default PREV: the newest 'round N:' DRIVER commit excluding HEAD. The
-# regex is anchored to the driver's exact subject shape ('round <digits>:')
-# — a looser '^round ' once matched a body LINE that happened to start
-# with the word "round" in an ordinary commit, silently A/B-ing the tree
-# against its own previous commit.
-PREV="${1:-$(git log --grep='^round [0-9]+:' -E --format=%H -n 20 | grep -v "^$(git rev-parse HEAD)$" | head -1)}"
-if [ -z "$PREV" ]; then
-  echo "no previous round commit found; pass one explicitly" >&2
-  exit 1
-fi
+PREV="$(git rev-parse --verify "${1:-HEAD}^{commit}")"
+shift $(( $# > 0 ? 1 : 0 ))
+BENCH="runMain graft.Bench${*:+ $*}"
 
 WT=/tmp/graft_prev_wt
 git worktree remove --force "$WT" 2>/dev/null || true
@@ -60,11 +55,11 @@ pick_line() {
 }
 run_prev() {
   (cd "$WT" && SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_CPUS="$CPUS" \
-    sbt -batch 'runMain graft.Bench' 2>&1 | pick_line)
+    sbt -batch "$BENCH" 2>&1 | pick_line)
 }
 run_cur() {
   SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_CPUS="$CPUS" \
-    sbt -batch 'runMain graft.Bench' 2>&1 | pick_line
+    sbt -batch "$BENCH" 2>&1 | pick_line
 }
 
 echo "== interleaved A/B vs $(git rev-parse --short "$PREV"): prev, cur, prev, cur"
