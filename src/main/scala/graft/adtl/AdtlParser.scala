@@ -446,8 +446,10 @@ final class AdtlParser private (
   /** Spec-keyed proxy for the compiled per-row expression cost: date
     * rules compile to multi-kernel parse chains (cost 10), apply
     * transforms to moderate expressions (3), plain field references to
-    * casts/maps (1); nested shapes (if-guards, oneToMany entry lists,
-    * combinedType wrappers) walk recursively. */
+    * casts/maps (1); nested shapes (if-guards, combinedType wrappers) walk
+    * recursively. A oneToMany table emits up to one row per entry
+    * (`for`-expanded) from every input row, so its entries' cost is
+    * weighted by the entry count. */
   private lazy val specParseCost: Int = {
     def walk(t: Any): Int = t match {
       case m: Raw @unchecked =>
@@ -460,7 +462,11 @@ final class AdtlParser private (
       case l: List[_] => l.map(walk).sum
       case _ => 0
     }
-    spec.tableRules.values.map(walk).sum
+    spec.tableRules.map {
+      case (tname, entries: List[_]) if spec.tables(tname).kind == "oneToMany" =>
+        walk(entries) * entries.size
+      case (_, rules) => walk(rules)
+    }.sum
   }
 
   /** Per-row parsed frame for a groupBy table: ROW_ID + compiled group key
@@ -670,17 +676,23 @@ final class AdtlParser private (
     }
 
   /** oneToMany: per-entry struct gated by its `if`, exploded — narrow plan,
-    * no shuffle (parser.py:516-535). */
+    * no shuffle (parser.py:516-535). The table's `common` attributes hold
+    * the same rule in every entry (Normalize.mergeCommon), so each is
+    * compiled once and projected beside the exploded struct. */
   private def execOneToMany(df: DataFrame, compiler: RuleCompiler, tname: String,
       meta: TableMeta): DataFrame = {
     val entries = oneToManyRules(tname)
     val fields = spec.fieldNames(tname)
+    val common: Map[String, Any] =
+      fields.filter(a => a != "if" && meta.common.contains(a)).map(a => a -> meta.common(a)).toMap
+    val entryFields = fields.filterNot(common.contains)
 
-    // resolve one output type per attribute so entry structs align
-    val perEntryCVs: List[Map[String, RuleCompiler.CV]] = entries.map { e =>
-      (e.keySet - "if").map { attr =>
-        attr -> compiler.compileUnhashed(e(attr), attr)
-      }.toMap
+    // resolve one output type per attribute so entry structs align. Rules
+    // compile in entry order, so the first failing rule names the error;
+    // a common rule compiles with the first entry only.
+    val ruleCVs: List[(String, Any, RuleCompiler.CV)] = entries.zipWithIndex.flatMap {
+      case (e, i) => (e.keySet - "if").toList.filter(a => i == 0 || !meta.common.contains(a))
+        .map(a => (a, e(a), compiler.compileUnhashed(e(a), a)))
     }
     def targetType(attr: String): String = {
       import RuleCompiler._
@@ -688,9 +700,8 @@ final class AdtlParser private (
       // mirror compile()'s output type: sensitive → string; schema-coerced
       // string inputs become string-typed canonical-or-raw unions (the
       // reference returns the raw value on cast failure)
-      val effVts: List[VT] = entries.zip(perEntryCVs).collect {
-        case (e, cvs) if e.contains(attr) && !cvs(attr).statNull =>
-          (e(attr), cvs(attr).vt)
+      val effVts: List[VT] = ruleCVs.collect {
+        case (a, rule, cv) if a == attr && !cv.statNull => (rule, cv.vt)
       }.map { case (rule, vt0) =>
         val sensitive = rule match {
           case m: Raw @unchecked => m.get("sensitive").contains(true)
@@ -719,21 +730,21 @@ final class AdtlParser private (
       else "string"
     }
     val types = fields.map(a => a -> targetType(a)).toMap
+    def compiled(attr: String, rule: Any): Column =
+      compiler.compile(rule, attr, coerceTypeFor(tname, attr)).cast(types(attr)).as(attr)
 
     val structs: List[Column] = entries.map { e =>
       val cond = compiler.compileIf(e("if").asInstanceOf[Raw])
-      val fcols = fields.map { attr =>
-        val c =
-          if (e.contains(attr))
-            compiler.compile(e(attr), attr, coerceTypeFor(tname, attr)).cast(types(attr))
-          else lit(null).cast(types(attr))
-        c.as(attr)
+      val fcols = entryFields.map { attr =>
+        if (e.contains(attr)) compiled(attr, e(attr))
+        else lit(null).cast(types(attr)).as(attr)
       }
       when(coalesce(cond, lit(false)), struct(fcols: _*))
     }
 
-    df.select(explode(filter(array(structs: _*), x => x.isNotNull)).as("__e"))
-      .select(fields.map(f => col(s"__e.$f").as(f)): _*)
+    df.select(explode(filter(array(structs: _*), x => x.isNotNull)).as("__e") +:
+        common.toList.map { case (a, r) => compiled(a, r) }: _*)
+      .select(fields.map(f => if (common.contains(f)) col(f) else col(s"__e.$f").as(f)): _*)
   }
 
   /** Append adtl_valid / adtl_error annotation columns, and keep the

@@ -1,7 +1,11 @@
 package graft.adtl
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, LongType, StringType}
+import scala.collection.immutable.ListMap
+import scala.reflect.runtime.universe.{TypeTag, typeTag}
 import Spec.Raw
 import Transformations.{PCol, PLit, PList, TParam, TCtx}
 
@@ -152,6 +156,8 @@ final class RuleCompiler(
     // is a bare column reference — free — and the With plumbing is pure
     // overhead, measured as a 2.6× A/B regression on c4_field_pattern
     // (fieldPattern expands to one guarded sub-rule per matching column).
+    // A plain values-map lookup skips the guard (see compileValuesMap).
+    val unguarded = cv
     if (cv.vt == VStr) cv =
       if (rule.contains("apply"))
         CV(graft.functions.Once.once(cv.col)(c =>
@@ -159,7 +165,7 @@ final class RuleCompiler(
       else CV(when(cv.col === "", lit(null)).otherwise(cv.col), VStr)
 
     // values map (+ enum_list)
-    if (rule.contains("values")) cv = compileValuesMap(rule, cv)
+    if (rule.contains("values")) cv = compileValuesMap(rule, cv, unguarded)
 
     // unit conversion
     if (rule.contains("source_unit") && rule.contains("unit"))
@@ -188,23 +194,51 @@ final class RuleCompiler(
     case other => PLit(other)
   }
 
-  /** values-map recode (convert_values, get_value.py:110-131). */
-  private def compileValuesMap(rule: Raw, in: CV): CV = {
+  /** values-map recode (convert_values, get_value.py:110-131): one lookup
+    * of the value in a map literal (`element_at`), so the value is
+    * embedded once however many keys the map has. Under pass-through,
+    * `map_contains_key` on the same literal picks mapped vs raw, and a
+    * second literal map carries the mapped entries' typed truthiness.
+    *
+    * Keys take the value's type, as a `key = 'literal'` comparison coerces
+    * them (a `map<string,…>` lookup would instead cast a non-string value
+    * to string: `true` → "true" misses a "True" key); a key that does not
+    * cast never matches and is dropped. A map literal holds each key once,
+    * so keys that collide after lowercasing or casting keep the first
+    * entry.
+    *
+    * `in` is the ""-guarded value and `unguarded` the value before the
+    * guard. A plain lookup (no pass-through, not enum_list) in a map
+    * without a "" key returns null for "" exactly as for null, so it
+    * probes the unguarded value and the guard stays out of the plan. */
+  private def compileValuesMap(rule: Raw, in: CV, unguarded: CV): CV = {
     val values = rule("values").asInstanceOf[Raw]
     val caseInsensitive = rule.get("caseInsensitive").contains(true)
     val passthrough = rule.get("ignoreMissingKey").contains(true) || returnUnmatched
     val isEnumList = rule.get("type").contains("enum_list")
 
-    val entries: Seq[(String, Any)] =
-      if (caseInsensitive) values.toSeq.map { case (k, v) => k.toLowerCase -> v }
-      else values.toSeq
+    // the type the lookup key has: lowercasing and enum_list splitting
+    // yield strings, otherwise it is the value's own type
+    val keyType: DataType =
+      if (caseInsensitive || isEnumList) StringType
+      else in.vt match {
+        case VBool => BooleanType
+        case VLong => LongType
+        case VDbl => DoubleType
+        case _ => StringType
+      }
+    val entries: Seq[(Any, Any)] = values.toSeq
+      .map { case (k, v) => typedKey(if (caseInsensitive) k.toLowerCase else k, keyType) -> v }
+      .filter(_._1 != null)
+      .distinctBy(_._1)
 
-    // unify mapped-value type (null mappings are type-neutral — a map of
-    // booleans + None must stay boolean, or any/all would see a rendered
-    // "False" string as truthy); under pass-through the raw (string) key
-    // can flow out beside mapped values, so the column degrades to string
-    // with Python-rendered mapped values (True/False, ints without .0)
-    val nonNull = entries.filter(_._2 != null)
+    // unify mapped-value type over every written entry (null mappings are
+    // type-neutral — a map of booleans + None must stay boolean, or any/all
+    // would see a rendered "False" string as truthy); under pass-through
+    // the raw (string) key can flow out beside mapped values, so the
+    // column degrades to string with Python-rendered mapped values
+    // (True/False, ints without .0)
+    val nonNull = values.toSeq.filter(_._2 != null)
     val allBool = nonNull.nonEmpty && nonNull.forall(_._2.isInstanceOf[Boolean])
     val allNum = nonNull.nonEmpty && nonNull.forall(v =>
       v._2.isInstanceOf[Long] || v._2.isInstanceOf[Double] || v._2.isInstanceOf[Int])
@@ -212,33 +246,33 @@ final class RuleCompiler(
       if (passthrough) VStr
       else if (allBool) VBool else if (allNum) VDbl else VStr
 
+    def mappedValue(v: Any): Any = v match {
+      case null => null
+      case b: Boolean => if (outVt == VBool) b else if (b) "True" else "False"
+      case s: String => if (s.isEmpty) null else s // mapped "" → null
+      case n: Long => if (outVt == VStr) n.toString else n.toDouble
+      case n: Int => mappedValue(n.toLong)
+      case n: Double =>
+        if (outVt == VStr)
+          if (n == math.floor(n) && !n.isInfinite) s"${n.toLong}.0" else n.toString
+        else n
+      case other => other.toString
+    }
+    val valueType = outVt match {
+      case VBool => BooleanType
+      case VDbl => DoubleType
+      case _ => StringType
+    }
+    val recode = mapLit(entries.map { case (k, v) => k -> mappedValue(v) }, keyType, valueType)
+    val plainLookup = !passthrough && !isEnumList && !entries.exists(_._1 == "")
+
     def mapped(c: Column): Column = {
       val key = if (caseInsensitive) trim(lower(c)) else c
-      val chain = entries.foldLeft(None: Option[Column]) { case (acc, (k, v)) =>
-        val lv: Column = v match {
-          case null => lit(null)
-          case b: Boolean =>
-            if (outVt == VBool) lit(b) else lit(if (b) "True" else "False")
-          case s: String => if (s.isEmpty) lit(null) else lit(s) // mapped "" → null
-          case n: Long => if (outVt == VStr) lit(n.toString)
-            else if (outVt == VDbl) lit(n.toDouble) else lit(n)
-          case n: Double =>
-            if (outVt == VStr)
-              lit(if (n == math.floor(n) && !n.isInfinite) s"${n.toLong}.0" else n.toString)
-            else lit(n)
-          case other => lit(other.toString)
-        }
-        Some(acc match {
-          case None => when(key === k, lv)
-          case Some(w) => w.when(key === k, lv)
-        })
-      }.getOrElse(lit(null))
-      if (passthrough) {
-        // unmapped key passes the (possibly lowercased) value through
-        val fallthrough = when(!entries.map(e => key === e._1)
-          .foldLeft(lit(false))(_ || _), if (caseInsensitive) key else c)
-        coalesce(chain, fallthrough)
-      } else chain
+      // unmapped key passes the (possibly lowercased) value through
+      if (passthrough)
+        when(map_contains_key(recode, key), element_at(recode, key))
+          .otherwise(if (caseInsensitive) key else c)
+      else element_at(recode, key)
     }
 
     if (isEnumList) {
@@ -248,31 +282,21 @@ final class RuleCompiler(
       CV(arr, VArr)
     } else if (passthrough) {
       // typed truthiness survives the string degradation: mapped entries
-      // contribute their Python truthiness, pass-through keys string-truthy
-      def truthyLit(v: Any): Any = v match {
-        case null => null
+      // contribute their Python truthiness (mapped ""/None → falsy),
+      // pass-through keys string-truthy
+      def truthyLit(v: Any): Boolean = v match {
+        case null => false
         case b: Boolean => b
-        case s: String => if (s.isEmpty) null else s.matches("[-+]?\\d+(\\.\\d*)?") match {
-          case true => s.toDouble != 0.0
-          case false => true
-        }
+        case s: String => s.nonEmpty && (!s.matches("[-+]?\\d+(\\.\\d*)?") || s.toDouble != 0.0)
         case n: Long => n != 0
         case d: Double => d != 0.0
-        case other => true
+        case _ => true
       }
+      val truthMap = mapLit(entries.map { case (k, v) => k -> truthyLit(v) },
+        keyType, BooleanType)
       val key = if (caseInsensitive) trim(lower(in.col)) else in.col
-      val tChain = entries.foldLeft(None: Option[Column]) { case (acc, (k, v)) =>
-        val tv: Column = truthyLit(v) match {
-          case null => lit(false) // mapped "" → None → falsy
-          case b: Boolean => lit(b)
-        }
-        Some(acc match {
-          case None => when(key === k, tv)
-          case Some(w) => w.when(key === k, tv)
-        })
-      }.getOrElse(lit(null).cast("boolean"))
-      CV(mapped(in.col), outVt, Some(coalesce(tChain, truthyStr(key))))
-    } else CV(mapped(in.col), outVt)
+      CV(mapped(in.col), outVt, Some(coalesce(element_at(truthMap, key), truthyStr(key))))
+    } else CV(mapped(if (plainLookup) unguarded.col else in.col), outVt)
   }
 
   /** source_unit/unit → factor chain (get_value.py:200-218). Under
@@ -348,7 +372,10 @@ final class RuleCompiler(
   // ---- combinedType (horizontal, within-row) ----------------------------
 
   /** get_combined_type (get_value.py:315-385): combine multiple source
-    * columns into one attribute value. */
+    * columns into one attribute value. Sub-fields (a `fieldPattern`
+    * expands to one per matching column) are compiled once each; `any`/
+    * `all` fold them flat, as one `array_max`/`array_min` over one
+    * element per sub-field. */
   private def compileCombined(rule: Raw, attr: String): CV = {
     val combinedType = rule("combinedType").toString
     val subRules: List[Any] = rule.getOrElse("fields", Nil).asInstanceOf[List[Any]]
@@ -363,18 +390,22 @@ final class RuleCompiler(
 
     combinedType match {
       case "any" | "all" =>
-        // values are auto-numeric-cast then Python-truthiness'd; null/"" dropped
-        val present = subs.map(cv => presentCol(cv))
-        val truthies = subs.map(truthy)
-        val anyPresent = present.reduceOption(_ || _).getOrElse(lit(false))
+        // values are auto-numeric-cast then Python-truthiness'd; null/""
+        // dropped. One flat fold: each sub-field is one array element —
+        // null when absent (array_max/array_min skip nulls, and return
+        // null when every element is), else its truthiness, where a null
+        // truthiness is the fold's identity. A boolean sub with no
+        // truthiness override is its own element.
+        val isAny = combinedType == "any"
+        val elems = subs.map { cv =>
+          if (cv.vt == VBool && cv.truthyOverride.isEmpty) cv.col
+          else when(presentCol(cv), coalesce(truthy(cv), lit(!isAny)))
+        }
         val res =
-          if (combinedType == "any")
-            truthies.zip(present).map { case (t, p) => p && coalesce(t, lit(false)) }
-              .reduceOption(_ || _).getOrElse(lit(false))
-          else
-            truthies.zip(present).map { case (t, p) => !p || coalesce(t, lit(true)) }
-              .reduceOption(_ && _).getOrElse(lit(true))
-        CV(when(anyPresent, res), VBool)
+          if (elems.isEmpty) lit(null).cast("boolean")
+          else if (isAny) array_max(array(elems: _*))
+          else array_min(array(elems: _*))
+        CV(res, VBool)
       case "min" | "max" =>
         val vals = subs.map(cv => when(presentCol(cv), renderString(cv)))
         if (vals.length == 1) CV(canonicalNumber(vals.head), VStr)
@@ -629,6 +660,26 @@ object RuleCompiler {
           concat(acc.getField("vs"), array(x)).as("vs"))),
       acc => acc.getField("vs"))
   }
+
+  /** A map literal: one Catalyst `Literal` however many entries it has
+    * (keys distinct, in entry order; values nullable). */
+  private def mapLit(entries: Seq[(Any, Any)], keyType: DataType, valueType: DataType): Column = {
+    def tag(t: DataType): TypeTag[_] = t match {
+      case BooleanType => typeTag[java.lang.Boolean]
+      case LongType => typeTag[java.lang.Long]
+      case DoubleType => typeTag[java.lang.Double]
+      case _ => typeTag[String]
+    }
+    def typed[K, V](implicit k: TypeTag[K], v: TypeTag[V]): Column =
+      typedLit(ListMap(entries.map { case (a, b) => a.asInstanceOf[K] -> b.asInstanceOf[V] }: _*))
+    typed(tag(keyType), tag(valueType))
+  }
+
+  /** A values-map key as the value's type: the session's string cast, as
+    * `value = 'key'` applies it; null when the key does not cast. */
+  private def typedKey(k: String, keyType: DataType): Any =
+    if (keyType == StringType) k
+    else scala.util.Try(Cast(Literal(k), keyType).eval()).getOrElse(null)
 
   sealed trait VT
   case object VStr extends VT

@@ -379,6 +379,91 @@ class AdtlParserSpec extends SparkSpec {
     assert(p.parseCsv(spark, large)("t").count() == 10000)
   }
 
+  test("parse-input rebalance: a cheap for-expanded spec is weighted by its fan-out") {
+    // plain field copies only, but every input row fans out to 3 entries
+    val p = AdtlParser.fromJsonString("""{
+      |  "adtl": {"name": "s", "description": "d", "tables": {
+      |    "obs": {"kind": "oneToMany", "discriminator": "name"}}},
+      |  "obs": [
+      |    {"for": {"i": {"range": [1, 3]}}, "if": {"flag_{i}": "1"},
+      |     "name": "obs_{i}", "okey": {"field": "okey"}, "value": {"field": "flag_{i}"}}
+      |  ]
+      |}""".stripMargin)
+    val dir = java.nio.file.Files.createTempDirectory("adtlfanout")
+    def csv(name: String, n: Int): String = {
+      val f = dir.resolve(name)
+      java.nio.file.Files.writeString(f, (0 until n)
+        .map(i => f"$i%08d,${i % 2},${i % 3},${i % 5}")
+        .mkString("okey,flag_1,flag_2,flag_3\n", "\n", "\n"))
+      f.toString
+    }
+    def repartitions(file: String) =
+      p.parseCsv(spark, file)("obs").queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionOperation => r
+      }
+    val small = csv("small.csv", 100)
+    val large = csv("large.csv", 20000) // 20000 × 15 B ≈ 293 KB
+    assert(java.nio.file.Files.size(java.nio.file.Paths.get(large)) >
+      graft.ops.Pipeline.BytesPerTask)
+    assert(repartitions(small).isEmpty)
+    assert(repartitions(large).size == 1)
+    // rows with flag_i = "1": i % 2 == 1, i % 3 == 1, i % 5 == 1
+    assert(p.parseCsv(spark, small)("obs").count() == 50 + 33 + 20)
+    assert(p.parseCsv(spark, large)("obs").count() == 10000 + 6667 + 4000)
+  }
+
+  test("plan size: any over mapped columns folds flat; oneToMany common compiles once") {
+    import org.apache.spark.sql.catalyst.expressions.{DateFormatClass, Expression}
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    val n = 30
+    val syms = (1 to n).map(k => s"sym_$k")
+    val df = strDf("subjid" +: "admit" +: syms, Seq(
+      "S1" +: "2020-01-02" +: syms.map(_ => "0"),
+      "S2" +: "2020-02-03" +: syms.zipWithIndex.map { case (_, i) => if (i == 3) "1" else "" },
+      "S3" +: "" +: syms.map(_ => "")))
+    val p = AdtlParser.fromJsonString(s"""{
+      |  "adtl": {"name": "s", "description": "d",
+      |    "defs": {"yesno": {"values": {"1": true, "0": false}}},
+      |    "tables": {
+      |      "subject": {"kind": "oneToOne"},
+      |      "observation": {"kind": "oneToMany", "discriminator": "name",
+      |        "common": {"admission": {"field": "admit", "source_date": "%Y-%m-%d",
+      |          "date": "%d/%m/%Y"}}}}},
+      |  "subject": {
+      |    "subject_id": {"field": "subjid"},
+      |    "any_symptom": {"combinedType": "any",
+      |      "fields": [{"fieldPattern": "sym_", "ref": "yesno"}]}
+      |  },
+      |  "observation": [
+      |    {"for": {"k": {"range": [1, $n]}}, "if": {"sym_{k}": "1"},
+      |     "name": "sym_{k}", "is_present": {"field": "sym_{k}", "ref": "yesno"}}
+      |  ]
+      |}""".stripMargin)
+    val tables = p.parseDataFrame(spark, df)
+    def nodes(e: Expression): Int = e.collect { case x => x }.size
+
+    val subject = tables("subject")
+    val anyNodes = subject.queryExecution.optimizedPlan.collect {
+      case pr: Project => pr.projectList.filter(_.name == "any_symptom").map(nodes).sum
+    }.sum
+    // one map lookup on the ""-guarded column plus one array slot per
+    // matched column (the former OR chain embedded each column twice,
+    // each behind a per-key CASE: 88 nodes per column)
+    assert(anyNodes > 0 && anyNodes <= 8 * n, s"any_symptom: $anyNodes expression nodes")
+    assert(subject.orderBy("subject_id").collect().map(_.getAs[Any]("any_symptom")).toSeq ==
+      Seq(false, true, null))
+
+    val obs = tables("observation")
+    val dateFormats = obs.queryExecution.optimizedPlan.collect {
+      case node => node.expressions.map(_.collect { case d: DateFormatClass => d }.size).sum
+    }.sum
+    assert(dateFormats == 1, s"common attribute compiled $dateFormats times")
+    assert(obs.collect().map(r =>
+      (r.getAs[String]("admission"), r.getAs[String]("name"), r.getAs[Any]("is_present"))).toSeq ==
+      Seq(("03/02/2020", "sym_4", true)))
+    assert(obs.columns.toSeq == Seq("admission", "is_present", "name"))
+  }
+
   test("uuid5 generation is deterministic and seed-order sensitive") {
     val spec =
       """{

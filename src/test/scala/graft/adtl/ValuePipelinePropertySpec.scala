@@ -55,8 +55,10 @@ class ValuePipelinePropertySpec extends SparkSpec {
       val raw0 = row(f)
       if (raw0.isEmpty) null
       else {
+        // keys that collide after lowercasing: the first entry wins
         val (m, key) =
-          if (ci) (m0.map { case (k, v) => k.toLowerCase -> v }, raw0.toLowerCase.trim)
+          if (ci) (m0.toSeq.reverse.map { case (k, v) => k.toLowerCase -> v }.toMap,
+            raw0.toLowerCase.trim)
           else (m0, raw0)
         val out = m.get(key) match {
           case Some(v) => v
@@ -114,7 +116,11 @@ class ValuePipelinePropertySpec extends SparkSpec {
     Map("1" -> true, "0" -> false),
     Map("1" -> "yes", "2" -> "no"),
     Map("yes" -> "Y", "no" -> "N"),
-    Map("1" -> "male", "2" -> "female", "abc" -> ""))
+    Map("1" -> "male", "2" -> "female", "abc" -> ""),
+    Map("Yes" -> "first", "YES" -> "second", "no" -> "N"), // collide when lowercased
+    Map("1" -> null, "0" -> false, "abc" -> true), // a null-mapped value
+    Map("1" -> 1.5, "2" -> -2.25, "abc" -> 0.5), // numeric-valued
+    Map("" -> "blank", "1" -> "one")) // a "" key: "" still maps to null
 
   private def genLeaf(rng: Random): VRule = {
     val f = fields(rng.nextInt(fields.length))
@@ -162,6 +168,36 @@ class ValuePipelinePropertySpec extends SparkSpec {
     case (CombinedR("list" | "set", _, _), l: List[_]) => l.map(x => if (x == null) null else pyRender(x))
     case (_, b: Boolean) => pyRender(b)
     case (_, other) => pyRender(other)
+  }
+
+  private def compilerFor(columns: Seq[String]): RuleCompiler =
+    new RuleCompiler(columns, Spec.Header(Map("name" -> "p", "description" -> "p",
+      "tables" -> Map("t" -> Map("kind" -> "oneToOne")))), Set.empty,
+      Transformations.newRegistry(), Uuid5.NamespaceDns)
+
+  test("values after a non-string apply match keys cast to the value's type") {
+    // the keys are strings in the spec; a boolean or numeric value meets
+    // them as `value = CAST(key AS <value type>)`, so "True" matches true
+    // and "1" matches 1.0 (the value is never rendered to a string)
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(Row("1", "x"), Row("2.5", ""), Row("7", "y"), Row("", "")), 1),
+      StructType(Seq(StructField("n", StringType), StructField("s", StringType))))
+    val c = compilerFor(df.columns.toSeq)
+    val rules: Seq[Spec.Raw] = Seq(
+      Map("field" -> "s", "apply" -> Map("function" -> "isNotNull"),
+        "values" -> Map("True" -> "present", "False" -> "absent")),
+      Map("field" -> "n", "apply" -> Map("function" -> "getFloat"),
+        "values" -> Map("1" -> "one", "2.5" -> "two and a half")),
+      Map("field" -> "s", "apply" -> Map("function" -> "isNotNull"),
+        "values" -> Map("1" -> true, "0" -> false)))
+    val got = df.select(rules.zipWithIndex.map { case (r, i) =>
+      c.compile(r, s"r$i", None).as(s"r$i") }: _*).collect()
+      .map(_.toSeq.map(v => if (v == null) null else v.toString))
+    assert(got.toSeq == Seq(
+      Seq("present", "one", "true"),
+      Seq("absent", "two and a half", "false"),
+      Seq("present", null, "true"),
+      Seq("absent", null, "false")))
   }
 
   test("compiled value rules match the reference model on random rules and rows") {
