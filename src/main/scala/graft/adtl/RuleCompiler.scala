@@ -266,12 +266,19 @@ final class RuleCompiler(
     val recode = mapLit(entries.map { case (k, v) => k -> mappedValue(v) }, keyType, valueType)
     val plainLookup = !passthrough && !isEnumList && !entries.exists(_._1 == "")
 
+    // an unmapped key passes through as a string (the column is VStr under
+    // pass-through): lowercased, or as Python renders a non-string value —
+    // a bare double or boolean beside the string map values would make
+    // ANSI coercion cast every mapped string to its type
+    def unmapped(c: Column): Column =
+      if (caseInsensitive) trim(lower(c))
+      else if (keyType == StringType) c
+      else renderPyStr(CV(c, in.vt))
+
     def mapped(c: Column): Column = {
       val key = if (caseInsensitive) trim(lower(c)) else c
-      // unmapped key passes the (possibly lowercased) value through
       if (passthrough)
-        when(map_contains_key(recode, key), element_at(recode, key))
-          .otherwise(if (caseInsensitive) key else c)
+        when(map_contains_key(recode, key), element_at(recode, key)).otherwise(unmapped(c))
       else element_at(recode, key)
     }
 
@@ -295,7 +302,8 @@ final class RuleCompiler(
       val truthMap = mapLit(entries.map { case (k, v) => k -> truthyLit(v) },
         keyType, BooleanType)
       val key = if (caseInsensitive) trim(lower(in.col)) else in.col
-      CV(mapped(in.col), outVt, Some(coalesce(element_at(truthMap, key), truthyStr(key))))
+      CV(mapped(in.col), outVt,
+        Some(coalesce(element_at(truthMap, key), truthyStr(unmapped(in.col)))))
     } else CV(mapped(if (plainLookup) unguarded.col else in.col), outVt)
   }
 

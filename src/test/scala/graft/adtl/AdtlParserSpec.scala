@@ -310,21 +310,53 @@ class AdtlParserSpec extends SparkSpec {
     assert(out.getAs[String]("c") == "x")
   }
 
-  test("input cache: a multi-table parse plans its scrubbed input cached") {
+  test("input cache: two reading tables, above the per-task unit only") {
     val spec = """{
       |  "adtl": {"name": "s", "description": "d", "tables": {
       |    "a": {"kind": "oneToOne"},
-      |    "b": {"kind": "oneToMany", "discriminator": "name"}}},
+      |    "b": {"kind": "oneToMany", "discriminator": "name"},
+      |    "m": {"kind": "constant"}}},
       |  "a": {"x": {"field": "x"}},
-      |  "b": [{"if": {"y": {"!=": ""}}, "name": "y", "value": {"field": "y"}}]
+      |  "b": [{"if": {"y": {"!=": ""}}, "name": "y", "value": {"field": "y"}}],
+      |  "m": {"v": "1"}
       |}""".stripMargin
-    val df = strDf(Seq("x", "y"), Seq(Seq("1", "a"), Seq("2", ""), Seq("3", "b")))
-    val t = AdtlParser.fromJsonString(spec).parseDataFrame(spark, df)
-    assert(t("a").queryExecution.optimizedPlan.collect {
+    val dir = java.nio.file.Files.createTempDirectory("adtlcache")
+    def csv(name: String, n: Int): String = {
+      val f = dir.resolve(name)
+      java.nio.file.Files.writeString(f, (0 until n)
+        .map(i => f"$i%08d,${if (i % 3 == 1) "" else "y" * 20}")
+        .mkString("x,y\n", "\n", "\n"))
+      f.toString
+    }
+    def cached(t: DataFrame): Boolean = t.queryExecution.optimizedPlan.collect {
       case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
-    }.nonEmpty)
-    assert(t("a").collect().map(_.getString(0)).sorted.toList == List("1", "2", "3"))
-    assert(t("b").collect().map(_.getAs[String]("value")).sorted.toList == List("a", "b"))
+    }.nonEmpty
+    val small = csv("small.csv", 3)
+    val large = csv("large.csv", 15000) // 15000 × 23.3 B ≈ 342 KB
+    assert(java.nio.file.Files.size(java.nio.file.Paths.get(large)) >
+      graft.ops.Pipeline.BytesPerTask)
+    // a constant table reads no input, so one reading table is not cached
+    // (checked first: a cached plan of the same input would be substituted)
+    val one = AdtlParser.fromJsonString("""{
+      |  "adtl": {"name": "s", "description": "d", "tables": {
+      |    "a": {"kind": "oneToOne"}, "m": {"kind": "constant"}}},
+      |  "a": {"x": {"field": "x"}},
+      |  "m": {"v": "1"}
+      |}""".stripMargin)
+      .parseCsv(spark, large)
+    assert(!cached(one("a")) && one("a").count() == 15000)
+    val p = AdtlParser.fromJsonString(spec)
+    // below one per-task unit: each table scans the source
+    val ts = p.parseCsv(spark, small)
+    assert(!cached(ts("a")) && !cached(ts("b")))
+    assert(ts("a").collect().map(_.getString(0)).sorted.toList ==
+      List("00000000", "00000001", "00000002"))
+    assert(ts("b").count() == 2)
+    // above it: the two reading tables share one cached input
+    val tl = p.parseCsv(spark, large)
+    assert(cached(tl("a")) && cached(tl("b")))
+    assert(tl("a").count() == 15000 && tl("b").count() == 10000)
+    p.lastParseInput.foreach(_._1.unpersist(true))
   }
 
   test("re-parsing on one parser releases the previous parse's cached input") {

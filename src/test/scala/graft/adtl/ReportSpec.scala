@@ -1,7 +1,6 @@
 package graft.adtl
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -91,34 +90,6 @@ class ReportSpec extends SparkSpec {
       val errors = counts.filter(r => !r.isNullAt(1)).map(r => r.getString(1) -> r.getLong(2)).toMap
       t -> (valid, counts.map(_.getLong(2)).sum, errors)
     }
-
-  /** Spark jobs started by `body`. Listener events arrive asynchronously:
-    * a marker job run after `body` is delivered after every job `body`
-    * started, so the count is final once the marker is seen. */
-  private def jobsIn[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"report-${java.util.UUID.randomUUID()}"
-    val marker = s"$group-marker"
-    val started = new java.util.concurrent.atomic.AtomicInteger()
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
-          case `group` => started.incrementAndGet()
-          case `marker` => markerSeen.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "report under test")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "listener drain marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (out, started.get())
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def outDir(): String =
     java.nio.file.Files.createTempDirectory("adtlreport-out").toString

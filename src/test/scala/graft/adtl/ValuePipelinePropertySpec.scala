@@ -178,7 +178,9 @@ class ValuePipelinePropertySpec extends SparkSpec {
   test("values after a non-string apply match keys cast to the value's type") {
     // the keys are strings in the spec; a boolean or numeric value meets
     // them as `value = CAST(key AS <value type>)`, so "True" matches true
-    // and "1" matches 1.0 (the value is never rendered to a string)
+    // and "1" matches 1.0 (the value is not rendered to a string for the
+    // lookup); under ignoreMissingKey an unmapped value passes through as
+    // Python renders it
     val df = spark.createDataFrame(spark.sparkContext.parallelize(
       Seq(Row("1", "x"), Row("2.5", ""), Row("7", "y"), Row("", "")), 1),
       StructType(Seq(StructField("n", StringType), StructField("s", StringType))))
@@ -189,15 +191,19 @@ class ValuePipelinePropertySpec extends SparkSpec {
       Map("field" -> "n", "apply" -> Map("function" -> "getFloat"),
         "values" -> Map("1" -> "one", "2.5" -> "two and a half")),
       Map("field" -> "s", "apply" -> Map("function" -> "isNotNull"),
-        "values" -> Map("1" -> true, "0" -> false)))
+        "values" -> Map("1" -> true, "0" -> false)),
+      Map("field" -> "n", "apply" -> Map("function" -> "getFloat"),
+        "values" -> Map("1" -> "one"), "ignoreMissingKey" -> true),
+      Map("field" -> "s", "apply" -> Map("function" -> "isNotNull"),
+        "values" -> Map("True" -> "present"), "ignoreMissingKey" -> true))
     val got = df.select(rules.zipWithIndex.map { case (r, i) =>
       c.compile(r, s"r$i", None).as(s"r$i") }: _*).collect()
       .map(_.toSeq.map(v => if (v == null) null else v.toString))
     assert(got.toSeq == Seq(
-      Seq("present", "one", "true"),
-      Seq("absent", "two and a half", "false"),
-      Seq("present", null, "true"),
-      Seq("absent", null, "false")))
+      Seq("present", "one", "true", "one", "present"),
+      Seq("absent", "two and a half", "false", "2.5", "False"),
+      Seq("present", null, "true", "7.0", "present"),
+      Seq("absent", null, "false", null, "False")))
   }
 
   test("compiled value rules match the reference model on random rules and rows") {
