@@ -1,6 +1,7 @@
 package graft.adtl
 
 import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, Project}
 import org.apache.spark.sql.functions._
 import Spec._
 
@@ -8,7 +9,7 @@ import Spec._
   * the driver, then execute each output table as one declarative Spark plan
   * over the source DataFrame:
   *
-  *  - constant  → literal single-row DataFrame
+  *  - constant  → one-row local relation (no Spark job to collect or write)
   *  - oneToOne  → select of compiled Column rules
   *  - oneToMany → array-of-structs (one per match entry, nulled when its
   *                `if` fails) + explode — a narrow, shuffle-free fan-out
@@ -17,8 +18,10 @@ import Spec._
   *
   * Scale design: the stringified source is computed once; each table is a
   * projection/explode (narrow) or a single shuffle (groupBy). There is no
-  * row-at-a-time interpretation and no driver-side loop — all semantics are
-  * Column expression trees that Catalyst optimizes and codegens.
+  * row-at-a-time interpretation — all semantics are Column expression trees
+  * that Catalyst optimizes and codegens. The driver loops over rows only
+  * where the optimizer already folded a table to rows held on the driver
+  * (a local relation): writeCsv writes those itself.
   *
   * Reference lifecycle mirrored (studied, not copied):
   * /root/reference/src/adtl/parser.py:257-355 (init), 516-549 (row parse),
@@ -430,19 +433,27 @@ final class AdtlParser private (
         .get(attr).collect { case p: Raw @unchecked => p.get("type") }.flatten
     }
 
+  /** The table's one row as a local relation: collecting or writing it
+    * runs no Spark job. Each column has the name, type and nullability a
+    * literal of its value has (an empty list, like `array()`, has null
+    * elements). */
   private def execConstant(spark: SparkSession, tname: String): DataFrame = {
+    import org.apache.spark.sql.types._
     val rules = spec.tableRules(tname).asInstanceOf[Raw]
-    val cols = spec.fieldNames(tname).map { attr =>
-      (rules(attr) match {
-        case s: String => lit(s)
-        case b: Boolean => lit(b)
-        case l: Long => lit(l)
-        case d: Double => lit(d)
-        case l: List[_] => array(l.map(x => lit(x.toString)): _*)
-        case other => lit(other.toString)
-      }).as(attr)
+    val cells = spec.fieldNames(tname).map { attr =>
+      val (value, dataType) = rules(attr) match {
+        case s: String => (s, StringType)
+        case b: Boolean => (b, BooleanType)
+        case l: Long => (l, LongType)
+        case d: Double => (d, DoubleType)
+        case l: List[_] =>
+          (l.map(_.toString), ArrayType(if (l.isEmpty) NullType else StringType, containsNull = false))
+        case other => (other.toString, StringType)
+      }
+      value -> StructField(attr, dataType, nullable = false)
     }
-    spark.range(1).select(cols: _*)
+    spark.createDataFrame(java.util.List.of(Row(cells.map(_._1): _*)),
+      StructType(cells.map(_._2)))
   }
 
   private def execOneToOne(df: DataFrame, compiler: RuleCompiler, tname: String): DataFrame = {
@@ -824,21 +835,58 @@ final class AdtlParser private (
 
   // ---- sinks ------------------------------------------------------------
 
-  /** CSV with deterministic sorted header, validation columns first, arrays
-    * rendered Python-repr style (parser.py:778-806 parity). */
   /** Look up a parsed table, with the reference's read_table error
     * (parser.py:772-776). */
   def readTable(tables: Map[String, DataFrame], tname: String): DataFrame =
     tables.getOrElse(tname,
       throw new IllegalArgumentException(s"Invalid table name: $tname"))
 
+  /** The table as one CSV part file in the directory `path` (see
+    * renderForCsv for the columns).
+    *
+    * A frame whose optimized plan is a local relation has its rows on the
+    * driver already — a constant table, an unvalidated oneToOne table over
+    * an in-memory input, an in-memory frame with no rows — and the driver
+    * writes it, as the reference writes every table (`csv.DictWriter`):
+    * with Spark's CSV generator and options, through the sink's
+    * filesystem, into the layout a one-task Spark write leaves. Every other
+    * frame is written by a Spark job. Validated frames carry observed
+    * metrics, which never fold to a local relation, so their report still
+    * rides the Spark write. The optimizer runs here only on plans that can
+    * fold (local leaves under projections and filters only, or no input
+    * rows); for any other plan the check would be a second optimizer run
+    * in its write. */
   def writeCsv(tables: Map[String, DataFrame], tname: String, path: String): Unit =
     observedWrite(tname, readTable(tables, tname)) { df =>
-      AdtlParser.sinkWriter(renderForCsv(df).coalesce(1))
-        .option("header", "true").option("emptyValue", "")
-        .csv(path)
+      val rendered = renderForCsv(df)
+      val names = rendered.columns.map(_.toLowerCase(java.util.Locale.ROOT))
+      val analyzed = rendered.queryExecution.analyzed
+      val leaves = analyzed.collectLeaves()
+      // optimized here only if it can fold: every leaf local, and either
+      // only nodes ConvertToLocalRelation folds or no input row at all
+      // (PropagateEmptyRelation). Folding evaluates projections on the
+      // driver, so a plan that folds only below a Generate, an Aggregate
+      // or observed metrics would pay that twice: here and in its write.
+      val foldable = leaves.forall(_.isInstanceOf[LocalRelation]) && (
+        analyzed.find {
+          case _: Project | _: Filter | _: LocalRelation => false
+          case _ => true
+        }.isEmpty || leaves.forall(_.asInstanceOf[LocalRelation].data.isEmpty))
+      // an empty or ambiguous header keeps the Spark write and its error
+      val candidate = foldable && names.nonEmpty && names.distinct.length == names.length
+      Option.when(candidate)(rendered.queryExecution.optimizedPlan).collect {
+        case r: LocalRelation if !r.isStreaming => r.data
+      } match {
+        case Some(rows) =>
+          AdtlParser.writeLocalCsv(rendered.sparkSession, rendered.schema, rows, path)
+        case None =>
+          AdtlParser.sinkWriter(rendered.coalesce(1)).options(AdtlParser.CsvWriteOptions).csv(path)
+      }
     }
 
+  /** CSV rendering: deterministic sorted header, validation columns first,
+    * arrays rendered Python-repr style, booleans as True/False
+    * (parser.py:778-806 parity). */
   def renderForCsv(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.ArrayType
     val validationCols = List("adtl_valid", "adtl_error").filter(df.columns.contains)
@@ -939,9 +987,64 @@ object AdtlParser {
     * and the tasks' Hadoop conf of this write only; disabling the cache for
     * the scheme keeps the session's cached `file:` filesystem out of it. */
   private def sinkWriter(df: DataFrame): DataFrameWriter[Row] =
-    df.write.mode("overwrite")
-      .option("fs.file.impl", classOf[NioLocalFileSystem].getName)
-      .option("fs.file.impl.disable.cache", "true")
+    df.write.mode("overwrite").options(SinkFsOptions)
+
+  /** The sinks' Hadoop keys (see sinkWriter); writeLocalCsv's conf takes
+    * them too. */
+  private val SinkFsOptions = Map(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
+  /** The CSV sink's writer options. */
+  private val CsvWriteOptions = Map("header" -> "true", "emptyValue" -> "")
+
+  /** Write `rows` (of `schema`) on the driver as the directory a one-task
+    * overwrite-mode CSV write leaves — the same calls on the same
+    * filesystem, so the same bytes, `.crc` files and permissions:
+    *  - an existing `path` is deleted;
+    *  - one `part-00000-<uuid>-c000.csv`, written by Spark's CSV generator
+    *    with the options the CSV data source builds from CsvWriteOptions
+    *    (header even for no rows);
+    *  - the `_SUCCESS` marker, unless the Hadoop conf turns it off;
+    *  - cached data read from `path` is refreshed.
+    * A write that fails deletes its part file. The filesystem is not
+    * closed: for `file:` it is an uncached instance, for any other scheme
+    * the shared cached one. */
+  private[adtl] def writeLocalCsv(spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow], path: String): Unit = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.mapreduce.lib.output.FileOutputCommitter
+    import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
+    val conf = spark.sessionState.newHadoopConfWithOptions(SinkFsOptions)
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(conf)
+    val out = fs.makeQualified(dir)
+    if (fs.exists(out) && !fs.delete(out, true))
+      throw new java.io.IOException(s"Unable to clear output directory $out prior to writing to it")
+    fs.mkdirs(out)
+    val sqlConf = spark.sessionState.conf
+    val options = new CSVOptions(CsvWriteOptions, sqlConf.csvColumnPruning,
+      sqlConf.sessionLocalTimeZone)
+    val part = new Path(out, s"part-00000-${java.util.UUID.randomUUID()}-c000.csv")
+    try {
+      val gen = new UnivocityGenerator(schema, new java.io.OutputStreamWriter(
+        fs.create(part, false), java.nio.charset.Charset.forName(options.charset)), options)
+      try {
+        if (options.headerFlag) gen.writeHeaders()
+        rows.foreach(gen.write)
+      } finally gen.close()
+    } catch {
+      // a failed write leaves no part file (nor its .crc), as an aborted
+      // Spark write leaves none, so no later read takes a truncated file
+      case e: Throwable =>
+        try fs.delete(part, false)
+        catch { case scala.util.control.NonFatal(d) => e.addSuppressed(d) }
+        throw e
+    }
+    if (conf.getBoolean(FileOutputCommitter.SUCCESSFUL_JOB_OUTPUT_DIR_MARKER, true))
+      fs.create(new Path(out, FileOutputCommitter.SUCCEEDED_FILE_NAME), true).close()
+    spark.catalog.refreshByPath(out.toString)
+  }
 
   /** The all-string schema Spark's header inference would give `file`,
     * read from its header line on the driver (see readCsv); None unless

@@ -227,6 +227,32 @@ class AdtlParserSpec extends SparkSpec {
     assert(out(0).getAs[String]("dataset") == "covid")
   }
 
+  test("constant table: saved without a Spark job") {
+    val p = AdtlParser.fromJsonString(
+      """{"adtl": {"name": "s", "description": "d", "tables": {"meta": {"kind": "constant"}}},
+        | "meta": {"dataset": "covid", "version": "1.0", "tags": ["a", "b"]}}""".stripMargin)
+    val tables = p.parseDataFrame(spark, strDf(Seq("x"), Seq(Seq("1"))))
+    val prefix = java.nio.file.Files.createTempDirectory("adtlconst").resolve("out").toString
+    val (_, jobs) = jobsIn(p.save(tables, prefix))
+    assert(jobs == 0)
+    assert(spark.read.option("header", "true").csv(s"$prefix-meta.csv").collect().toSeq ==
+      Seq(Row("covid", "['a', 'b']", "1.0")))
+  }
+
+  test("values map: one MapType literal in the analyzed plan") {
+    import org.apache.spark.sql.catalyst.expressions.{CreateMap, Literal, MapFromArrays}
+    import org.apache.spark.sql.types.MapType
+    val p = AdtlParser.fromJsonString(
+      """{"adtl": {"name": "s", "description": "d", "tables": {"t": {"kind": "oneToOne"}}},
+        | "t": {"sex": {"field": "sex", "values": {"1": "male", "2": "female", "3": null}}}}""".stripMargin)
+    val t = p.parseDataFrame(spark, strDf(Seq("sex"), Seq(Seq("1"), Seq("3"), Seq("9"))))("t")
+    val exprs = t.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    val maps = exprs.collect { case l @ Literal(_, MapType(_, _, _)) => l }
+    assert(maps.map(_.dataType) == Seq(MapType(StringType, StringType, valueContainsNull = true)))
+    assert(!exprs.exists(e => e.isInstanceOf[CreateMap] || e.isInstanceOf[MapFromArrays]))
+    assert(t.collect().map(_.getString(0)).toSeq == Seq("male", null, null))
+  }
+
   test("refs expand from defs; groupBy key can be combinedType firstNonNull") {
     val spec =
       """{

@@ -89,24 +89,54 @@ class CsvIoSpec extends SparkSpec {
     assert(tables("t").count() == 2)
   }
 
+  private val Uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+
   /** Every entry under `dir` (itself included) as (relative name with the
     * write's uuid masked, POSIX permissions). */
   private def layout(dir: String): Seq[(String, String)] = {
     val root = Paths.get(dir)
-    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
     Files.walk(root).iterator().asScala.toSeq.map { p =>
-      root.relativize(p).toString.replaceAll(uuid, "<uuid>") ->
+      root.relativize(p).toString.replaceAll(Uuid, "<uuid>") ->
         PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
     }.sortBy(_._1)
+  }
+
+  /** The CSV sink as a plain Spark write through the stock filesystem. */
+  private def stockCsv(df: DataFrame, path: String): Unit =
+    parser.renderForCsv(df).coalesce(1).write.mode("overwrite")
+      .option("header", "true").option("emptyValue", "").csv(path)
+
+  /** Every file under `dir` as (relative name with the uuid masked, bytes). */
+  private def contents(dir: String): Seq[(String, Seq[Byte])] = {
+    val root = Paths.get(dir)
+    Files.walk(root).iterator().asScala.filter(Files.isRegularFile(_)).toSeq.map { p =>
+      root.relativize(p).toString.replaceAll(Uuid, "<uuid>") -> Files.readAllBytes(p).toSeq
+    }.sortBy(_._1)
+  }
+
+  /** `write` and the stock writer leave the same files, permissions and
+    * bytes in `dir`/csv and `dir`/csv_stock; returns the jobs `write` ran. */
+  private def csvParity(d: Path, write: String => Unit, stock: String => Unit): Int = {
+    val (_, jobs) = jobsIn(write(s"$d/csv"))
+    stock(s"$d/csv_stock")
+    assert(layout(s"$d/csv") == layout(s"$d/csv_stock"))
+    assert(contents(s"$d/csv") == contents(s"$d/csv_stock"))
+    assert(contents(s"$d/csv").map(_._1) == Seq(
+      "._SUCCESS.crc", ".part-00000-<uuid>-c000.csv.crc", "_SUCCESS", "part-00000-<uuid>-c000.csv"))
+    jobs
   }
 
   test("sinks: same files and POSIX permissions as the stock local filesystem") {
     val d = tmp()
     val tables = parser.parseDataFrame(spark, spark.createDataFrame(Seq(
       ("1", "x", "2.5"), ("2", "", "bad"))).toDF("id", "v", "n"))
-    parser.writeCsv(tables, "t", s"$d/csv")
-    parser.renderForCsv(tables("t")).coalesce(1).write.mode("overwrite")
-      .option("header", "true").option("emptyValue", "").csv(s"$d/csv_stock")
+    // a table over an in-memory input folds to a local relation
+    assert(csvParity(d, parser.writeCsv(tables, "t", _), stockCsv(tables("t"), _)) == 0)
+    // a table over a CSV file keeps the Spark write
+    val src = tmp()
+    val fromFile = parser.parseCsv(spark,
+      write(src, "in.csv", "id,v,n\n1,x,2.5\n2,,bad\n3,\"a,b\",\n"))
+    assert(csvParity(src, parser.writeCsv(fromFile, "t", _), stockCsv(fromFile("t"), _)) > 0)
     parser.writeParquet(tables, "t", s"$d/pq")
     tables("t").write.mode("overwrite").parquet(s"$d/pq_stock")
     for (kind <- Seq("csv", "pq")) {
@@ -121,6 +151,90 @@ class CsvIoSpec extends SparkSpec {
       .map(Files.readAllBytes(_).toSeq)
     assert(partBytes(s"$d/csv") == partBytes(s"$d/csv_stock"))
     assert(partBytes(s"$d/pq") == partBytes(s"$d/pq_stock"))
+  }
+
+  /** A constant table whose values need CSV quoting and Python rendering. */
+  private val constant = AdtlParser.fromJsonString("""{
+    |  "adtl": {"name": "s", "description": "d", "tables": {
+    |    "c": {"kind": "constant"}}},
+    |  "c": {"comma": "a,b", "quote": "say \"hi\"", "newline": "line1\nline2",
+    |        "empty": "", "accents": "S\u00e3o Paulo \u00e9t\u00e9 \u4e2d", "flag": true,
+    |        "off": false, "count": 42, "ratio": 2.5, "tags": ["x", "1", "y z"], "none": []}
+    |}""".stripMargin)
+
+  test("csv sink: a constant table is written on the driver, as the stock writer writes it") {
+    import org.apache.spark.sql.functions.{array, lit}
+    val tables = constant.parseDataFrame(spark, spark.range(1).toDF())
+    // the columns of the literal row it replaces: names (sorted),
+    // types, nullability
+    assert(tables("c").schema == spark.range(1).select(
+      lit("S\u00e3o Paulo \u00e9t\u00e9 \u4e2d").as("accents"), lit("a,b").as("comma"),
+      lit(42L).as("count"), lit("").as("empty"), lit(true).as("flag"),
+      lit("line1\nline2").as("newline"), array().as("none"), lit(false).as("off"),
+      lit("say \"hi\"").as("quote"), lit(2.5).as("ratio"),
+      array(lit("x"), lit("1"), lit("y z")).as("tags")).schema)
+    val d = tmp()
+    assert(csvParity(d, constant.writeCsv(tables, "c", _), stockCsv(tables("c"), _)) == 0)
+    assert(new String(contents(s"$d/csv").last._2.toArray, UTF_8) ==
+      "accents,comma,count,empty,flag,newline,none,off,quote,ratio,tags\n" +
+      "S\u00e3o Paulo \u00e9t\u00e9 \u4e2d,\"a,b\",42,,True,\"line1\nline2\",[],False," +
+      "\"say \\\"hi\\\"\",2.5,\"['x', 1, 'y z']\"\n")
+  }
+
+  test("csv sink: an empty frame is written on the driver, header only") {
+    val empty = spark.createDataFrame(Seq.empty[(String, String, String)]).toDF("id", "v", "n")
+    val tables = parser.parseDataFrame(spark, empty)
+    assert(csvParity(tmp(), parser.writeCsv(tables, "t", _), stockCsv(tables("t"), _)) == 0)
+  }
+
+  test("csv sink: the driver write overwrites an existing output directory") {
+    val d = tmp()
+    val tables = parser.parseDataFrame(spark, spark.createDataFrame(Seq(
+      ("1", "x", "2.5"))).toDF("id", "v", "n"))
+    val meta = constant.parseDataFrame(spark, spark.range(1).toDF())
+    // the earlier output is a Spark write of another table, with a
+    // subdirectory of its own
+    for (out <- Seq("csv", "csv_stock")) {
+      stockCsv(tables("t").repartition(2), s"$d/$out")
+      Files.createDirectories(Paths.get(s"$d/$out/nested/deeper"))
+    }
+    assert(csvParity(d, constant.writeCsv(meta, "c", _), stockCsv(meta("c"), _)) == 0)
+  }
+
+  test("csv sink: the driver write refreshes data cached from its path") {
+    val out = tmp().resolve("out").toString
+    def rows(n: Int) = parser.parseDataFrame(spark,
+      spark.createDataFrame((1 to n).map(i => (s"$i", "x", "1"))).toDF("id", "v", "n"))
+    parser.writeCsv(rows(2), "t", out)
+    val cached = spark.read.option("header", "true").csv(out).cache()
+    try {
+      assert(cached.count() == 2)
+      assert(jobsIn(parser.writeCsv(rows(3), "t", out))._2 == 0)
+      assert(cached.count() == 3)
+    } finally cached.unpersist()
+  }
+
+  test("csv sink: an output path under a file fails as the stock writer fails") {
+    val blocker = Files.createFile(tmp().resolve("blocker"))
+    val tables = constant.parseDataFrame(spark, spark.range(1).toDF())
+    val target = s"$blocker/out"
+    val got = intercept[Exception](constant.writeCsv(tables, "c", target))
+    val want = intercept[Exception](stockCsv(tables("c"), target))
+    assert(got.getClass == want.getClass)
+    assert(got.getMessage == want.getMessage)
+    assert(Files.isRegularFile(blocker))
+  }
+
+  test("csv sink: a driver write that fails leaves no part file") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    val out = tmp().resolve("out")
+    // the first row is written, the second fails while the part file is open
+    val schema = StructType(Seq(StructField("n", IntegerType)))
+    val rows = LazyList.tabulate(2)(i =>
+      if (i == 0) InternalRow(1) else throw new IllegalStateException("row 2"))
+    intercept[IllegalStateException](AdtlParser.writeLocalCsv(spark, schema, rows, out.toString))
+    assert(Files.list(out).iterator().asScala.isEmpty)
   }
 
   test("NioLocalFileSystem sets permissions in-process and reads them back") {

@@ -114,6 +114,25 @@ class ReportSpec extends SparkSpec {
     assert(observed("visit")._2 == 5) // S1, S2, S3, X4, S5
   }
 
+  test("a validated constant table keeps the observed Spark write: its report equals the direct aggregation") {
+    val dir = java.nio.file.Files.createTempDirectory("adtlreport")
+    java.nio.file.Files.writeString(dir.resolve("meta.json"),
+      """{"required": ["version", "site"], "properties": {"version": {"type": "string"}}}""")
+    java.nio.file.Files.writeString(dir.resolve("spec.json"),
+      """{"adtl": {"name": "r", "description": "report", "tables": {
+        |   "meta": {"kind": "constant", "schema": "meta.json"}}},
+        | "meta": {"version": "1"}}""".stripMargin)
+    val p = AdtlParser.fromFile(s"$dir/spec.json")
+    val tables = p.parseDataFrame(spark, strDf(cols, rows))
+    val (_, writeJobs) = jobsIn(p.save(tables, s"${outDir()}/r"))
+    assert(writeJobs > 0) // observed metrics never fold to a local relation
+    val (observed, jobs) = jobsIn(p.report(tables))
+    assert(jobs == 0)
+    assert(observed == direct(tables))
+    assert(observed == Map("meta" ->
+      ((0L, 1L, Map("data must contain ['version', 'site'] properties" -> 1L)))))
+  }
+
   test("oneOf fallback messages: counted on the write, named by one filtered groupBy") {
     val p = AdtlParser.fromFile(s"${specDir()}/spec.json")
     val tables = p.parseDataFrame(spark, strDf(cols, rows))
