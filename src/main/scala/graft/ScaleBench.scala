@@ -749,44 +749,11 @@ object ScaleBench {
 
     // per-task durations per query: the straggler evidence — a bounded
     // max/median ratio under skew means no single task carries the hot key
-    val taskTimes =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
-    // stageId → callsite name, so the straggler readout can NAME the
-    // stage that serializes instead of leaving a bare ratio to chase
-    // (the round-10 q_quality_pipeline 110× question)
-    val stageNames =
-      new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskInfo != null && t.taskInfo.successful)
-            taskTimes.add((t.stageId, t.taskInfo.duration))
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler
-              .SparkListenerStageCompleted): Unit = {
-          val info = s.stageInfo
-          // AQE submits stages from pool threads whose callsite reads
-          // "withThreadLocalCaptured at CompletableFuture"; the RDD
-          // operation scopes (Scan/Exchange/WholeStageCodegen…) name
-          // what the stage actually runs, and a graft frame in the
-          // long-form details names the operator when present
-          val site = info.details.linesIterator
-            .find(l => l.contains("graft.") &&
-              !l.contains("graft.ScaleBench"))
-            .map(_.trim).getOrElse("")
-          val scopes = info.rddInfos.flatMap(_.scope).map(_.name)
-            .distinct.take(5).mkString(" | ")
-          val label = Seq(info.name, scopes, site)
-            .filter(_.nonEmpty).mkString(" @ ")
-          stageNames.put(info.stageId, label)
-        }
-      })
+    val taskTimes = TaskTimes.install(spark)
 
     val results = selected.map { name =>
       val fn = SparkEntry.queries(name)
       taskTimes.clear()
-      stageNames.clear()
       val t0 = System.nanoTime()
       // Force FULL evaluation with a noop-sink write: a count() action lets
       // Catalyst prune every computed column and eliminate row-preserving
@@ -804,15 +771,7 @@ object ScaleBench {
           -1L
       }
       val sec = (System.nanoTime() - t0) / 1e9
-      // the listener bus is async with no public drain — poll until the
-      // task count stabilizes (50 ms quiet period, 5 s cap)
-      var size = -1
-      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      while (size != taskTimes.size && System.nanoTime() < deadline) {
-        size = taskTimes.size
-        Thread.sleep(50)
-      }
-      val all = taskTimes.toArray(Array.empty[(Int, Long)])
+      val all = taskTimes.drain()
       // Straggler bound PER STAGE: max/median of task durations within one
       // stage answers "does one task carry the load while its peers idle?".
       // A query-global median is meaningless for iterative queries (CC runs
@@ -830,7 +789,7 @@ object ScaleBench {
             ds.last.toDouble / math.max(1L, ds(ds.length / 2)) }
           val med = math.max(1L, d(d.length / 2))
           (d.last.toDouble / med,
-            s"${stageNames.getOrDefault(sid, "?")} [stage $sid: " +
+            s"${taskTimes.label(sid)} [stage $sid: " +
               s"${d.length} tasks, max ${d.last} ms, median $med ms]")
         }
       // name the stage OWNING the longest task too: the ratio-based
@@ -841,7 +800,7 @@ object ScaleBench {
         if (all.isEmpty) (0.0, "")
         else {
           val (sid, dur) = all.maxBy(_._2)
-          (dur / 1e3, s"${stageNames.getOrDefault(sid, "?")} [stage $sid]")
+          (dur / 1e3, s"${taskTimes.label(sid)} [stage $sid]")
         }
       (name, sec, rows, ratio, maxTaskSec, worstStage, maxTaskStage)
     }

@@ -30,40 +30,15 @@ object StageAudit {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val taskTimes =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
-    val stageNames =
-      new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskInfo != null && t.taskInfo.successful)
-            taskTimes.add((t.stageId, t.taskInfo.duration))
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler
-              .SparkListenerStageCompleted): Unit = {
-          val info = s.stageInfo
-          val scopes = info.rddInfos.flatMap(_.scope).map(_.name)
-            .distinct.mkString(" | ")
-          stageNames.put(info.stageId, s"${info.name} @ $scopes")
-        }
-      })
+    val taskTimes = TaskTimes.install(spark)
 
     names.foreach { name =>
       taskTimes.clear()
-      stageNames.clear()
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, dir)
         .write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t0) / 1e9
-      var size = -1
-      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      while (size != taskTimes.size && System.nanoTime() < deadline) {
-        size = taskTimes.size
-        Thread.sleep(50)
-      }
-      val all = taskTimes.toArray(Array.empty[(Int, Long)])
+      val all = taskTimes.drain()
       println(f"== $name: ${sec}%.2f s, ${all.length} tasks, " +
         s"${all.map(_._1).distinct.length} stages")
       all.groupBy(_._1).toSeq
@@ -76,7 +51,7 @@ object StageAudit {
           println(f"  stage $sid%4d: $n%4d tasks  max $mx%6d ms  " +
             f"median $med%6d ms  total $tot%7d ms  " +
             s"ratio ${if (med > 0) f"${mx.toDouble / med}%.1f" else "inf"}" +
-            s"  ${stageNames.getOrDefault(sid, "?")}")
+            s"  ${taskTimes.label(sid)}")
         }
     }
     spark.stop()

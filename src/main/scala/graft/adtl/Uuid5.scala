@@ -22,6 +22,11 @@ object Uuid5 {
     fromBytes(h)
   }
 
+  /** uuid5 of `name` under the namespace (hi, lo), as text: the static
+    * entry [[Uuid5Expr]] calls from interpreted and generated code. */
+  def uuid5String(hi: Long, lo: Long, name: String): String =
+    uuid5(new UUID(hi, lo), name).toString
+
   def sha1Hex(s: String): String =
     MessageDigest.getInstance("SHA-1")
       .digest(s.getBytes(StandardCharsets.UTF_8))

@@ -25,13 +25,16 @@ case class Uuid5Expr(nsHi: Expression, nsLo: Expression, seed: Expression)
   override def nullable: Boolean = seed.nullable
   override def prettyName: String = "graft_uuid5"
 
+  // both paths call the static forwarder of `Uuid5.uuid5String`: a method
+  // on this case class's companion gets no forwarder when its name clashes
+  // with an Expression method (`eval`), and generated code cannot reach it
   override protected def nullSafeEval(hi: Any, lo: Any, s: Any): Any =
-    UTF8String.fromString(Uuid5Expr.eval(
+    UTF8String.fromString(Uuid5.uuid5String(
       hi.asInstanceOf[Long], lo.asInstanceOf[Long], s.toString))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (hi, lo, s) =>
-      s"UTF8String.fromString(graft.adtl.Uuid5Expr.eval($hi, $lo, $s.toString()))")
+      s"UTF8String.fromString(graft.adtl.Uuid5.uuid5String($hi, $lo, $s.toString()))")
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
@@ -42,10 +45,6 @@ case class Uuid5Expr(nsHi: Expression, nsLo: Expression, seed: Expression)
 }
 
 object Uuid5Expr {
-  /** Static entry used by both interpreted and generated code paths. */
-  def eval(hi: Long, lo: Long, seed: String): String =
-    Uuid5.uuid5(new java.util.UUID(hi, lo), seed).toString
-
   @volatile private var registered = Set.empty[String]
 
   /** Idempotently register `graft_uuid5` in the session's function registry. */

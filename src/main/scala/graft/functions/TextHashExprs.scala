@@ -36,19 +36,6 @@ object TextHashExprs {
       copy(child = c)
   }
 
-  /** MinHash minima over pre-hashed shingles: mins_i of xxhash64(i, h),
-    * bit-identical to array_min(transform(hashes, h => xxhash64(lit(i), h))). */
-  case class MinHashSigExpr(child: Expression, numHashes: Int) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def prettyName: String = "graft_minhash_sig"
-    override protected def nullSafeEval(a: Any): Any =
-      TextHashExprs.minhashSig(a.asInstanceOf[ArrayData], numHashes)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, a => s"graft.functions.TextHashExprs.minhashSig($a, $numHashes)")
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
   /** Affine (Carter–Wegman) MinHash minima over md5-derived base hashes:
     * mins_j of (x·a_j + b_j) mod p — the oracle-replicable hash family
     * (plain integer arithmetic any SQL engine can compute). Bit-identical
@@ -109,9 +96,9 @@ object TextHashExprs {
     override def dataType: DataType = LongType
     override def prettyName: String = "graft_simhash"
     override protected def nullSafeEval(a: Any): Any =
-      TextHashExprs.simhash(a.asInstanceOf[ArrayData], bits)
+      TextHashExprs.simhashSig(a.asInstanceOf[ArrayData], bits)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, a => s"graft.functions.TextHashExprs.simhash($a, $bits)")
+      defineCodeGen(ctx, ev, a => s"graft.functions.TextHashExprs.simhashSig($a, $bits)")
     override protected def withNewChildInternal(c: Expression): Expression =
       copy(child = c)
   }
@@ -175,6 +162,9 @@ object TextHashExprs {
     new GenericArrayData(mins)
   }
 
+  /** MinHash minima over pre-hashed shingles: mins_i of xxhash64(i, h),
+    * bit-identical to array_min(transform(hashes, h => xxhash64(lit(i), h)))
+    * — the signature [[bandKeys]] bands when `affine` is false. */
   def minhashSig(hashes: ArrayData, numHashes: Int): ArrayData = {
     val seeds = new Array[Long](numHashes)
     var j = 0
@@ -255,7 +245,7 @@ object TextHashExprs {
     new GenericArrayData(out.asInstanceOf[Array[AnyRef]])
   }
 
-  def simhash(hashes: ArrayData, bits: Int): Long = {
+  def simhashSig(hashes: ArrayData, bits: Int): Long = {
     val counts = new Array[Int](bits)
     val n = hashes.numElements()
     var i = 0
@@ -303,9 +293,6 @@ object TextHashExprs {
         "graft_ngram_hashes",
         exprs => NgramHashesExpr(exprs(0), litInt(exprs(1))), "scala_udf")
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_minhash_sig",
-        exprs => MinHashSigExpr(exprs(0), litInt(exprs(1))), "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         "graft_affine_minhash_sig",
         exprs => AffineMinHashSigExpr(exprs(0), litInt(exprs(1))), "scala_udf")
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
@@ -323,12 +310,6 @@ object TextHashExprs {
     register(spark)
     org.apache.spark.sql.functions.call_function("graft_ngram_hashes",
       tokens, org.apache.spark.sql.functions.lit(n))
-  }
-
-  def minhashSig(spark: SparkSession, hashes: Column, numHashes: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("graft_minhash_sig",
-      hashes, org.apache.spark.sql.functions.lit(numHashes))
   }
 
   def affineMinhashSig(spark: SparkSession, hashes: Column, numHashes: Int): Column = {

@@ -9,10 +9,13 @@ import org.apache.spark.sql.functions._
   *  - exact: one hash-groupBy shuffle on a 16-byte key (not the text)
   *  - MinHash+LSH: signatures are a linear scan; candidate generation is a
   *    band-bucket self-join (shuffle on small band keys, never all-pairs)
-  *  - SimHash: 64-bit signature scan + same-bucket join on rotated prefixes
+  *  - SimHash: 31-bit signature scan + same-bucket join on 8-bit blocks
   *  - n-gram Jaccard: exact verification on candidate pairs only
   *
-  * All hashing is xxhash64 (Spark built-in, codegen'd, deterministic).
+  * The MinHash and SimHash pair engines (`*Md5`) hash md5-derived base
+  * values, so any SQL engine with md5 replays them; gram sets, chunk keys
+  * and the bounded Jaccard path's LSH routing use xxhash64 (Spark
+  * built-in, codegen'd, deterministic).
   */
 object Dedup {
 
@@ -69,81 +72,30 @@ object Dedup {
       array_min(transform(shingleHashes, h => xxhash64(lit(i), h)))
     }: _*)
 
-  /** Convenience single-expression form. Prefer the staged projection in
-    * minhashLshPairs (materialized shingle hashes) on large corpora — a
-    * single expression recomputes the shingle strings per hash function. */
-  def minhashSignature(text: Column, n: Int = 3, numHashes: Int = 64): Column =
-    minhashFromHashes(transform(shingles(text, n), s => xxhash64(s)), numHashes)
-
-  /** LSH candidate pairs: split signatures into bands, bucket-join on
-    * (band index, band hash), emit distinct candidate id pairs (a < b),
-    * then verify est similarity (= fraction of equal minhashes) against
-    * `threshold`.
-    *
-    * Parameter selection: recall at `threshold` is governed by the banding
-    * S-curve midpoint (1/bands)^(bands/numHashes) — see lshCollisionMidpoint.
-    * The defaults (64 hashes, 16 bands → midpoint 0.5) suit near-dup
-    * thresholds ≥ 0.5; for lower thresholds pick parameters with
-    * lshParamsFor(threshold, numHashes, bands) or pairs far below the
-    * midpoint are rarely emitted. (Unlike ngramJaccardPairsBounded — whose
-    * contract is "approximate the exact path" and which auto-tunes — the
-    * contract HERE is banded candidate generation at the given parameters,
-    * which the d_minhash_lsh oracle replicates band for band.)
-    *
-    * Scale discipline: the bucket join and pair-dedup run on skinny
-    * (band, hash, id) rows — signatures are joined back only for the
-    * deduped candidates; degenerate buckets larger than `maxBucketSize`
-    * (near-universal shingles, quadratic blowup) are dropped, the standard
-    * web-dedup practice. Signatures are persisted so the three uses don't
-    * recompute the hash pass. */
-  def minhashLshPairs(
-      df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.7, maxBucketSize: Int = 500,
-      materializePath: Option[String] = None): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
-    // staged projection: shingle strings → long hashes (once) → 64 minima
-    // NOT persisted: Spark's in-memory columnar cache is pathologically
-    // slow building batches of array columns (measured ~40× the cost of
-    // recomputing this narrow projection). The three uses recompute from
-    // the column-pruned scan; at cluster scale, if the input scan is the
-    // expensive part, write signatures to a parquet temp table instead.
-    // signatures ride as ONE binary blob (packed longs) through the
-    // join-backs — per-element array handling at join/exchange copy
-    // boundaries dominates otherwise. Gram hashing, minima, and band keys
-    // all run in codegen'd TextHashExprs kernels: each is a SINGLE
-    // expression over the base-hash column, because the optimizer inlines
-    // column aliases into every consuming reference (per-band references
-    // would re-evaluate the whole signature per band).
-    val spark = df.sparkSession
-    // The (id, packed sig, band keys) projection is MATERIALIZED once:
-    // every lazy formulation re-evaluates the signature expression at each
-    // consuming operator (generators and windows re-evaluate inlined
-    // aliases; the columnar cache is pathological on arrays). It is tiny
-    // (numHashes longs + bands short strings per doc); `materializePath`
-    // lands it in parquet — the cluster form — instead of localCheckpoint.
-    val baseRaw = df.select(col(idCol).as("id"),
-        graft.functions.TextHashExprs.ngramHashes(spark,
-          TextAnalysis.tokens(col(textCol)), n).as("__h"))
-      .select(col("id"),
-        graft.functions.PackedLongs.pack(spark,
-          graft.functions.TextHashExprs.minhashSig(spark, col("__h"), numHashes)).as("sig"),
-        graft.functions.TextHashExprs.bandKeysCol(spark, col("__h"),
-          numHashes, bands, affine = false).as("bk"))
-    val base = materializeBase(baseRaw, materializePath)
-    val sig = base.select(col("id"), col("sig"))
-    val banded = base.select(col("id"), posexplode(col("bk")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
-    lshCandidatePairs(sig, banded, numHashes, threshold, maxBucketSize)
-  }
-
-  /** Oracle-replicable LSH variant: affine MinHash over md5-derived base
-    * hashes (minhashSignatureMd5's family) with plain-text band keys — the
+  /** LSH candidate pairs: affine MinHash over md5-derived base hashes
+    * (minhashSignatureMd5's family), signatures split into bands,
+    * bucket-join on (band index, band key), distinct candidate id pairs
+    * (a < b), then the estimated similarity (= fraction of equal minhashes)
+    * verified against `threshold`. The band keys are plain text, so the
     * complete candidate pipeline (banding, bucket cap, pair dedup,
     * signature-agreement estimate) is reproducible in any SQL engine with
-    * md5, so candidate EMISSION itself is hash-checkable against the
-    * DuckDB oracle, not just the signature math. */
+    * md5: candidate EMISSION itself is hash-checkable against the DuckDB
+    * oracle, not just the signature math.
+    *
+    * Parameter selection: recall at `threshold` is governed by the banding
+    * S-curve midpoint (1/bands)^(bands/numHashes) — see lshCollisionMidpoint;
+    * for low thresholds pick parameters with lshParamsFor(threshold,
+    * numHashes, bands) or pairs far below the midpoint are rarely emitted.
+    * (Unlike ngramJaccardPairsBounded — whose contract is "approximate the
+    * exact path" and which auto-tunes — the contract HERE is banded
+    * candidate generation at the given parameters, which the oracle
+    * replicates band for band.)
+    *
+    * Scale discipline: the bucket join and pair-dedup run on skinny
+    * (band, key, id) rows — signatures are joined back only for the
+    * deduped candidates; degenerate buckets larger than `maxBucketSize`
+    * (near-universal shingles, quadratic blowup) are dropped, the standard
+    * web-dedup practice. */
   def minhashLshPairsMd5(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 2, numHashes: Int = 16, bands: Int = 8,
@@ -151,7 +103,12 @@ object Dedup {
       materializePath: Option[String] = None): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val spark = df.sparkSession
-    // materialized like the xxhash64 path (see minhashLshPairs)
+    // The (id, packed sig, band keys) projection is MATERIALIZED once:
+    // every lazy formulation re-evaluates the signature expression at each
+    // consuming operator (generators and windows re-evaluate inlined
+    // aliases; the columnar cache is pathological on arrays). It is tiny
+    // (numHashes longs + bands short strings per doc); `materializePath`
+    // lands it in parquet — the cluster form — instead of localCheckpoint.
     val base = materializeBase(df.select(col(idCol).as("id"),
         md5BaseHashes(col(textCol), n).as("__h"))
       .select(col("id"),
@@ -290,7 +247,7 @@ object Dedup {
     * prefix mod p (p = 2^31-1), permutations h_i(x) = (a_i·x + b_i) mod p
     * with products bounded below 2^62 (ANSI-safe, replicable in any SQL
     * engine with md5 — used to pin the MinHash math itself against the
-    * DuckDB oracle; the production path stays on the faster xxhash64). */
+    * DuckDB oracle). */
   val md5MinhashP: Long = graft.functions.TextHashExprs.AffineP
   def md5MinhashSeeds(numHashes: Int): Seq[(Long, Long)] =
     graft.functions.TextHashExprs.affineSeeds(numHashes)
@@ -311,11 +268,10 @@ object Dedup {
 
   // ---- SimHash ----------------------------------------------------------
 
-  /** 64-bit SimHash over tokens: per bit, sum ±1 across token hashes; the
-    * sign pattern is the signature. Pure expressions (sequence+aggregate),
-    * single scan. */
-  /** SimHash from pre-hashed tokens (staged projection: hash once, then 64
-    * bit-counter folds over the materialized long array). */
+  /** 64-bit SimHash from pre-hashed tokens: per bit, sum ±1 across the
+    * hashes; the sign pattern is the signature. Pure expressions (64
+    * bit-counter folds over the long array) — the reference form of the
+    * `TextHashExprs.simhashCol` kernel. */
   def simhashFromHashes(hashes: Column): Column = {
     val bitCols: Seq[Column] = (0 until 64).map { b =>
       when(aggregate(hashes, lit(0L),
@@ -325,13 +281,9 @@ object Dedup {
     bitCols.reduce((a, b) => a.bitwiseOR(b))
   }
 
-  def simhash(text: Column): Column =
-    simhashFromHashes(transform(TextAnalysis.tokens(text), x => xxhash64(x)))
-
   /** Oracle-checkable 31-bit SimHash over md5-derived token hashes (same
     * base-hash construction as minhashSignatureMd5) — pins the SimHash
-    * bit-vote math against a SQL oracle; production stays on 64-bit
-    * xxhash64. */
+    * bit-vote math against a SQL oracle. */
   def simhash31Md5(text: Column): Column = {
     // single-pass kernels; per-bit size(filter(...)) terms would each
     // re-evaluate the md5 transform (lambdas are excluded from
@@ -341,53 +293,12 @@ object Dedup {
       md5BaseHashes(text, 1), bits = 31)
   }
 
-  /** Near-dup candidates by SimHash: same value in any of maxHamming+1
-    * bit blocks → Hamming-verify ≤ maxHamming. The block count is DERIVED
-    * from the budget (a pair within Hamming ≤ h differing in every one of
-    * h+1 disjoint blocks would need h+1 differing bits — pigeonhole), so
-    * the pair set is EXACT for any `maxHamming`, not just the old fixed
-    * 4×16-bit layout's ≤ 3 (larger budgets silently lost the pairs that
-    * disagreed in all four quarters). More blocks = coarser keys = more
-    * candidates to verify — the inherent cost of a wider exact budget. */
-  def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < 64, "maxHamming must be in [0, 64)")
-    val spark = df.sparkSession
-    val toks = TextAnalysis.tokens(col(textCol))
-    // single-pass codegen'd kernel (empty docs keep signature 0, like the
-    // per-bit fold over an empty hash array)
-    val sigs = df.select(col(idCol).as("id"),
-      when(size(toks) > 0,
-        graft.functions.TextHashExprs.simhashCol(spark,
-          graft.functions.TextHashExprs.ngramHashes(spark, toks, 1)))
-        .otherwise(lit(0L)).as("sig"))
-    // maxHamming+1 nearly-equal blocks over the 64 bits (first `rem`
-    // blocks one bit wider); a pair within budget agrees exactly on ≥1
-    val nBlocks = maxHamming + 1
-    val base = 64 / nBlocks
-    val rem = 64 % nBlocks
-    val blocks = (0 until nBlocks).map { q =>
-      val width = if (q < rem) base + 1 else base
-      val offset = q * base + math.min(q, rem)
-      val mask = if (width >= 64) -1L else (1L << width) - 1L
-      shiftrightunsigned(col("sig"), offset).bitwiseAND(mask)
-    }
-    val keyed = sigs.select(col("id"), col("sig"), posexplode(array(blocks: _*)))
-      .withColumnRenamed("pos", "q").withColumnRenamed("col", "qkey")
-    val a = keyed.select(col("q"), col("qkey"), col("id").as("id_a"), col("sig").as("sig_a"))
-    val b = keyed.select(col("q"), col("qkey"), col("id").as("id_b"), col("sig").as("sig_b"))
-    a.join(b, Seq("q", "qkey")).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
-
   /** Oracle-replicable SimHash pairs over the 31-bit md5-based signature:
-    * four rotated 8-bit prefixes (pigeonhole for Hamming ≤ 3 at 31 bits —
-    * wider budgets widen recall via the same bucketing; the production
-    * simhashPairs derives maxHamming+1 blocks and is exact at any budget,
-    * but HERE the 4-block layout is part of the oracle-pinned contract),
+    * four disjoint 8-bit blocks (pigeonhole: a pair within Hamming ≤ 3
+    * agrees exactly on at least one block, so below the bucket cap the
+    * pair set is exact for budgets up to 3; a wider budget verifies the
+    * same candidates at the wider distance, so its recall is partial —
+    * the 4-block layout is part of the oracle-pinned contract),
     * exact-Hamming verify. Every step (signature, bucketing, pair dedup, bit_count of
     * xor) is plain integer SQL, so pair emission is hash-checkable against
     * the DuckDB oracle. */
@@ -967,7 +878,7 @@ object Dedup {
     val counts = df.groupBy(col(blockCol).as("blk")).agg(count(lit(1)).as("__bn"))
     // one hash scan serves both paths; materialized because every lazy
     // formulation re-evaluates the signature expressions per consumer
-    // (see minhashLshPairs)
+    // (see minhashLshPairsMd5)
     val baseRaw = df.select(col(blockCol).as("blk"), col(idCol).as("id"),
         graft.functions.TextHashExprs.ngramHashes(spark,
           TextAnalysis.tokens(col(textCol)), n).as("__h"))
@@ -1246,7 +1157,7 @@ object Dedup {
     * Recall discipline: a `minRecall` > 0 fails fast at plan-build time when
     * the banding S-curve at `threshold` cannot reach it — the mirror of
     * lshParamsFor's midpoint rule for the Jaccard family (by default the
-    * parameters are taken verbatim, matching the minhashLshPairs contract
+    * parameters are taken verbatim, matching the minhashLshPairsMd5 contract
     * that the oracle replicates band for band).
     *
     * Sizing: band-key width w = nBits/bands caps useful corpus size — the
@@ -1278,8 +1189,8 @@ object Dedup {
         Similarity.norm(vd).as("nrm"),
         graft.functions.SrpExprs.srpBits(spark, vd, nBits).as("sig")),
       materializePath)
-    // nearly-equal bit blocks (first `rem` one bit wider) — simhashPairs
-    // layout generalized to nBits
+    // nearly-equal bit blocks over the nBits (first `rem` one bit wider);
+    // a pair agreeing on every bit of a block shares its bucket
     val nBlocks = bands
     val blockBase = nBits / nBlocks
     val rem = nBits % nBlocks

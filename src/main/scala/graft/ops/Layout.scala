@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * Everything is a pure codegen'd column function of the row: bin
   * boundaries are plan-build-time LITERALS (the same cuts discipline as
   * `Pipeline.runningSum`), binning is a literal when-chain, and the bit
-  * interleave is shift/mask arithmetic — no UDFs, no shuffle beyond the
-  * one range partition a clustered write needs anyway.
+  * interleave is shift/mask arithmetic — no UDFs and no shuffle; a
+  * clustered write range-partitions on the z-value and sorts within
+  * partitions.
   */
 object Layout {
 
@@ -57,18 +58,4 @@ object Layout {
   def doubleCuts(lo: Double, hi: Double, bits: Int): Array[Column] =
     (1 until (1 << bits)).map(i =>
       lit(lo + (hi - lo) * i.toDouble / (1 << bits).toDouble)).toArray
-
-  /** Cluster rows for a pruning-friendly write: range-partition on the
-    * z-value, sort within partitions, keep `zval` so the writer (and the
-    * gate) can see the layout. One shuffle — the same one any clustered
-    * write pays; each output file then covers a tight z-range, i.e. a
-    * tight hyper-rectangle in every clustered dimension, which is what
-    * parquet row-group min/max pruning needs. */
-  def clusterByZ(df: DataFrame, cols: Seq[(Column, Array[Column])],
-      bits: Int, numPartitions: Int): DataFrame = {
-    require(numPartitions >= 1, s"numPartitions must be >= 1")
-    df.withColumn("zval", zvalue(cols, bits))
-      .repartitionByRange(numPartitions, col("zval"))
-      .sortWithinPartitions("zval")
-  }
 }

@@ -22,12 +22,6 @@ object Multimodal {
   final case class MediaMeta(width: Int, height: Int, nChannels: Int, format: String)
   final case class DecodedDoc(doc_id: Long, meta: MediaMeta, feature: Array[Float])
 
-  /** Attach a synthetic binary "image" payload to each document — stands in
-    * for a real binary column read from parquet. Deterministic from doc_id. */
-  def withFakePayload(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.withColumn("payload", to_binary(sha2(concat(col(idCol).cast("string"),
-      lit(":"), col(textCol)), 256), lit("hex")))
-
   /** The codec seam: one per-payload decode method, implementations are
     * Serializable so a codec instance ships once per task closure (the
     * same seam pattern as autoparser's LlmClient). Plug a JNI/javacv

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Semi-structured (JSON-string) column handling — every event pipeline
@@ -12,25 +12,6 @@ import org.apache.spark.sql.functions._
   * the PERMISSIVE contract.
   */
 object Semistructured {
-
-  /** Parse `jsonCol` against the DDL schema and flatten its fields as
-    * top-level columns (original columns kept, `jsonCol` dropped).
-    * Malformed JSON yields nulls in every extracted field. */
-  def extractJson(df: DataFrame, jsonCol: String, schemaDdl: String): DataFrame = {
-    val parsed = from_json(col(jsonCol), schemaDdl,
-      Map.empty[String, String].asJava)
-    df.withColumn("__j", parsed)
-      .select((df.columns.filterNot(_ == jsonCol).map(col)
-        :+ col("__j.*")): _*)
-  }
-
-  private implicit class MapOps(m: Map[String, String]) {
-    def asJava: java.util.Map[String, String] = {
-      val jm = new java.util.HashMap[String, String]()
-      m.foreach { case (k, v) => jm.put(k, v) }
-      jm
-    }
-  }
 
   /** Typed per-group stats over one numeric JSON property: count,
     * null/malformed count, exact integer sum/min/max. All-integer

@@ -76,25 +76,6 @@ object Sketch {
       .orderBy(col("est_count").desc, col("token")).limit(k)
   }
 
-  /** Count-Min counter CELLS as a data-frame aggregation — the form that
-    * runs UNCHANGED as a streaming stateful aggregation: per token
-    * instance, `depth` (row, bucket) cell hits, cell-wise counts. State
-    * is bounded at depth×width rows REGARDLESS of vocabulary size — the
-    * frequency tracker one can leave running on an unbounded stream,
-    * where a `groupBy(token)` would grow state with the vocab forever.
-    * Batch and stream (complete mode) produce identical grids
-    * (the cell sum is the CMS merge — order-free); the batch==stream pin
-    * lives in OpsSpec, and [[cmsHeavyHitters]]'s gate covers the
-    * estimate math the grid feeds. */
-  def cmsCells(corpus: DataFrame, textCol: String,
-      depth: Int = 4, width: Int = 512): DataFrame = {
-    require(depth >= 1 && width >= 1, s"bad sketch dims $depth x $width")
-    corpus.select(explode(TextAnalysis.tokens(col(textCol))).as("w"))
-      .select(posexplode(array((0 until depth).map(r =>
-        md5Long60(col("w"), s"cms$r") % width): _*)).as(Seq("row", "bucket")))
-      .groupBy("row", "bucket").agg(count(lit(1)).as("cell"))
-  }
-
   /** HyperLogLog registers + estimate of the distinct-token count per
     * group (Flajolet et al. 2007, m = 64 registers): token hash h (60
     * bits) splits into register index `h mod 64` and a 54-bit suffix
@@ -301,26 +282,9 @@ object Sketch {
         count(lit(1)).as("n_total"))
   }
 
-  /** Re-merge persisted shard sketches (rows of (grp, sketch, n_total)
-    * from [[bottomKSketch]], possibly keyed by a FINER grouping) into
-    * one sketch per `grp` — explode + the same O(k) bottom-k agg;
-    * n_total sums. Merged ≡ sketching the union directly (pinned). */
-  def mergeBottomKSketches(sketches: DataFrame, k: Int): DataFrame = {
-    val spark = sketches.sparkSession
-    val merged = sketches
-      .select(col("grp"), explode(col("sketch")).as("__item"))
-      .groupBy("grp")
-      .agg(graft.functions.BottomKStructAgg
-        .bottomK(spark, col("__item"), k).as("sketch"))
-    val totals = sketches.groupBy("grp")
-      .agg(sum(col("n_total")).cast("long").as("n_total"))
-    merged.join(totals, Seq("grp"))
-  }
-
   /** Quantile ESTIMATES from a sketch frame ((grp, sketch, n_total) rows
-    * of [[bottomKSketch]] / [[mergeBottomKSketches]]): for each q, the
-    * sample value at rank max(1, ⌈q·m⌉) in (v, id) order, m = sample
-    * size. Deterministic pick-an-existing-value semantics (no
+    * of [[bottomKSketch]]): for each q, the sample value at rank
+    * max(1, ⌈q·m⌉) in (v, id) order, m = sample size. Deterministic pick-an-existing-value semantics (no
     * interpolation — engines' interpolated quantiles diverge); the only
     * window runs over the ≤k-row exploded sample per group (bounded by
     * the sketch size, never the data). */

@@ -4,11 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
-/** Structured Streaming operators over the events shape: watermarked
-  * tumbling-window aggregation and stateful sessionization. The batch
-  * equivalents (same expressions on a static frame) are what the
-  * correctness gate pins; the streaming forms run in tests via the memory
-  * sink.
+/** Event-time operators over the events shape: tumbling and sliding
+  * window stats, lag-window sessionization and the attribution interval
+  * join (batch forms, each a gate), plus one Structured Streaming
+  * operator, [[sessionRowsStream]], that the q_session_rows_stream gate
+  * replays end to end through the memory sink.
   */
 object Streaming extends Serializable {
 
@@ -37,120 +37,6 @@ object Streaming extends Serializable {
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
         col("event_type"), col("n"), col("total_value"))
 
-  /** Streaming form: parquet source → watermark → windowed agg → memory
-    * sink (update mode). Returns the started query; callers use
-    * processAllAvailable() + the named in-memory table. */
-  def windowStatsStream(spark: SparkSession, sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType, windowLen: String,
-      queryName: String): StreamingQuery = {
-    val events = spark.readStream.schema(schema).parquet(sourceDir)
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), windowLen), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("event_type"), col("n"))
-      .writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** Streaming exact dedup — the streaming counterpart of
-    * Dedup.dropExactDuplicates: fingerprint each document (16-byte
-    * canonical md5, same kernel as the batch path) and keep the FIRST
-    * arrival per fingerprint. State is BOUNDED by the event-time watermark
-    * (dropDuplicatesWithinWatermark): a fingerprint's state is dropped once
-    * the watermark passes its event time plus the horizon — the only state
-    * contract that survives an unbounded stream. Duplicates separated by
-    * more than the horizon re-emit; at 100 TB/day the horizon trades state
-    * size against cross-horizon duplicate leakage, and a periodic batch
-    * dropExactDuplicates over the sink closes the remainder. Stateless
-    * columns pass through unchanged. */
-  def dedupStream(docs: DataFrame, textCol: String,
-      tsCol: String, horizon: String): DataFrame =
-    docs
-      .withColumn("fp", TextAnalysis.fingerprint(col(textCol)))
-      .withWatermark(tsCol, horizon)
-      .dropDuplicatesWithinWatermark("fp")
-
-  /** Composed streaming ingest: Unicode canonicalization
-    * ([[TextAnalysis.unicodeClean]] — so composed/decomposed forms of one
-    * text dedup together) → stateless quality gate (min token count +
-    * min distinct-token ratio, the Gopher-lite pair) → watermarked exact
-    * dedup on the CLEANED text. Every pre-dedup stage is a stateless
-    * kernel, so the batch form ([[ingestBatch]]) keeps the identical
-    * survivor fingerprint set — the OpsSpec batch==stream pin. Chain
-    * [[idempotentParquetSink]] on the result for exactly-once landing. */
-  def ingestStream(docs: DataFrame, textCol: String, tsCol: String,
-      horizon: String, minTokens: Int = 5,
-      minDistinctRatio: Double = 0.1): DataFrame =
-    dedupStream(cleanAndFilter(docs, textCol, minTokens, minDistinctRatio),
-      textCol, tsCol, horizon)
-
-  /** Batch twin of [[ingestStream]] (same kernels, batch exact dedup). */
-  def ingestBatch(docs: DataFrame, idCol: String, textCol: String,
-      minTokens: Int = 5, minDistinctRatio: Double = 0.1): DataFrame =
-    Dedup.dropExactDuplicates(
-      cleanAndFilter(docs, textCol, minTokens, minDistinctRatio),
-      idCol, textCol)
-
-  private def cleanAndFilter(docs: DataFrame, textCol: String,
-      minTokens: Int, minDistinctRatio: Double): DataFrame = {
-    val cleaned = TextAnalysis.unicodeClean(col(textCol))
-    docs.withColumn(textCol, cleaned)
-      .filter(TextAnalysis.tokenCount(col(textCol)) >= minTokens &&
-        TextAnalysis.distinctRatio(col(textCol)) >= minDistinctRatio)
-  }
-
-  final case class Sess(userId: Long, nEvents: Long, firstTs: Long, lastTs: Long)
-
-  final case class UserRunningState(nEvents: Long, totalValueCents: Long)
-  final case class UserRunning(user_id: Long, n_events: Long, total_value: Double)
-
-  /** True streaming custom state: per-user running totals via
-    * flatMapGroupsWithState (update mode). Value cents accumulate as longs
-    * so state merges are exact.
-    *
-    * `idleTimeout` (e.g. "1 hour"): processing-time state TTL — a user
-    * idle for that long since their last update is evicted (state removed,
-    * nothing emitted), so state stays bounded by the ACTIVE user set on an
-    * unbounded user space. A returning user restarts from zero; size the
-    * TTL to the horizon within which totals must stay exact. None (the
-    * default) keeps state per user forever — bounded by user cardinality,
-    * the gate-scale configuration. */
-  def runningUserTotalsStream(spark: SparkSession, sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      queryName: String, idleTimeout: Option[String] = None): StreamingQuery = {
-    import spark.implicits._
-    val events = spark.readStream.schema(schema).parquet(sourceDir)
-      .select(col("user_id").cast("long").as("uid"),
-        round(col("value") * 100).cast("long").as("cents"))
-      .as[(Long, Long)]
-
-    def update(uid: Long, batch: Iterator[(Long, Long)],
-        state: GroupState[UserRunningState]): Iterator[UserRunning] = {
-      if (state.hasTimedOut) { state.remove(); Iterator.empty }
-      else {
-        val prev = state.getOption.getOrElse(UserRunningState(0L, 0L))
-        var n = prev.nEvents
-        var cents = prev.totalValueCents
-        batch.foreach { case (_, c) => n += 1; cents += c }
-        state.update(UserRunningState(n, cents))
-        idleTimeout.foreach(state.setTimeoutDuration)
-        Iterator.single(UserRunning(uid, n, cents / 100.0))
-      }
-    }
-
-    events.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update(),
-        if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-        else GroupStateTimeout.NoTimeout())(update)
-      .writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
   /** Batch sessionization via a lag window: a session starts wherever the
     * gap from the user's previous event exceeds gapSeconds. One shuffle +
     * sort-based window — no per-group materialization, so a mega-user
@@ -168,84 +54,6 @@ object Streaming extends Serializable {
       .agg(sum("new_sess").as("n_sessions"), count(lit(1)).as("n_events"))
   }
 
-  final case class SessState(lastTs: Long, nSessions: Long, nEvents: Long)
-
-  /** Streaming sessionization with BOUNDED state: per user, GroupState
-    * holds only (lastTs, counters); each micro-batch's events sort within
-    * the batch (memory bounded by batch size, never by user history) and
-    * fold into the state. Emits the running (n_sessions, n_events) per
-    * user in update mode. Late events older than lastTs are counted into
-    * the current session (use a watermark upstream to bound lateness).
-    *
-    * `idleTimeoutSeconds`: EVENT-TIME state TTL — a user's state is
-    * evicted once the watermark passes lastTs + TTL, bounding state by the
-    * ACTIVE user set instead of the all-time user space (the dedup path's
-    * watermark contract, applied to custom state). Requires a watermark on
-    * `events`' ts column. A user returning after the TTL restarts at
-    * session 1 — counts within the horizon are unaffected (eviction fires
-    * only once the watermark proves no in-horizon event can still
-    * arrive). */
-  def sessionizeStream(spark: SparkSession, events: DataFrame,
-      gapSeconds: Long, idleTimeoutSeconds: Option[Long] = None): DataFrame = {
-    import spark.implicits._
-
-    // shared per-group fold: sort the batch, fold into (lastTs, counters)
-    def fold(epochs: Array[Long], state: GroupState[SessState]): SessState = {
-      java.util.Arrays.sort(epochs)
-      val prev = state.getOption.getOrElse(
-        SessState(Long.MinValue / 4, 0L, 0L)) // avoid t - MinValue overflow
-      var last = prev.lastTs
-      var sessions = prev.nSessions
-      var n = prev.nEvents
-      epochs.foreach { t =>
-        if (t - last > gapSeconds) sessions += 1
-        if (t > last) last = t
-        n += 1
-      }
-      val next = SessState(last, sessions, n)
-      state.update(next)
-      next
-    }
-
-    idleTimeoutSeconds match {
-      case None =>
-        events.select(col("user_id").cast("long"),
-            unix_timestamp(col("ts")).as("epoch")).as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroupsWithState(OutputMode.Update(),
-            GroupStateTimeout.NoTimeout()) {
-            (uid: Long, it: Iterator[(Long, Long)],
-                state: GroupState[SessState]) =>
-              val s = fold(it.map(_._2).toArray, state)
-              Iterator.single((uid, s.nSessions, s.nEvents))
-          }
-          .toDF("user_id", "n_sessions", "n_events")
-      case Some(ttl) =>
-        // the watermarked ts column must ride through to the stateful
-        // operator — Spark ties event-time timeout to that attribute
-        events.select(col("user_id").cast("long"),
-            unix_timestamp(col("ts")).as("epoch"), col("ts"))
-          .as[(Long, Long, java.sql.Timestamp)]
-          .groupByKey(_._1)
-          .flatMapGroupsWithState(OutputMode.Update(),
-            GroupStateTimeout.EventTimeTimeout()) {
-            (uid: Long, it: Iterator[(Long, Long, java.sql.Timestamp)],
-                state: GroupState[SessState]) =>
-              if (state.hasTimedOut) { state.remove(); Iterator.empty }
-              else {
-                val s = fold(it.map(_._2).toArray, state)
-                // evict at lastTs + TTL; must sit strictly past the
-                // current watermark or Spark rejects the timestamp
-                state.setTimeoutTimestamp(math.max(
-                  state.getCurrentWatermarkMs() + 1000L,
-                  s.lastTs * 1000L + ttl * 1000L))
-                Iterator.single((uid, s.nSessions, s.nEvents))
-              }
-          }
-          .toDF("user_id", "n_sessions", "n_events")
-    }
-  }
-
   final case class SessRowState(sid: Long, startUs: Long, lastUs: Long,
     n: Long)
   final case class SessRow(user_id: Long, session_id: Long,
@@ -253,15 +61,14 @@ object Streaming extends Serializable {
     duration_us: Long)
 
   /** STREAMING twin of [[graft.ops.Behavior.sessionize]] — per-SESSION
-    * rows, not per-user counts (that form is [[sessionizeStream]]): each
-    * user's state holds only the OPEN session (id, start, last, count);
-    * a session emits exactly once, when a strictly-later event past the
-    * gap closes it — so every emitted row is BIT-IDENTICAL to the batch
-    * operator's row for that session under arbitrary trigger boundaries
-    * (pinned batch==stream in OpsSpec over the closed sessions; each
-    * user's final session stays open until later data closes it — the
-    * [[ewmaStream]] open-bucket contract). Append output mode: closed
-    * sessions are immutable facts. State is O(1) per active user.
+    * rows: each user's state holds only the OPEN session (id, start,
+    * last, count); a session emits exactly once, when a strictly-later
+    * event past the gap closes it — so every emitted row is BIT-IDENTICAL
+    * to the batch operator's row for that session under arbitrary trigger
+    * boundaries (pinned batch==stream in OpsSpec over the closed sessions;
+    * each user's final session stays open until later data closes it).
+    * Append output mode: closed sessions are immutable facts. State is
+    * O(1) per active user.
     *
     * Lateness: an event at or before the open session's last timestamp
     * folds into the open session (count only) — the batch twin has no
@@ -309,36 +116,6 @@ object Streaming extends Serializable {
       .start()
   }
 
-  // ---- exactly-once foreachBatch sink --------------------------------------
-
-  /** Write one micro-batch to `outDir/batch_id=<id>` with overwrite — the
-    * idempotent-write half of the exactly-once recipe for
-    * non-transactional sinks: a batch REPLAYED after a failure or a
-    * restart-from-checkpoint lands in the same directory and rewrites it,
-    * never duplicates it. Factored out of the stream wiring so the replay
-    * path is directly testable. */
-  def writeBatchIdempotent(batch: DataFrame, outDir: String,
-      batchId: Long): Unit =
-    batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-
-  /** Exactly-once parquet sink via foreachBatch + idempotent batch-keyed
-    * overwrite. Structured Streaming's checkpoint gives at-least-once
-    * foreachBatch invocation with a STABLE batchId across replays; keying
-    * the write by that id and overwriting makes the pair exactly-once —
-    * the standard pattern for stores without transactional commit.
-    * Readers see the whole output as one partitioned table
-    * (`spark.read.parquet(outDir)` with `batch_id` as a partition
-    * column). */
-  def idempotentParquetSink(df: DataFrame, outDir: String,
-      checkpointDir: String, queryName: String): StreamingQuery =
-    df.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        writeBatchIdempotent(batch.toDF(), outDir, id)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .queryName(queryName)
-      .start()
-
   // ---- stream-stream interval (attribution) join ---------------------------
 
   /** Attribution interval join — batch form: every `leftType` event pairs
@@ -364,532 +141,5 @@ object Streaming extends Serializable {
         col("left_ts"), col("right_ts"),
         (unix_timestamp(col("left_ts")) - unix_timestamp(col("right_ts")))
           .as("lag_s"))
-  }
-
-  /** Streaming twin: a stream-stream inner join with watermarks on BOTH
-    * sides and the time-range condition — exactly what lets Structured
-    * Streaming bound the join state: the right (trigger) side's buffered
-    * rows are evicted once the watermark passes `lookbackSeconds` behind,
-    * the left side as soon as its watermark passes, so state is
-    * O(traffic × (lookback + watermark delay)) regardless of how long the
-    * streams run. Same output schema and rows as
-    * [[attributionJoinBatch]] (batch==stream pin in OpsSpec).
-    *
-    * `events` must be a streaming DataFrame with the events schema. */
-  def attributionJoinStream(events: DataFrame, leftType: String,
-      rightType: String, lookbackSeconds: Long,
-      watermark: String = "1 hour"): DataFrame = {
-    val l = events.filter(col("event_type") === leftType)
-      .select(col("event_id").as("left_id"), col("user_id"),
-        col("ts").as("left_ts"))
-      .withWatermark("left_ts", watermark)
-    val r = events.filter(col("event_type") === rightType)
-      .select(col("event_id").as("right_id"),
-        col("user_id").as("r_user_id"), col("ts").as("right_ts"))
-      .withWatermark("right_ts", watermark)
-    l.join(r,
-        col("user_id") === col("r_user_id") &&
-          col("right_ts") <= col("left_ts") &&
-          col("right_ts") > col("left_ts") - expr(s"INTERVAL $lookbackSeconds SECONDS"))
-      .select(col("left_id"), col("right_id"), col("user_id"),
-        col("left_ts"), col("right_ts"),
-        (unix_timestamp(col("left_ts")) - unix_timestamp(col("right_ts")))
-          .as("lag_s"))
-  }
-
-  final case class BkTri(h: Long, id: Long, v: Double)
-  final case class BkSketchState(n: Long, items: Seq[BkTri])
-  final case class BkSketchRow(grp: String, sketch: Seq[BkTri],
-    n_total: Long)
-
-  /** STREAMING form of the mergeable bottom-k quantile sketch
-    * ([[Sketch.bottomKSketch]]): per group, `flatMapGroupsWithState`
-    * maintains the k smallest-hash (h, id, v) triples across
-    * micro-batches — O(k) state per group by construction (the same
-    * [[graft.functions.BottomKBuf]] insertion window the batch aggregate
-    * uses), so the streaming ingest path keeps live per-source quantile
-    * sketches without ever buffering raw rows. Bottom-k insertion is
-    * order-independent, so after any micro-batch partitioning the state
-    * equals the batch sketch over the rows seen so far — pinned
-    * batch==stream (OpsSpec). Update mode emits the refreshed sketch row
-    * per group per batch; the hash salt matches the batch form, so
-    * persisted batch shard sketches and live stream sketches MERGE
-    * ([[Sketch.mergeBottomKSketches]]). */
-  def sketchStream(spark: SparkSession, sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType, groupCol: String,
-      idCol: String, valueCol: String, k: Int,
-      queryName: String): StreamingQuery = {
-    import spark.implicits._
-    require(k >= 1, s"k must be >= 1, got $k")
-    val rows = spark.readStream.schema(schema).parquet(sourceDir)
-      .select(col(groupCol).cast("string").as("g"),
-        Pipeline.md5Long60(col(idCol), "bkq").as("h"),
-        col(idCol).cast("long").as("i"),
-        col(valueCol).cast("double").as("v"))
-      .as[(String, Long, Long, Double)]
-
-    def update(g: String, batch: Iterator[(String, Long, Long, Double)],
-        state: GroupState[BkSketchState]): Iterator[BkSketchRow] = {
-      val prev = state.getOption.getOrElse(BkSketchState(0L, Nil))
-      val buf = new graft.functions.BottomKBuf(k)
-      prev.items.foreach(t => buf.insert(t.h, t.id, t.v))
-      var n = prev.n
-      batch.foreach { case (_, h, i, v) => n += 1; buf.insert(h, i, v) }
-      val items = (0 until buf.filled)
-        .map(j => BkTri(buf.hs(j), buf.ids(j), buf.vs(j)))
-      state.update(BkSketchState(n, items))
-      Iterator.single(BkSketchRow(g, items, n))
-    }
-
-    rows.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update(),
-        GroupStateTimeout.NoTimeout())(update)
-      .writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  // ---- streaming PSI drift monitor ------------------------------------
-
-  final case class PsiState(base: Seq[Long], cur: Seq[Long])
-  final case class PsiBinRow(g: String, bin: Int, bin_lo: Double,
-      n_base: Long, n_cur: Long, share_base: Double, share_cur: Double,
-      psi: Option[Double])
-
-  /** STREAMING twin of [[Stats.psiDrift]] — the live model-monitoring
-    * path ("did this feature drift since training?" as a standing
-    * query): per group, `flatMapGroupsWithState` keeps two `bins`-long
-    * count vectors (base/current snapshot) — O(bins) state, never raw
-    * rows — and re-emits the full per-bin PSI readout after each
-    * micro-batch. Count accumulation is order-independent, so after any
-    * micro-batch partitioning the emitted rows equal the batch
-    * [[Stats.psiDrift]] over the rows seen so far — pinned
-    * batch==stream (OpsSpec). Exactness parity with the batch form:
-    * scala BigDecimal HALF_UP mirrors Spark's round() (both quantize
-    * the double's shortest decimal form), shares round at 9 dp before
-    * the ln, terms at 10 dp, and the term sum runs over exact
-    * BigDecimals like the batch DECIMAL(28,14) sum; one-sided groups
-    * emit null psi, same as batch. */
-  def psiDriftStream(spark: SparkSession, sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType, valueCol: String,
-      groupCol: String, snapshotCol: String, baseLabel: String,
-      currentLabel: String, lo: Double, hi: Double, bins: Int,
-      minShare: Double, queryName: String): StreamingQuery = {
-    import spark.implicits._
-    require(bins >= 1, s"bins must be >= 1, got $bins")
-    require(lo < hi, s"need lo < hi, got [$lo, $hi]")
-    require(minShare > 0.0 && minShare < 1.0,
-      s"minShare must be in (0, 1), got $minShare")
-    def r(x: Double, d: Int): Double =
-      BigDecimal(x).setScale(d, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val width = (hi - lo) / bins.toDouble
-    val rows = spark.readStream.schema(schema).parquet(sourceDir)
-      .filter(col(snapshotCol).isin(baseLabel, currentLabel) &&
-        col(valueCol).cast("double") >= lo &&
-        col(valueCol).cast("double") <= hi)
-      .select(col(groupCol).cast("string").as("g"),
-        col(snapshotCol).cast("string").as("s"),
-        col(valueCol).cast("double").as("v"))
-      .as[(String, String, Double)]
-
-    def update(g: String, batch: Iterator[(String, String, Double)],
-        state: GroupState[PsiState]): Iterator[PsiBinRow] = {
-      val prev = state.getOption.getOrElse(
-        PsiState(Seq.fill(bins)(0L), Seq.fill(bins)(0L)))
-      val base = prev.base.toArray
-      val cur = prev.cur.toArray
-      batch.foreach { case (_, s, v) =>
-        val bin = if (v == hi) bins - 1
-          else math.min(
-            math.floor((v - lo) * bins.toDouble / (hi - lo)).toInt, bins - 1)
-        if (s == baseLabel) base(bin) += 1L else cur(bin) += 1L
-      }
-      state.update(PsiState(base.toSeq, cur.toSeq))
-      val tb = base.sum
-      val tc = cur.sum
-      def share(n: Long, tot: Long): Double =
-        math.max(if (tot > 0L) r(n.toDouble / tot.toDouble, 9) else 0.0,
-          minShare)
-      val terms = (0 until bins).map { b =>
-        val sb = share(base(b), tb)
-        val sc = share(cur(b), tc)
-        BigDecimal(r((sc - sb) * math.log(sc / sb), 10))
-      }
-      val psi =
-        if (tb > 0L && tc > 0L) Some(r(terms.sum.toDouble, 6)) else None
-      (0 until bins).iterator.map { b =>
-        PsiBinRow(g, b, r(lo + b * width, 6), base(b), cur(b),
-          share(base(b), tb), share(cur(b), tc), psi)
-      }
-    }
-
-    rows.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update(),
-        GroupStateTimeout.NoTimeout())(update)
-      .writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  // ---- streaming KS / JSD drift monitors --------------------------------
-
-  /** Two-snapshot count state shared by [[ksTwoSampleStream]] (keys are
-    * the stringified distinct VALUES) and [[jsDivergenceStream]] (keys
-    * are the categories): two count maps, never raw rows. For KS over a
-    * continuous feature the map is value-domain-sized — quantize the
-    * feature upstream for a long-lived monitor (the batch operator's
-    * shuffle holds the same domain, so the twin's state bound equals
-    * the batch cost model). */
-  final case class TwoSampleState(base: Map[String, Long],
-      cur: Map[String, Long])
-  final case class KsRow(g: String, n_base: Long, n_cur: Long,
-      ks_d: Option[Double], ks_crit: Option[Double],
-      drifted: Option[Boolean])
-  final case class JsdRow(g: String, n_base: Long, n_cur: Long,
-      n_categories: Long, jsd: Option[Double])
-
-  /** STREAMING twin of [[Stats.ksTwoSample]] — the live drift monitor
-    * beside [[psiDriftStream]] (round-11 verdict asked for the same
-    * machinery on the remaining monitors; KS is the binless two-sample
-    * test, so the state is the per-group (value → base/cur count) map).
-    * After each micro-batch the full ECDF gap replays from state —
-    * cumulative exact integer counts, one IEEE division per side per
-    * distinct value, max, 6-dp HALF_UP round — so the emitted row is
-    * BIT-IDENTICAL to the batch operator over the rows seen so far
-    * (pinned batch==stream in OpsSpec). One-sided groups emit null
-    * ks_d/ks_crit/drifted, same as batch. */
-  def ksTwoSampleStream(spark: SparkSession, sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType, valueCol: String,
-      groupCol: String, snapshotCol: String, baseLabel: String,
-      currentLabel: String, critical: Double,
-      queryName: String): StreamingQuery = {
-    import spark.implicits._
-    require(critical > 0.0, s"critical must be > 0, got $critical")
-    def r(x: Double, d: Int): Double =
-      BigDecimal(x).setScale(d, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val rows = spark.readStream.schema(schema).parquet(sourceDir)
-      .filter(col(snapshotCol).isin(baseLabel, currentLabel) &&
-        col(valueCol).isNotNull)
-      .select(col(groupCol).cast("string").as("g"),
-        col(snapshotCol).cast("string").as("s"),
-        col(valueCol).cast("double").as("v"))
-      .as[(String, String, Double)]
-
-    def update(g: String, batch: Iterator[(String, String, Double)],
-        state: GroupState[TwoSampleState]): Iterator[KsRow] = {
-      val prev = state.getOption.getOrElse(
-        TwoSampleState(Map.empty, Map.empty))
-      var base = prev.base
-      var cur = prev.cur
-      batch.foreach { case (_, s, v) =>
-        // normalize -0.0 → 0.0 before keying: Spark's groupBy normalizes
-        // negative zero, so the batch ECDF has ONE step point at 0.0 —
-        // a "-0.0" state key would split it and break the pinned
-        // batch==stream bit-identity (round-12 advice)
-        val vn = if (v == 0.0) 0.0 else v
-        val k = vn.toString
-        if (s == baseLabel) base = base.updated(k, base.getOrElse(k, 0L) + 1L)
-        else cur = cur.updated(k, cur.getOrElse(k, 0L) + 1L)
-      }
-      state.update(TwoSampleState(base, cur))
-      val tb = base.values.sum
-      val tc = cur.values.sum
-      val both = tb > 0L && tc > 0L
-      var ksD = Option.empty[Double]
-      if (both) {
-        val vals = (base.keySet ++ cur.keySet).toSeq.map(_.toDouble).sorted
-        var cb = 0L
-        var cc = 0L
-        var maxD = Double.NegativeInfinity
-        vals.foreach { v =>
-          val k = v.toString
-          cb += base.getOrElse(k, 0L)
-          cc += cur.getOrElse(k, 0L)
-          val d = math.abs(cb.toDouble / tb.toDouble -
-            cc.toDouble / tc.toDouble)
-          if (d > maxD) maxD = d
-        }
-        if (vals.nonEmpty) ksD = Some(r(maxD, 6))
-      }
-      val crit = if (both)
-        Some(r(critical * math.sqrt((tb.toDouble + tc.toDouble) /
-          (tb.toDouble * tc.toDouble)), 6))
-      else None
-      val drifted = for (d <- ksD; c <- crit) yield d > c
-      Iterator.single(KsRow(g, tb, tc, ksD, crit, drifted))
-    }
-
-    rows.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update(),
-        GroupStateTimeout.NoTimeout())(update)
-      .writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** STREAMING twin of [[Stats.jsDivergence]] — the bounded-[0,1]
-    * categorical drift monitor as a standing query: per-group state is
-    * the (category → base/cur count) pair of maps; after each
-    * micro-batch the JSD replays from state with the batch operator's
-    * exact quantization ladder (9-dp shares, 9-dp midpoint, 10-dp KL
-    * terms summed as exact BigDecimals like the batch DECIMAL(28,14)
-    * column, ÷ln2 and 6-dp render at the edge) — pinned batch==stream
-    * in OpsSpec. One-sided groups emit null jsd, same as batch. */
-  def jsDivergenceStream(spark: SparkSession, sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType, categoryCol: String,
-      groupCol: String, snapshotCol: String, baseLabel: String,
-      currentLabel: String, queryName: String): StreamingQuery = {
-    import spark.implicits._
-    def r(x: Double, d: Int): Double =
-      BigDecimal(x).setScale(d, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val rows = spark.readStream.schema(schema).parquet(sourceDir)
-      .filter(col(snapshotCol).isin(baseLabel, currentLabel) &&
-        col(categoryCol).isNotNull)
-      .select(col(groupCol).cast("string").as("g"),
-        col(snapshotCol).cast("string").as("s"),
-        col(categoryCol).cast("string").as("cat"))
-      .as[(String, String, String)]
-
-    def update(g: String, batch: Iterator[(String, String, String)],
-        state: GroupState[TwoSampleState]): Iterator[JsdRow] = {
-      val prev = state.getOption.getOrElse(
-        TwoSampleState(Map.empty, Map.empty))
-      var base = prev.base
-      var cur = prev.cur
-      batch.foreach { case (_, s, c) =>
-        if (s == baseLabel) base = base.updated(c, base.getOrElse(c, 0L) + 1L)
-        else cur = cur.updated(c, cur.getOrElse(c, 0L) + 1L)
-      }
-      state.update(TwoSampleState(base, cur))
-      val tb = base.values.sum
-      val tc = cur.values.sum
-      val cats = base.keySet ++ cur.keySet
-      def share(n: Long, tot: Long): Double =
-        if (tot > 0L) r(n.toDouble / tot.toDouble, 9) else 0.0
-      def klTerm(p: Double, m: Double): BigDecimal =
-        if (p > 0.0) BigDecimal(r(p * math.log(p / m), 10))
-        else BigDecimal(0)
-      var sumP = BigDecimal(0)
-      var sumQ = BigDecimal(0)
-      cats.foreach { c =>
-        val p = share(base.getOrElse(c, 0L), tb)
-        val q = share(cur.getOrElse(c, 0L), tc)
-        val m = r((p + q) * 0.5, 9)
-        sumP += klTerm(p, m)
-        sumQ += klTerm(q, m)
-      }
-      val jsd = if (tb > 0L && tc > 0L)
-        Some(r((sumP.toDouble + sumQ.toDouble) * 0.5 / Stats.Ln2, 6))
-      else None
-      Iterator.single(JsdRow(g, tb, tc, cats.size.toLong, jsd))
-    }
-
-    rows.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update(),
-        GroupStateTimeout.NoTimeout())(update)
-      .writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  // ---- streaming EWMA twin ------------------------------------------------
-
-  /** EWMA carry state: whether anything has been emitted, the last
-    * emitted bucket start and smoothed value in 6-dp micro-units (exact
-    * integers — the decimal recursion state survives checkpoints
-    * without float drift), plus the still-OPEN maximal bucket's partial
-    * 2-dp cent sum. Holding the open bucket in state is what makes the
-    * twin correct under ARBITRARY trigger boundaries: a bucket that
-    * straddles two micro-batches accumulates exactly instead of the
-    * first batch's emission silently discarding the tail as late. */
-  /** `a3` = the stream's alpha in exact milli-units (3 dp × 1000):
-    * persisted so a restart or terminal flush with a DIFFERENT alpha
-    * fails loudly instead of silently emitting wrong smoothed rows
-    * (round-15, per the round-14 advice). */
-  final case class EwmaState(hasEmitted: Boolean, lastB: Long, e6: Long,
-      openB: Long, openV2: Long, a3: Long)
-  final case class EwmaRow(g: String, b: Long, x: Double, ewma: Double,
-      residual: Double)
-
-  /** The pure per-key fold shared by [[ewmaStream]] and its multi-batch
-    * unit tests: merge the carried OPEN bucket's partial cent sum into
-    * this batch's (bucket → 2-dp value-cents) observations, drop truly
-    * LATE buckets (≤ the last emitted — the pinned policy: a monitoring
-    * EWMA never rewrites emitted history), then zero-fill and apply
-    * eᵢ = round(α·xᵢ + (1−α)·eᵢ₋₁, 6) per step (exact BigDecimal,
-    * HALF_UP — bit-identical to [[graft.ops.Behavior.ewma]]'s lambda)
-    * for every bucket STRICTLY BELOW the maximal observed bucket. The
-    * maximal bucket stays open in the returned state: with incremental
-    * triggers the current bucket almost always straddles a batch
-    * boundary, and emitting it early would silently lose its tail. A
-    * bucket closes (emits) when any strictly-later bucket arrives. */
-  private[ops] def ewmaFold(g: String, alpha: BigDecimal,
-      stepSeconds: Long, state: Option[EwmaState],
-      obs: Map[Long, Long]): (Option[EwmaState], Seq[EwmaRow]) = {
-    val a3 = (alpha * 1000).toLongExact
-    state.foreach(s => require(s.a3 == a3,
-      s"ewma state for key '$g' was written with alpha=${s.a3 / 1000.0} " +
-        s"but this run uses alpha=${a3 / 1000.0} — resuming a checkpoint " +
-        "with a different alpha would silently change every smoothed row"))
-    val merged = state match {
-      case Some(s) =>
-        obs.updated(s.openB, obs.getOrElse(s.openB, 0L) + s.openV2)
-      case None => obs
-    }
-    val live = state match {
-      case Some(s) if s.hasEmitted =>
-        merged.filter { case (b, _) => b > s.lastB }
-      case _ => merged
-    }
-    if (live.isEmpty) (state, Nil)
-    else {
-      val hi = live.keys.max // the still-open bucket — held, not emitted
-      val a1 = BigDecimal(1) - alpha
-      val out = Seq.newBuilder[EwmaRow]
-      var (emitted, lastB, e6) = state match {
-        case Some(s) => (s.hasEmitted, s.lastB, s.e6)
-        case None => (false, 0L, 0L)
-      }
-      var b = if (emitted) lastB + stepSeconds else live.keys.min
-      while (b < hi) {
-        val x = BigDecimal(live.getOrElse(b, 0L), 2)
-        val e: BigDecimal =
-          if (!emitted) x.setScale(6)
-          else (alpha * x + a1 * BigDecimal(e6, 6))
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP)
-        out += EwmaRow(g, b, x.toDouble, e.toDouble, (x - e).toDouble)
-        emitted = true
-        lastB = b
-        e6 = (e * 1000000).toLongExact
-        b += stepSeconds
-      }
-      (Some(EwmaState(emitted, lastB, e6, hi, live(hi), a3)), out.result())
-    }
-  }
-
-  /** STREAMING twin of [[graft.ops.Behavior.ewma]] — the live form of
-    * the monitoring smoother (batches fold through [[ewmaFold]]'s exact
-    * decimal recursion; the per-key state carries the last emitted
-    * bucket/value plus the OPEN maximal bucket's partial sum). A bucket
-    * only emits once a strictly LATER bucket arrives — so every emitted
-    * row is BIT-IDENTICAL to the batch operator's row for that bucket
-    * under ARBITRARY trigger boundaries (pinned batch==stream over the
-    * closed buckets; the sole difference from batch output is each
-    * key's final bucket, which stays open until later data closes it —
-    * on a live monitor the current wall-clock bucket is always open).
-    * Late buckets (≤ the last emitted) drop — a monitoring EWMA never
-    * rewrites emitted history; gaps zero-fill exactly as the batch
-    * grid does.
-    *
-    * CHANGE NOTE (round 12 → 13, per round-12 advice): before the
-    * open-bucket state, the maximal bucket emitted immediately (and its
-    * straddled tail was silently lost). Consumers running FINITE
-    * backfills under `Trigger.AvailableNow` now see one fewer row per
-    * key — the terminal run ends with each key's last bucket still
-    * open. Round 14 closes that loop (round-13 verdict item 4): pass
-    * `checkpointDir` and, after the terminal run completes, call
-    * [[ewmaFlushOpen]] — it reads the CHECKPOINTED per-key state (the
-    * state store is the source of truth a restart would resume from)
-    * and emits each key's open bucket exactly as the next fold step
-    * would, so closed rows stay bit-identical to batch and
-    * closed + flushed == the full batch grid. A live monitor needs
-    * neither — wall-clock data closes every bucket eventually. */
-  def ewmaStream(spark: SparkSession, sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType, keyCol: String,
-      tsCol: String, valueCol: String, stepSeconds: Long, alpha: Double,
-      queryName: String, checkpointDir: Option[String] = None)
-      : StreamingQuery = {
-    import spark.implicits._
-    val a = BigDecimal(alpha).setScale(3, BigDecimal.RoundingMode.HALF_UP)
-    require(a > 0 && a < 1, s"alpha must be in (0,1) at 3 dp, got $alpha")
-    val rows = spark.readStream.schema(schema).parquet(sourceDir)
-      .select(col(keyCol).cast("string").as("g"),
-        (floor(unix_timestamp(col(tsCol)).cast("double") /
-          lit(stepSeconds.toDouble)).cast("long") * stepSeconds).as("b"),
-        // 2-dp cents, matching the batch op's DECIMAL(14,2) quantize
-        col(valueCol).cast("decimal(14,2)").cast("decimal(18,2)")
-          .multiply(lit(100)).cast("long").as("v2"))
-      .as[(String, Long, Long)]
-
-    def update(g: String, batch: Iterator[(String, Long, Long)],
-        state: GroupState[EwmaState]): Iterator[EwmaRow] = {
-      val obs = batch.foldLeft(Map.empty[Long, Long]) {
-        case (m, (_, b, v2)) => m.updated(b, m.getOrElse(b, 0L) + v2)
-      }
-      val (next, out) = ewmaFold(g, a, stepSeconds, state.getOption, obs)
-      next.foreach(state.update)
-      out.iterator
-    }
-
-    val writer = rows.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update(),
-        GroupStateTimeout.NoTimeout())(update)
-      .writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-    checkpointDir.foreach(d => writer.option("checkpointLocation", d))
-    writer.start()
-  }
-
-  /** TERMINAL-RUN FLUSH for [[ewmaStream]] (the round-13 verdict's
-    * flushOpen): after a finite / Trigger.AvailableNow run completes,
-    * every key's maximal bucket is still held open in state (the
-    * open-bucket contract that makes closed rows trigger-invariant).
-    * This reads that state back from the query's CHECKPOINT via the
-    * state-store data source — the same bytes a restarted query would
-    * resume from, so the flush cannot disagree with the stream — and
-    * applies ONE step of the exact decimal recursion to each open
-    * bucket: e = x (6 dp) for a key that never emitted, else
-    * round(α·x + (1−α)·e_last, 6). Appending these rows to the sink's
-    * closed rows reproduces the batch operator's FULL grid; the stream
-    * itself is untouched, so batch==stream on closed buckets still
-    * holds. Driver-light: one scan of the state store (rows = live
-    * keys), no shuffle. */
-  def ewmaFlushOpen(spark: SparkSession, checkpointDir: String,
-      alpha: Double): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    val a = BigDecimal(alpha).setScale(3, BigDecimal.RoundingMode.HALF_UP)
-    require(a > 0 && a < 1, s"alpha must be in (0,1) at 3 dp, got $alpha")
-    val a3 = (a * 1000).toLongExact
-    // fail FAST on an empty/uncommitted checkpoint: the statestore source
-    // otherwise surfaces an opaque internal error for what is really
-    // "this query never committed a batch"
-    val commits = new org.apache.hadoop.fs.Path(checkpointDir, "commits")
-    val fs = commits.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(commits) && fs.listStatus(commits)
-        .exists(st => !st.getPath.getName.startsWith(".")),
-      s"ewmaFlushOpen: no committed batch under $checkpointDir/commits — " +
-        "run the stream (Trigger.AvailableNow) to completion before " +
-        "flushing its open buckets")
-    val st = spark.read.format("statestore")
-      .option("path", checkpointDir).load()
-    // key = the groupByKey String (single-field struct); value = EwmaState
-    st.select(col("key").getField("value").as("g"),
-        col("value.groupState.hasEmitted").as("he"),
-        col("value.groupState.e6").as("e6"),
-        col("value.groupState.openB").as("b"),
-        col("value.groupState.openV2").as("v2"),
-        col("value.groupState.a3").as("a3"))
-      .as[(String, Boolean, Long, Long, Long, Long)]
-      .map { case (g, hasEmitted, e6, b, v2, stateA3) =>
-        // alpha is persisted in state (3-dp milli-units): a flush called
-        // with a different alpha than the stream ran with must fail, not
-        // emit silently wrong rows
-        if (stateA3 != a3) throw new IllegalArgumentException(
-          s"ewmaFlushOpen: checkpoint state was written with alpha=" +
-            s"${stateA3 / 1000.0} but the flush was called with alpha=" +
-            s"${a3 / 1000.0}")
-        val x = BigDecimal(v2, 2)
-        val e: BigDecimal =
-          if (!hasEmitted) x.setScale(6)
-          else (a * x + (BigDecimal(1) - a) * BigDecimal(e6, 6))
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP)
-        EwmaRow(g, b, x.toDouble, e.toDouble, (x - e).toDouble)
-      }
-      .toDF()
   }
 }

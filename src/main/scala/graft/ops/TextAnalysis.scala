@@ -422,19 +422,6 @@ object TextAnalysis {
     corpus.join(broadcast(contaminated), Seq(idCol), "left_anti")
   }
 
-  /** Stateless streaming form: eval fingerprints ride as a literal array
-    * (eval sets are bounded — collect them once with
-    * `winnowFingerprints(eval...).select("fp").distinct()`), so the filter
-    * is a pure per-row expression, safe in any streaming output mode with
-    * no state store. size(array_intersect) counts shared fingerprints
-    * because winnow output is distinct per document. */
-  def decontaminateFilter(text: Column, evalFps: Seq[Long],
-      k: Int = 16, w: Int = 16, minShared: Int = 3): Column =
-    size(array_intersect(
-      graft.functions.WinnowExprs.winnow(
-        org.apache.spark.sql.SparkSession.active, text, k, w),
-      typedlit(evalFps))) < minShared
-
   /** Document-overlap (contamination) pairs by shared winnowed
     * fingerprints: pairs sharing at least `minShared` fingerprints, with
     * the shared count. The inverted-index self-join runs on skinny
@@ -1208,30 +1195,6 @@ object TextAnalysis {
           col("__s.n"), 6)).as("ttr"),
         when(col("__s.types") > 0, round(col("__s.hapax").cast("double") /
           col("__s.types"), 6)).as("hapax_ratio"))
-  }
-
-  /** Compression-ratio quality signal: DEFLATE(text)/bytes(text) — the
-    * codec-level redundancy detector (template spam and boilerplate
-    * compress far below prose; OCR noise barely compresses at all), the
-    * cheap sibling of [[repetitionStats]] that catches long-period
-    * repetition n-gram folds structurally miss. One kernel projection
-    * ([[graft.functions.CompressExprs]] — static-call codegen, no UDF),
-    * zero shuffles, streaming-safe. `keep` bounds the ratio two-sided:
-    * below `minRatio` = degenerate repetition, above `maxRatio` =
-    * incompressible noise. Empty docs emit null ratio and keep=false.
-    * Kernel signal — evidence is spec pins, not a DuckDB gate (no zlib
-    * on the oracle side). */
-  def compressionRatio(df: DataFrame, idCol: String, textCol: String,
-      minRatio: Double = 0.25, maxRatio: Double = 1.1): DataFrame = {
-    val spark = df.sparkSession
-    val nBytes = octet_length(col(textCol))
-    val cBytes = graft.functions.CompressExprs.deflateSizeCol(spark,
-      col(textCol))
-    df.select(col(idCol), nBytes.as("n_bytes"), cBytes.as("c_bytes"))
-      .withColumn("ratio", when(col("n_bytes") > 0,
-        round(col("c_bytes").cast("double") / col("n_bytes"), 6)))
-      .withColumn("keep", coalesce(
-        col("ratio") >= minRatio && col("ratio") <= maxRatio, lit(false)))
   }
 
   /** URL domain report — the domain-level curation signal web-corpus

@@ -349,7 +349,7 @@ object PipelineQueries {
     // cap, exact-cosine verify. Every stage — centered-residue hyperplane
     // arithmetic, sequential dot folds, band extraction, cap, pair dedup —
     // is integer/double math DuckDB replicates exactly, so the whole
-    // pipeline is hash-pinned band for band (the minhashLshPairs contract).
+    // pipeline is hash-pinned band for band (the minhashLshPairsMd5 contract).
     // 8-bit band keys size the buckets for the 10× ScaleBench run too
     // (avg bucket = n/256 per band; 4-bit keys would push every bucket
     // past the cap once the corpus clears ~3k vectors).

@@ -539,6 +539,35 @@ class AdtlParserSpec extends SparkSpec {
     assert(ids(0).matches("[0-9a-f]{8}-[0-9a-f]{4}-5[0-9a-f]{3}-[89ab][0-9a-f]{3}-[0-9a-f]{12}"))
   }
 
+  test("uuid5 generate compiles to generated code: same ids as the interpreted path") {
+    val spec =
+      """{
+        |  "adtl": {"name": "s", "description": "d", "tables": {"t": {"kind": "oneToOne"}}},
+        |  "t": {
+        |    "id": {"generate": {"type": "uuid5", "values": ["sid", "visit"]}},
+        |    "sid": {"field": "sid"}
+        |  }
+        |}""".stripMargin
+    val df = strDf(Seq("sid", "visit"), Seq(Seq("S1", "1"), Seq("S2", "1"), Seq("S1", "2")))
+    def ids(conf: (String, String)*): Seq[String] = {
+      val old = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try AdtlParser.fromJsonString(spec).parseDataFrame(spark, df)("t")
+        .select("id").collect().map(_.getString(0)).toSeq.sorted
+      finally old.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    // no fallback: a generated kernel that does not compile fails the query
+    val generated = ids("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.wholeStage" -> "true")
+    val interpreted = ids("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    assert(generated.distinct.size == 3)
+    assert(generated == interpreted)
+  }
+
   test("schema validation annotates adtl_valid / adtl_error") {
     val tmp = java.nio.file.Files.createTempDirectory("adtlspec").toString
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$tmp/subject.json"),

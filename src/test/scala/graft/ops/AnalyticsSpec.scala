@@ -705,26 +705,6 @@ class AnalyticsSpec extends SparkSpec {
     assert(streamed.toSeq == batch.toSeq && batch.length == 4)
   }
 
-  test("compressionRatio: repetition compresses, noise doesn't, deterministic") {
-    import spark.implicits._
-    val rep = ("spam " * 200).trim
-    val noise = (1 to 200).map(i =>
-      java.lang.Long.toString(i * 2654435761L % 99991, 36)).mkString(" ")
-    val df = Seq((1L, rep), (2L, noise), (3L, "")).toDF("doc_id", "text")
-    val out = TextAnalysis.compressionRatio(df, "doc_id", "text",
-        minRatio = 0.25, maxRatio = 1.1)
-      .orderBy("doc_id").collect()
-    val (rRep, rNoise) = (out(0).getDouble(3), out(1).getDouble(3))
-    assert(rRep < 0.1 && !out(0).getBoolean(4))  // degenerate repetition
-    assert(rNoise > 0.25 && rNoise > rRep * 5 && out(1).getBoolean(4))
-    assert(out(2).isNullAt(3) && !out(2).getBoolean(4)) // empty doc
-    // deterministic + partition-invariant
-    val again = TextAnalysis.compressionRatio(df.repartition(5), "doc_id",
-      "text").orderBy("doc_id").collect()
-    assert(again.map(r => Option(r.get(3))).toSeq ==
-      out.map(r => Option(r.get(3))).toSeq)
-  }
-
   test("rrfFuse: one-sided candidates, tie-break, fuses real bm25+cosine shapes") {
     import spark.implicits._
     val a = Seq((1L, 10L, 1L), (1L, 11L, 2L)).toDF("q_id", "doc_id", "rank")
@@ -1077,7 +1057,15 @@ class AnalyticsSpec extends SparkSpec {
         Sketch.bottomKSketch(df.filter(col("shard") === s), "grp", "id",
           "v", k = 32))
       .reduce(_.unionByName(_))
-    val merged = Sketch.mergeBottomKSketches(shards, k = 32)
+    // re-merge: explode the shard samples into the same O(k) bottom-k
+    // aggregate; n_total sums
+    val merged = shards
+      .select(col("grp"), explode(col("sketch")).as("__item"))
+      .groupBy("grp")
+      .agg(graft.functions.BottomKStructAgg
+        .bottomK(spark, col("__item"), 32).as("sketch"))
+      .join(shards.groupBy("grp")
+        .agg(sum(col("n_total")).cast("long").as("n_total")), Seq("grp"))
     assert(str(direct) == str(merged))
     // and partition invariance of the direct sketch
     assert(str(direct) ==

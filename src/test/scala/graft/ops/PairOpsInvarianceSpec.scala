@@ -77,27 +77,27 @@ class PairOpsInvarianceSpec extends SparkSpec {
     assert(base.nonEmpty)
   }
 
-  test("simhashPairs is pigeonhole-EXACT at any Hamming budget") {
+  test("simhashPairsMd5 is pigeonhole-EXACT up to Hamming 3") {
     // brute-force truth: all pairs with bit_count(xor) <= h over the same
-    // signatures the operator computes
-    val toks = TextAnalysis.tokens(col("text"))
+    // 31-bit signatures the operator computes
     val sigs = docs.select(col("doc_id").as("id"),
-      when(size(toks) > 0,
-        graft.functions.TextHashExprs.simhashCol(spark,
-          graft.functions.TextHashExprs.ngramHashes(spark, toks, 1)))
-        .otherwise(lit(0L)).as("sig"))
+      Dedup.simhash31Md5(col("text")).as("sig"))
     val a = sigs.select(col("id").as("id_a"), col("sig").as("sig_a"))
     val b = sigs.select(col("id").as("id_b"), col("sig").as("sig_b"))
     val all = a.crossJoin(b).filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
         bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long").as("hamming"))
-    // h=3 is the old fixed 4x16 layout; h=7 and h=12 need the derived
-    // block count (the fixed layout silently dropped their extra pairs)
-    for (h <- Seq(1, 3, 7, 12)) {
+    // four disjoint 8-bit blocks: a pair within h <= 3 agrees on one of
+    // them. A bucket cap above the corpus size leaves only the block
+    // layout to decide the pair set.
+    val cap = docs.count().toInt + 1
+    for (h <- 0 to 3) {
       val brute = all.filter(col("hamming") <= h)
-      val op = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = h)
+      val op = Dedup.simhashPairsMd5(docs, "doc_id", "text", maxHamming = h,
+        maxBucketSize = cap)
       assert(op.exceptAll(brute).count() == 0, s"h=$h emitted a false pair")
       assert(brute.exceptAll(op).count() == 0, s"h=$h lost a true pair")
+      assert(brute.count() > 0, s"h=$h: no pair to check")
     }
   }
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.SparkSpec
 import graft.functions.{PackedLongs, TextHashExprs}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 
 /** The codegen'd text-hash kernels must be bit-identical to the
@@ -35,12 +36,15 @@ class TextHashExprsSpec extends SparkSpec {
 
   test("minhashSig matches per-seed array_min composition") {
     val grams = transform(Dedup.shingles(col("text"), 2), s => xxhash64(s))
-    val old = Dedup.minhashFromHashes(grams, 16)
-    val nw = TextHashExprs.minhashSig(spark,
-      TextHashExprs.ngramHashes(spark, TextAnalysis.tokens(col("text")), 2), 16)
-    val bad = docs.select(old.as("o"), nw.as("n"))
-      .filter(not(col("o") <=> col("n"))).count()
-    assert(bad == 0)
+    val rows = docs.select(Dedup.minhashFromHashes(grams, 16).as("o"),
+        TextHashExprs.ngramHashes(spark, TextAnalysis.tokens(col("text")), 2)
+          .as("h"))
+      .collect()
+    rows.foreach { r =>
+      val sig = TextHashExprs.minhashSig(
+        new GenericArrayData(r.getSeq[Long](1).toArray), 16)
+      assert(sig.toLongArray().toSeq == r.getSeq[Long](0))
+    }
   }
 
   test("simhash kernel matches the per-bit aggregate fold") {

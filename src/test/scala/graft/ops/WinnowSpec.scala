@@ -98,42 +98,6 @@ class WinnowSpec extends SparkSpec {
     evalFpCounts.filter(_._2 >= 3).keys.foreach(id =>
       assert(!survivors.contains(id), s"eval doc $id must be dropped"))
     assert(survivors.nonEmpty)
-    // the stateless filter form agrees with the relational form
-    val evalFps = TextAnalysis.winnowFingerprints(evalSet, "doc_id", "text")
-      .select("fp").distinct().collect().map(_.getLong(0)).toSeq
-    val viaFilter = docs.filter(
-        TextAnalysis.decontaminateFilter(col("text"), evalFps, minShared = 3))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(viaFilter == survivors)
-  }
-
-  test("decontaminateFilter is streaming-safe and matches batch") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val docs = documents.select("doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    val evalFps = TextAnalysis.winnowFingerprints(
-        documents.filter(col("doc_id") % 10 === 0), "doc_id", "text")
-      .select("fp").distinct().collect().map(_.getLong(0)).toSeq
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val stream = MemoryStream[(Long, String)]
-    val input = stream.toDS().toDF("doc_id", "text")
-      .filter(TextAnalysis.decontaminateFilter(col("text"), evalFps))
-    val q = input.writeStream.format("memory").queryName("decontam")
-      .outputMode("append").start()
-    try {
-      stream.addData(docs.take(100).toIndexedSeq)
-      q.processAllAvailable()
-      stream.addData(docs.drop(100).toIndexedSeq)
-      q.processAllAvailable()
-      val streamed = spark.table("decontam")
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      val batch = documents.select("doc_id", "text")
-        .filter(TextAnalysis.decontaminateFilter(col("text"), evalFps))
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(streamed == batch)
-      assert(streamed.nonEmpty && streamed.size < docs.length)
-    } finally q.stop()
   }
 
   test("parquet materialization route returns identical pairs") {
