@@ -1,7 +1,7 @@
 package graft.adtl
 
 import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, Project}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import Spec._
 
@@ -20,8 +20,8 @@ import Spec._
   * projection/explode (narrow) or a single shuffle (groupBy). There is no
   * row-at-a-time interpretation — all semantics are Column expression trees
   * that Catalyst optimizes and codegens. The driver loops over rows only
-  * where the optimizer already folded a table to rows held on the driver
-  * (a local relation): writeCsv writes those itself.
+  * in writeCsv, for a table whose source is at most one per-task unit:
+  * Spark computes its rows, the driver writes them to the CSV file.
   *
   * Reference lifecycle mirrored (studied, not copied):
   * /root/reference/src/adtl/parser.py:257-355 (init), 516-549 (row parse),
@@ -251,11 +251,11 @@ final class AdtlParser private (
     // And skipped when the input is at most one per-task unit
     // (Pipeline.BytesPerTask) of source bytes: one split's worth of rows
     // fanned out to the session width is 32 near-empty tasks plus a
-    // shuffle, and the CSV sink's coalesce(1) folds everything after the
-    // exchange back into one task anyway. Measured on the perfbench
-    // site_batches workload (two ~0.1 MB site CSVs through a 128-rule,
-    // 3-table spec per pass; local[4], 32 shuffle partitions, 4-core VM),
-    // together with the report riding the sink write: per pass 16 → 8
+    // shuffle, and the CSV sink gathers every row into one file anyway.
+    // Measured on the perfbench site_batches workload (two ~0.1 MB site
+    // CSVs through a 128-rule, 3-table spec per pass; local[4], 32 shuffle
+    // partitions, 4-core VM), together with the report riding the sink
+    // write: per pass 16 → 8
     // jobs, 140 → 8 tasks, 343 KB → 0 shuffle bytes, 5.8 → 0.14 s task
     // wait; median wall 0.79× over 16 interleaved pairs, each won.
     lazy val overSplit =
@@ -844,44 +844,33 @@ final class AdtlParser private (
   /** The table as one CSV part file in the directory `path` (see
     * renderForCsv for the columns).
     *
-    * A frame whose optimized plan is a local relation has its rows on the
-    * driver already — a constant table, an unvalidated oneToOne table over
-    * an in-memory input, an in-memory frame with no rows — and the driver
-    * writes it, as the reference writes every table (`csv.DictWriter`):
-    * with Spark's CSV generator and options, through the sink's
-    * filesystem, into the layout a one-task Spark write leaves. Every other
-    * frame is written by a Spark job. Validated frames carry observed
-    * metrics, which never fold to a local relation, so their report still
-    * rides the Spark write. The optimizer runs here only on plans that can
-    * fold (local leaves under projections and filters only, or no input
-    * rows); for any other plan the check would be a second optimizer run
-    * in its write. */
+    * A frame whose source is at most one per-task unit
+    * (`Pipeline.BytesPerTask`, summed over the leaves of its analyzed
+    * plan) is written on the driver, as the reference writes every table
+    * (`csv.DictWriter`): its rows are collected in one SQL execution of
+    * the frame's own QueryExecution (the call `Dataset.collect` makes, so
+    * observed report metrics complete from it, and a plan that folds to a
+    * local relation runs no job), then written with Spark's CSV generator
+    * and options, through the sink's filesystem, into the layout a
+    * one-task Spark write leaves (see writeLocalCsv). That skips the write
+    * job's second plan, the Hadoop conf shipped with its task and the
+    * output committer. Larger or unsized sources, streaming frames and an
+    * empty or ambiguous header keep the Spark write (and its errors). */
   def writeCsv(tables: Map[String, DataFrame], tname: String, path: String): Unit =
     observedWrite(tname, readTable(tables, tname)) { df =>
       val rendered = renderForCsv(df)
+      val qe = rendered.queryExecution
       val names = rendered.columns.map(_.toLowerCase(java.util.Locale.ROOT))
-      val analyzed = rendered.queryExecution.analyzed
-      val leaves = analyzed.collectLeaves()
-      // optimized here only if it can fold: every leaf local, and either
-      // only nodes ConvertToLocalRelation folds or no input row at all
-      // (PropagateEmptyRelation). Folding evaluates projections on the
-      // driver, so a plan that folds only below a Generate, an Aggregate
-      // or observed metrics would pay that twice: here and in its write.
-      val foldable = leaves.forall(_.isInstanceOf[LocalRelation]) && (
-        analyzed.find {
-          case _: Project | _: Filter | _: LocalRelation => false
-          case _ => true
-        }.isEmpty || leaves.forall(_.asInstanceOf[LocalRelation].data.isEmpty))
-      // an empty or ambiguous header keeps the Spark write and its error
-      val candidate = foldable && names.nonEmpty && names.distinct.length == names.length
-      Option.when(candidate)(rendered.queryExecution.optimizedPlan).collect {
-        case r: LocalRelation if !r.isStreaming => r.data
-      } match {
-        case Some(rows) =>
-          AdtlParser.writeLocalCsv(rendered.sparkSession, rendered.schema, rows, path)
-        case None =>
-          AdtlParser.sinkWriter(rendered.coalesce(1)).options(AdtlParser.CsvWriteOptions).csv(path)
-      }
+      if (!rendered.isStreaming && names.nonEmpty && names.distinct.length == names.length &&
+          AdtlParser.sourceBytes(qe.analyzed) <= graft.ops.Pipeline.BytesPerTask) {
+        // planned before the output is cleared: a planning error leaves
+        // it as a failing Spark write does, a runtime one clears it
+        val plan = qe.executedPlan
+        AdtlParser.writeLocalCsv(rendered.sparkSession, rendered.schema,
+          org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
+            qe, Some("collect"))(plan.executeCollect()), path)
+      } else
+        AdtlParser.sinkWriter(rendered.coalesce(1)).options(AdtlParser.CsvWriteOptions).csv(path)
     }
 
   /** CSV rendering: deterministic sorted header, validation columns first,
@@ -998,20 +987,28 @@ object AdtlParser {
   /** The CSV sink's writer options. */
   private val CsvWriteOptions = Map("header" -> "true", "emptyValue" -> "")
 
+  /** Summed size estimates of the plan's leaves: a file relation's files,
+    * a local relation's rows; a leaf without an estimate (an RDD) counts
+    * as the session's default size, far above one per-task unit. */
+  private def sourceBytes(plan: LogicalPlan): BigInt =
+    try plan.collectLeaves().map(_.stats.sizeInBytes).sum
+    catch { case scala.util.control.NonFatal(_) => BigInt(Long.MaxValue) }
+
   /** Write `rows` (of `schema`) on the driver as the directory a one-task
     * overwrite-mode CSV write leaves — the same calls on the same
     * filesystem, so the same bytes, `.crc` files and permissions:
-    *  - an existing `path` is deleted;
+    *  - an existing output is deleted, before `rows` is evaluated (a
+    *    failing Spark write has deleted it too when its job fails);
     *  - one `part-00000-<uuid>-c000.csv`, written by Spark's CSV generator
     *    with the options the CSV data source builds from CsvWriteOptions
     *    (header even for no rows);
     *  - the `_SUCCESS` marker, unless the Hadoop conf turns it off;
-    *  - cached data read from `path` is refreshed.
+    *  - cached data read from the output is refreshed.
     * A write that fails deletes its part file. The filesystem is not
     * closed: for `file:` it is an uncached instance, for any other scheme
     * the shared cached one. */
   private[adtl] def writeLocalCsv(spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
-      rows: Seq[org.apache.spark.sql.catalyst.InternalRow], path: String): Unit = {
+      rows: => Iterable[org.apache.spark.sql.catalyst.InternalRow], path: String): Unit = {
     import org.apache.hadoop.fs.Path
     import org.apache.hadoop.mapreduce.lib.output.FileOutputCommitter
     import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
@@ -1022,6 +1019,7 @@ object AdtlParser {
     if (fs.exists(out) && !fs.delete(out, true))
       throw new java.io.IOException(s"Unable to clear output directory $out prior to writing to it")
     fs.mkdirs(out)
+    val collected = rows
     val sqlConf = spark.sessionState.conf
     val options = new CSVOptions(CsvWriteOptions, sqlConf.csvColumnPruning,
       sqlConf.sessionLocalTimeZone)
@@ -1031,7 +1029,7 @@ object AdtlParser {
         fs.create(part, false), java.nio.charset.Charset.forName(options.charset)), options)
       try {
         if (options.headerFlag) gen.writeHeaders()
-        rows.foreach(gen.write)
+        collected.foreach(gen.write)
       } finally gen.close()
     } catch {
       // a failed write leaves no part file (nor its .crc), as an aborted

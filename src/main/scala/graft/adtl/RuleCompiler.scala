@@ -301,7 +301,10 @@ final class RuleCompiler(
       val truthMap = mapLit(entries.map { case (k, v) => k -> truthyLit(v) },
         keyType, BooleanType)
       val key = if (caseInsensitive) trim(lower(in.col)) else in.col
-      CV(mapped(in.col), outVt,
+      // a "" after the lookup is None (get_value.py): under caseInsensitive
+      // a whitespace-only value trims to "" and passes through unmapped
+      val out = mapped(in.col)
+      CV(if (caseInsensitive) nullif(out, lit("")) else out, outVt,
         Some(coalesce(element_at(truthMap, key), truthyStr(unmapped(in.col)))))
     } else CV(mapped(if (plainLookup) unguarded.col else in.col), outVt)
   }

@@ -63,15 +63,6 @@ object Dedup {
       .otherwise(array(array_join(t, " ")))
   }
 
-  /** MinHash signature from pre-hashed shingles: numHashes independent
-    * functions realized as seeded xxhash64(i, shingleHash) — hashing longs,
-    * not strings, so the 64 passes cost ~1 string hash + 64 long hashes per
-    * shingle. Deterministic (fixed seeds) across runs and cluster sizes. */
-  def minhashFromHashes(shingleHashes: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { i =>
-      array_min(transform(shingleHashes, h => xxhash64(lit(i), h)))
-    }: _*)
-
   /** LSH candidate pairs: affine MinHash over md5-derived base hashes
     * (minhashSignatureMd5's family), signatures split into bands,
     * bucket-join on (band index, band key), distinct candidate id pairs
@@ -267,19 +258,6 @@ object Dedup {
   }
 
   // ---- SimHash ----------------------------------------------------------
-
-  /** 64-bit SimHash from pre-hashed tokens: per bit, sum ±1 across the
-    * hashes; the sign pattern is the signature. Pure expressions (64
-    * bit-counter folds over the long array) — the reference form of the
-    * `TextHashExprs.simhashCol` kernel. */
-  def simhashFromHashes(hashes: Column): Column = {
-    val bitCols: Seq[Column] = (0 until 64).map { b =>
-      when(aggregate(hashes, lit(0L),
-        (acc, h) => acc + when(shiftright(h, b).bitwiseAND(1) === 1, 1L).otherwise(-1L)) > 0,
-        lit(1L << b)).otherwise(lit(0L))
-    }
-    bitCols.reduce((a, b) => a.bitwiseOR(b))
-  }
 
   /** Oracle-checkable 31-bit SimHash over md5-derived token hashes (same
     * base-hash construction as minhashSignatureMd5) — pins the SimHash

@@ -11,8 +11,9 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.DataFrame
 
 /** The adtl file I/O layer: readCsv's driver-side header read against
-  * Spark's own header inference, and the sinks' in-process permissions
-  * against the stock local filesystem. */
+  * Spark's own header inference, the sinks' in-process permissions
+  * against the stock local filesystem, and the driver-written CSV sink
+  * against the stock Spark write (files, bytes, row order, failures). */
 class CsvIoSpec extends SparkSpec {
 
   private val parser = AdtlParser.fromJsonString("""{
@@ -132,11 +133,11 @@ class CsvIoSpec extends SparkSpec {
       ("1", "x", "2.5"), ("2", "", "bad"))).toDF("id", "v", "n"))
     // a table over an in-memory input folds to a local relation
     assert(csvParity(d, parser.writeCsv(tables, "t", _), stockCsv(tables("t"), _)) == 0)
-    // a table over a CSV file keeps the Spark write
+    // a table over a small CSV file is collected by one job
     val src = tmp()
     val fromFile = parser.parseCsv(spark,
       write(src, "in.csv", "id,v,n\n1,x,2.5\n2,,bad\n3,\"a,b\",\n"))
-    assert(csvParity(src, parser.writeCsv(fromFile, "t", _), stockCsv(fromFile("t"), _)) > 0)
+    assert(csvParity(src, parser.writeCsv(fromFile, "t", _), stockCsv(fromFile("t"), _)) == 1)
     parser.writeParquet(tables, "t", s"$d/pq")
     tables("t").write.mode("overwrite").parquet(s"$d/pq_stock")
     for (kind <- Seq("csv", "pq")) {
@@ -235,6 +236,153 @@ class CsvIoSpec extends SparkSpec {
       if (i == 0) InternalRow(1) else throw new IllegalStateException("row 2"))
     intercept[IllegalStateException](AdtlParser.writeLocalCsv(spark, schema, rows, out.toString))
     assert(Files.list(out).iterator().asScala.isEmpty)
+  }
+
+  /** The physical plans of the SQL executions `body` starts, and the jobs
+    * it runs (the plans' listener sits on the same bus queue as jobsIn's,
+    * so its drain marker covers them too). */
+  private def executionsIn[T](body: => T): (T, Int, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (out, jobs) = jobsIn(body)
+      (out, jobs, plans.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def fileWrite(plan: String): Boolean =
+    plan.contains("WriteFiles") || plan.contains("InsertIntoHadoopFsRelationCommand")
+
+  test("csv sink: a sub-split file-backed table is collected by one job, with no file write") {
+    val src = tmp()
+    val tables = parser.parseCsv(spark, write(src, "in.csv", "id,v,n\n1,x,2.5\n2,,\n"))
+    val (_, jobs, plans) = executionsIn(parser.writeCsv(tables, "t", s"$src/csv"))
+    assert(jobs == 1)
+    assert(plans.nonEmpty && !plans.exists(fileWrite), plans)
+    stockCsv(tables("t"), s"$src/csv_stock")
+    assert(contents(s"$src/csv") == contents(s"$src/csv_stock"))
+  }
+
+  test("csv sink: an input over one per-task unit keeps the Spark write") {
+    val src = tmp()
+    val rows = (1 to 12000).map(i => s"$i,value-$i,$i.5").mkString("\n")
+    val file = write(src, "in.csv", s"id,v,n\n$rows\n")
+    assert(Files.size(Paths.get(file)) > graft.ops.Pipeline.BytesPerTask)
+    val tables = parser.parseCsv(spark, file)
+    val (_, _, plans) = executionsIn(
+      csvParity(src, parser.writeCsv(tables, "t", _), stockCsv(tables("t"), _)))
+    assert(plans.count(fileWrite) == 2, plans) // the sink's write and the stock one
+  }
+
+  /** The innermost cause of `e`. */
+  private def rootCause(e: Throwable): Throwable =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq.last
+
+  private val golden = "src/test/resources/golden"
+
+  /** `write` and the stock writer into `dir`/csv and `dir`/csv_stock: both
+    * succeed or both fail with the same root cause (output path and uuids
+    * masked), and leave the same files, permissions and bytes; true when
+    * they wrote. */
+  private def sinkParity(d: String, clue: String, write: String => Unit,
+      stock: String => Unit): Boolean = {
+    val outs = Seq(s"$d/csv", s"$d/csv_stock")
+    val Seq(got, want) = outs.zip(Seq(write, stock)).map { case (out, w) =>
+      scala.util.Try(w(out)).failed.toOption.map { e =>
+        val r = rootCause(e)
+        r.getClass -> r.getMessage.replace(out, "<out>").replaceAll(Uuid, "<uuid>")
+      }
+    }
+    assert(got == want, clue)
+    assert(layout(outs(0)) == layout(outs(1)), clue)
+    assert(contents(outs(0)) == contents(outs(1)), clue)
+    got.isEmpty
+  }
+
+  /** `write` and the stock writer fail over outputs that each hold an
+    * earlier write of `source` (see sinkParity); returns what is left. */
+  private def failureParity(d: String, source: DataFrame, write: String => Unit,
+      stock: String => Unit): Seq[(String, String)] = {
+    Seq(s"$d/csv", s"$d/csv_stock").foreach(stockCsv(source, _))
+    assert(!sinkParity(d, "failure", write, stock))
+    layout(s"$d/csv")
+  }
+
+  test("csv sink: an error while the rows are computed fails as the Spark write fails") {
+    import org.apache.spark.sql.functions.col
+    val d = tmp()
+    val file = spark.read.option("header", "true")
+      .csv(write(d, "in.csv", "id,v,n\n1,x,2.5\n2,,bad\n"))
+    def bad(source: DataFrame) = Map("t" -> source.select(col("id"), col("n").cast("int").as("n")))
+    // an ANSI cast failure at run time: the earlier output is gone, no
+    // part file is left
+    val left = failureParity(s"$d/file", file,
+      parser.writeCsv(bad(file), "t", _), stockCsv(bad(file)("t"), _))
+    assert(left.map(_._1) == Seq(""))
+    // the same cast over an in-memory input fails while the optimizer
+    // folds it, before the earlier output is touched
+    val inMemory = spark.createDataFrame(Seq(("1", "x", "2.5"), ("2", "", "bad"))).toDF("id", "v", "n")
+    assert(failureParity(s"$d/memory", inMemory,
+      parser.writeCsv(bad(inMemory), "t", _), stockCsv(bad(inMemory)("t"), _))
+      .exists(_._1.startsWith("part-")))
+  }
+
+  test("csv sink: a frame that reads its own output path fails as the Spark write fails") {
+    val d = tmp()
+    val tables = parser.parseDataFrame(spark, spark.createDataFrame(Seq(
+      ("1", "x", "2.5"))).toDF("id", "v", "n"))
+    def self(out: String) = Map("t" -> spark.read.option("header", "true").csv(out))
+    // the output is deleted before the rows are read back from it
+    val left = failureParity(d.toString, tables("t"),
+      out => parser.writeCsv(self(out), "t", out), out => stockCsv(self(out)("t"), out))
+    assert(left.map(_._1) == Seq(""))
+  }
+
+  test("csv sink: every golden spec × source pair that parses writes as the stock writer writes") {
+    def files(dir: String): Seq[String] = Files.list(Paths.get(s"$golden/$dir")).iterator()
+      .asScala.map(_.toString).toSeq.sorted
+    val specs = files("parsers").filter(f => Seq(".json", ".toml", ".yml").exists(f.endsWith))
+    val d = tmp()
+    val written = for {
+      spec <- specs
+      source <- files("sources")
+      (p, tables) <- scala.util.Try {
+        val p = AdtlParser.fromFile(spec)
+        p -> p.parseCsv(spark, source)
+      }.toOption.toSeq
+      t <- tables.keys.toSeq.sorted
+    } yield {
+      val clue = s"$spec × $source: $t"
+      sinkParity(Files.createTempDirectory(d, "pair").toString, clue,
+        p.writeCsv(tables, t, _), stockCsv(tables(t), _))
+    }
+    // a vacuous pass is no parity check
+    assert(written.count(identity) >= 25, written)
+  }
+
+  test("csv sink: a groupBy table over several shuffle partitions keeps the stock row order") {
+    import org.apache.spark.sql.functions.spark_partition_id
+    val p = AdtlParser.fromFile(s"$golden/parsers/groupBy.json")
+    val src = tmp()
+    // 20 subjects, three rows each, over a sub-split file
+    val rows = (0 until 60).map(i => s"${i % 3 + 1},S${i % 20},2020-01-${i % 28 + 1},")
+    val file = write(src, "in.csv", ("sex,subjid,dsstdat,hostdat" +: rows).mkString("", "\n", "\n"))
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    try {
+      val tables = p.parseCsv(spark, file)
+      assert(tables("subject").select(spark_partition_id()).distinct().count() > 1)
+      assert(sinkParity(src.toString, "groupBy",
+        p.writeCsv(tables, "subject", _), stockCsv(tables("subject"), _)))
+    } finally spark.conf.unset(coalesce)
   }
 
   test("NioLocalFileSystem sets permissions in-process and reads them back") {

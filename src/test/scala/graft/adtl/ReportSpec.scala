@@ -114,7 +114,7 @@ class ReportSpec extends SparkSpec {
     assert(observed("visit")._2 == 5) // S1, S2, S3, X4, S5
   }
 
-  test("a validated constant table keeps the observed Spark write: its report equals the direct aggregation") {
+  test("a validated constant table is collected on the driver with its report observed: it equals the direct aggregation") {
     val dir = java.nio.file.Files.createTempDirectory("adtlreport")
     java.nio.file.Files.writeString(dir.resolve("meta.json"),
       """{"required": ["version", "site"], "properties": {"version": {"type": "string"}}}""")
@@ -125,12 +125,26 @@ class ReportSpec extends SparkSpec {
     val p = AdtlParser.fromFile(s"$dir/spec.json")
     val tables = p.parseDataFrame(spark, strDf(cols, rows))
     val (_, writeJobs) = jobsIn(p.save(tables, s"${outDir()}/r"))
-    assert(writeJobs > 0) // observed metrics never fold to a local relation
+    // observed metrics never fold to a local relation: one collect job
+    assert(writeJobs == 1)
     val (observed, jobs) = jobsIn(p.report(tables))
     assert(jobs == 0)
     assert(observed == direct(tables))
     assert(observed == Map("meta" ->
       ((0L, 1L, Map("data must contain ['version', 'site'] properties" -> 1L)))))
+  }
+
+  test("tables of a small source file are collected on the driver: their reports are observed") {
+    val p = AdtlParser.fromFile(s"${specDir()}/spec.json")
+    val src = java.nio.file.Files.createTempFile("adtlreport", ".csv")
+    java.nio.file.Files.writeString(src,
+      (cols +: rows).map(_.mkString(",")).mkString("", "\n", "\n"))
+    val tables = p.parseCsv(spark, src.toString)
+    p.save(tables, s"${outDir()}/r")
+    val (observed, jobs) = jobsIn(p.report(tables - "obs"))
+    assert(jobs == 0)
+    assert(observed == direct(tables - "obs"))
+    assert(p.report(tables) == direct(tables))
   }
 
   test("oneOf fallback messages: counted on the write, named by one filtered groupBy") {

@@ -15,7 +15,7 @@ class ValuePipelinePropertySpec extends SparkSpec {
 
   private val fields = Vector("g1", "g2", "g3")
   private val valuePool = Vector(
-    "", "0", "1", "2", "42", "007", "7.0", "4.5", "abc", "Yes", "no", "0.0",
+    "", "  ", "0", "1", "2", "42", "007", "7.0", "4.5", "abc", "Yes", "no", "0.0",
     "2022-01-05", "male")
 
   // ---- model ------------------------------------------------------------

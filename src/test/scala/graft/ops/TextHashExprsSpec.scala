@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.SparkSpec
 import graft.functions.{PackedLongs, TextHashExprs}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 
@@ -34,9 +35,28 @@ class TextHashExprsSpec extends SparkSpec {
     }
   }
 
+  /** MinHash signature from pre-hashed shingles as pure expressions:
+    * numHashes seeded xxhash64(i, shingleHash) functions, the minimum of
+    * each — the reference form of the `TextHashExprs.minhashSig` kernel. */
+  private def minhashFromHashes(shingleHashes: Column, numHashes: Int): Column =
+    array((0 until numHashes).map { i =>
+      array_min(transform(shingleHashes, h => xxhash64(lit(i), h)))
+    }: _*)
+
+  /** 64-bit SimHash from pre-hashed tokens as pure expressions: per bit,
+    * sum ±1 across the hashes; the sign pattern is the signature (64
+    * bit-counter folds over the long array) — the reference form of the
+    * `TextHashExprs.simhashCol` kernel. */
+  private def simhashFromHashes(hashes: Column): Column =
+    (0 until 64).map { b =>
+      when(aggregate(hashes, lit(0L),
+        (acc, h) => acc + when(shiftright(h, b).bitwiseAND(1) === 1, 1L).otherwise(-1L)) > 0,
+        lit(1L << b)).otherwise(lit(0L))
+    }.reduce((a, b) => a.bitwiseOR(b))
+
   test("minhashSig matches per-seed array_min composition") {
     val grams = transform(Dedup.shingles(col("text"), 2), s => xxhash64(s))
-    val rows = docs.select(Dedup.minhashFromHashes(grams, 16).as("o"),
+    val rows = docs.select(minhashFromHashes(grams, 16).as("o"),
         TextHashExprs.ngramHashes(spark, TextAnalysis.tokens(col("text")), 2)
           .as("h"))
       .collect()
@@ -49,7 +69,7 @@ class TextHashExprsSpec extends SparkSpec {
 
   test("simhash kernel matches the per-bit aggregate fold") {
     val toks = TextAnalysis.tokens(col("text"))
-    val old = Dedup.simhashFromHashes(transform(toks, x => xxhash64(x)))
+    val old = simhashFromHashes(transform(toks, x => xxhash64(x)))
     val nw = when(size(toks) > 0,
       TextHashExprs.simhashCol(spark, TextHashExprs.ngramHashes(spark, toks, 1)))
       .otherwise(lit(0L))
