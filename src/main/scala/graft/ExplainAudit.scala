@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints formatted physical plans for representative queries
   * and flags the properties that matter at 100 TB — parquet filter/column
   * pushdown, broadcast vs sort-merge joins, whole-stage codegen coverage.
@@ -10,14 +8,8 @@ import org.apache.spark.sql.SparkSession
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "false") // AQE hides codegen ids pre-exec
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // AQE off: it hides codegen ids before execution
+    val spark = Harness.session("4", Map("spark.sql.adaptive.enabled" -> "false"))
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q1_agg", "q3_join_agg", "q4_anti_join", "p7_values_map",
         "r3_one_to_many", "a1_a6_group_modes", "adtl_onetoone", "t_text_profile",
@@ -68,21 +60,19 @@ object ExplainAudit {
         "q_profile_table_approx", "q_session_stats", "t_vocab_coverage",
         "s_centroid_drift", "t_bpe_encode", "q_session_native",
         "q_t_closeness", "s_silhouette")
-    names.foreach { name =>
-      SparkEntry.queries.get(name).foreach { fn =>
-        println(s"\n========== $name ==========")
-        val df = fn(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        println(plan)
-        // quick property flags
-        val hasPushedFilters = plan.contains("PushedFilters: [") &&
-          !plan.matches("(?s).*PushedFilters: \\[\\].*")
-        println(s"--- flags: broadcastJoin=${plan.contains("BroadcastHashJoin")}" +
-          s" sortMergeJoin=${plan.contains("SortMergeJoin")}" +
-          s" wholeStageCodegen=${plan.contains("codegen id")}" +
-          s" pushedFilters=$hasPushedFilters")
-      }
+    Harness.select(names).foreach { case (name, fn) =>
+      println(s"\n========== $name ==========")
+      val df = fn(spark, sfDir)
+      val plan = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      println(plan)
+      // quick property flags
+      val hasPushedFilters = plan.contains("PushedFilters: [") &&
+        !plan.matches("(?s).*PushedFilters: \\[\\].*")
+      println(s"--- flags: broadcastJoin=${plan.contains("BroadcastHashJoin")}" +
+        s" sortMergeJoin=${plan.contains("SortMergeJoin")}" +
+        s" wholeStageCodegen=${plan.contains("codegen id")}" +
+        s" pushedFilters=$hasPushedFilters")
     }
     spark.stop()
   }

@@ -29,7 +29,8 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.ScaleBench <srcSfDir> <workDir> <copies> [q1 q2 …]
   * An explicit query list restricts the run (and the replication to just
   * the tables those queries read — the 100× flagship mode).
-  * Prints one JSON line {"metric":"scale_total", ...} like Bench.
+  * Prints one JSON line {"metric":"scale_total", ...} like Bench; a query
+  * that throws is listed under "failed" only, and the run exits 1.
   */
 object ScaleBench {
 
@@ -657,31 +658,20 @@ object ScaleBench {
     val copies = if (args.length > 2) args(2).toInt else 10
     val (flags, queryArgs) = args.drop(3).partition(_ == "--skew")
     val skew = flags.nonEmpty
-    val selected =
+    val selected = Harness.select(
       if (queryArgs.nonEmpty) queryArgs.toSeq
       else if (skew) SkewQueries
-      else Queries
-    selected.foreach(q => require(SparkEntry.queries.contains(q),
-      s"unknown query: $q"))
-    val needed = selected.flatMap(q => TablesFor.getOrElse(q, AllTables)).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Split policy sized to the WORKLOAD, not the default: these
-      // operators are CPU-dense per scanned byte (strftime ladders, gram
-      // explodes, per-value md5), so a default 128 MB split holds ~45 s
-      // of work — the task-granularity knob a cluster operator turns for
-      // exactly this profile. 8 MB keeps scan tasks in single-digit
-      // seconds; per-task cost is split-size-fixed, so this does not
-      // change the linearity evidence (both 1× and N× run under it).
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      else Queries)
+    val needed = selected.flatMap(q => TablesFor.getOrElse(q._1, AllTables)).toSet
+    // Split policy sized to the WORKLOAD, not the default: these operators
+    // are CPU-dense per scanned byte (strftime ladders, gram explodes,
+    // per-value md5), so a default 128 MB split holds ~45 s of work — the
+    // task-granularity knob a cluster operator turns for exactly this
+    // profile. 8 MB keeps scan tasks in single-digit seconds; per-task cost
+    // is split-size-fixed, so this does not change the linearity evidence
+    // (both 1× and N× run under it).
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+      Map("spark.sql.files.maxPartitionBytes" -> "8m"))
 
     // provenance check: replicas from a different (src, copies, skew) — or
     // of unknown origin — are re-created, never mixed in
@@ -699,79 +689,22 @@ object ScaleBench {
     if (missing.nonEmpty) replicate(spark, src, work, copies, missing, skew)
     if (!trusted) writeMarker(work, src, copies, skew)
 
-    // warmup (untimed): JIT + codegen for the shared kernels
-    locally {
-      def warm(body: => Unit): Unit =
-        try body catch { case e: Throwable =>
-          System.err.println(s"[scalebench] warmup failed: $e") }
-      needed.intersect(Set("documents", "embeddings", "orders")).foreach(t =>
-        warm(spark.read.parquet(s"$work/$t.parquet").count()))
-      if (needed("documents")) warm {
-        val d = spark.read.parquet(s"$work/documents.parquet").limit(64)
-        d.select(graft.ops.TextAnalysis.fingerprint(col("text")).as("fp"))
-          .groupBy("fp").count().count()
-      }
-      if (needed("embeddings")) warm {
-        val e = spark.read.parquet(s"$work/embeddings.parquet").limit(64)
-        val v = graft.ops.Similarity.toDouble(col("embedding"))
-        e.select((graft.ops.Similarity.norm(v) +
-          aggregate(v, lit(0.0), (a, x) => a + x)).as("s")).agg(sum("s")).count()
-      }
-      // FIXED synthetic warmup, identical for EVERY invocation regardless
-      // of the query list: round-11 artifacts mixed full-run timings with
-      // targeted single-query patch runs whose first query paid cold-JVM
-      // window/object-agg/md5/decimal codegen (the "lacks shared JIT
-      // warmup" caveat). This exercises those shared families on
-      // spark.range data — no table dependency, ~1 s — so every timed row
-      // starts from the same JIT state.
-      warm {
-        import org.apache.spark.sql.expressions.Window
-        val t = spark.range(0L, 200000L).select(
-          (col("id") % 37L).as("g"), col("id"),
-          (col("id") % 101L).cast("double").as("v"))
-        val w = Window.partitionBy(col("g")).orderBy(col("v"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val cum = t.groupBy("g", "v").agg(count(lit(1)).as("c"))
-          .withColumn("cum", sum(col("c")).over(w))
-          .withColumn("mx", max(col("cum")).over(Window.partitionBy(col("g"))))
-        val m = t
-          .withColumn("h", conv(substring(md5(
-            concat(lit("warm:"), col("id").cast("string"))), 1, 15),
-            16, 10).cast("long"))
-          .withColumn("dv", col("v").cast("decimal(14,2)"))
-          .groupBy("g").agg(sum(col("dv")).cast("decimal(38,2)").as("s"),
-            max(col("h")).as("mh"), collect_list(col("v")).as("vs"))
-          .select(col("g"), col("s"), col("mh"),
-            aggregate(col("vs"), lit(0.0), (a, x) => a + x).as("fold"))
-        cum.join(m, Seq("g")).agg(count(lit(1))).count()
-      }
-    }
+    Harness.warmUp(spark, work)
 
     // per-task durations per query: the straggler evidence — a bounded
     // max/median ratio under skew means no single task carries the hot key
     val taskTimes = TaskTimes.install(spark)
 
-    val results = selected.map { name =>
-      val fn = SparkEntry.queries(name)
+    val runs = selected.map { case (name, fn) =>
       taskTimes.clear()
-      val t0 = System.nanoTime()
-      // Force FULL evaluation with a noop-sink write: a count() action lets
-      // Catalyst prune every computed column and eliminate row-preserving
-      // left joins, so narrow row-preserving operators (span removal,
-      // repetition stats) would time as near-zero scans. The row count
-      // rides as an observed metric in the same pass — no second job.
-      val rows = try {
-        val obs = new org.apache.spark.sql.Observation(s"rows_$name")
-        fn(spark, work).observe(obs, count(lit(1)).as("n"))
-          .write.format("noop").mode("overwrite").save()
-        obs.get("n").asInstanceOf[Long]
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[scalebench] $name failed: ${e.getMessage}")
-          -1L
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val all = taskTimes.drain()
+      val run = Harness.run(fn(spark, work))
+      run.left.foreach(e => System.err.println(s"[scalebench] $name failed: ${e.getMessage}"))
+      (name, run, taskTimes.stages())
+    }
+    // a query that throws is listed under "failed" only: no time, rows or
+    // stage readout, and the run exits 1
+    val failed = runs.collect { case (name, Left(_), _) => name }
+    val results = runs.collect { case (name, Right(t), stages) =>
       // Straggler bound PER STAGE: max/median of task durations within one
       // stage answers "does one task carry the load while its peers idle?".
       // A query-global median is meaningless for iterative queries (CC runs
@@ -779,30 +712,22 @@ object ScaleBench {
       // dragging the median down made healthy runs read as 30-50×). Only
       // stages whose slowest task is ≥ 200 ms matter: a 3-task metadata
       // stage with a 1 ms median proves nothing about scale.
-      val byStage = all.groupBy(_._1).view
-        .mapValues(_.map(_._2).sorted).toMap
-      val significant = byStage.filter { case (_, d) => d.last >= 200L }
+      val significant = stages.filter(_.maxMs >= 200L)
       val (ratio, worstStage) =
         if (significant.isEmpty) (1.0, "")
         else {
-          val (sid, d) = significant.maxBy { case (_, ds) =>
-            ds.last.toDouble / math.max(1L, ds(ds.length / 2)) }
-          val med = math.max(1L, d(d.length / 2))
-          (d.last.toDouble / med,
-            s"${taskTimes.label(sid)} [stage $sid: " +
-              s"${d.length} tasks, max ${d.last} ms, median $med ms]")
+          val s = significant.maxBy(s => s.maxMs.toDouble / math.max(1L, s.medianMs))
+          val med = math.max(1L, s.medianMs)
+          (s.maxMs.toDouble / med,
+            s"${s.label} [stage ${s.id}: ${s.tasks} tasks, max ${s.maxMs} ms, median $med ms]")
         }
       // name the stage OWNING the longest task too: the ratio-based
       // worst_stage can be a different (micro-task) stage, leaving the
       // real straggler anonymous — the round-11 q_entity_resolution 37 s
       // task was unnamed in the artifact
-      val (maxTaskSec, maxTaskStage) =
-        if (all.isEmpty) (0.0, "")
-        else {
-          val (sid, dur) = all.maxBy(_._2)
-          (dur / 1e3, s"${taskTimes.label(sid)} [stage $sid]")
-        }
-      (name, sec, rows, ratio, maxTaskSec, worstStage, maxTaskStage)
+      val (maxTaskSec, maxTaskStage) = stages.headOption
+        .fold((0.0, ""))(s => (s.maxMs / 1e3, s"${s.label} [stage ${s.id}]"))
+      (name, t.secs, t.rows, ratio, maxTaskSec, worstStage, maxTaskStage)
     }
     type R = (String, Double, Long, Double, Double, String, String)
     def j[A](f: R => A): String =
@@ -817,7 +742,8 @@ object ScaleBench {
     // a query-global max/median with empty = 0.0 — the two are NOT
     // comparable, and cross-round tooling must check this field before
     // comparing task_max_over_median values)
-    println(s"""{"metric":"scale_total","value":$total,"unit":"sec","copies":$copies,"skew":$skew,"straggler_metric_version":2,"queries":${j(_._2)},"rows":${j(_._3)},"task_max_over_median":${j(r => r2(r._4))},"task_max_sec":${j(r => r2(r._5))},"worst_stage":${j(r => jq(r._6))},"max_task_stage":${j(r => jq(r._7))},"src":"$src"}""")
+    println(s"""{"metric":"scale_total","value":$total,"unit":"sec","copies":$copies,"skew":$skew,"straggler_metric_version":2,"queries":${j(_._2)},"rows":${j(_._3)},"task_max_over_median":${j(r => r2(r._4))},"task_max_sec":${j(r => r2(r._5))},"worst_stage":${j(r => jq(r._6))},"max_task_stage":${j(r => jq(r._7))},"failed":${failed.map(jq).mkString("[", ",", "]")},"src":"$src"}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -1,14 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
 /** Per-STAGE straggler auditor — the drill-down behind ScaleBench's
-  * single worst_stage readout: runs one gate query against any data dir
+  * single worst_stage readout: runs gate queries against any data dir
   * and prints EVERY stage's task distribution (callsite, RDD scopes,
   * task count, max/median/total ms), slowest-max first. This is how a
   * "task max/median = 110" flag gets a name attached (the round-10
-  * q_quality_pipeline question).
+  * q_quality_pipeline question). A query that throws is reported, the
+  * rest still run, and the process exits 1.
   *
   * Run: sbt 'runMain graft.StageAudit <dataDir> <query> [query …]'
   */
@@ -16,44 +14,30 @@ object StageAudit {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: graft.StageAudit <dataDir> <query> [query ...]")
     val dir = args(0)
-    val names = args.drop(1).toSeq
-    names.foreach(q => require(SparkEntry.queries.contains(q),
-      s"unknown query: $q"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+    val selected = Harness.select(args.toSeq.drop(1))
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val taskTimes = TaskTimes.install(spark)
-
-    names.foreach { name =>
+    val failed = selected.filter { case (name, fn) =>
       taskTimes.clear()
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val all = taskTimes.drain()
-      println(f"== $name: ${sec}%.2f s, ${all.length} tasks, " +
-        s"${all.map(_._1).distinct.length} stages")
-      all.groupBy(_._1).toSeq
-        .map { case (sid, ts) =>
-          val d = ts.map(_._2).sorted
-          (sid, d.last, d(d.length / 2), d.sum, d.length)
-        }
-        .sortBy(-_._2)
-        .foreach { case (sid, mx, med, tot, n) =>
-          println(f"  stage $sid%4d: $n%4d tasks  max $mx%6d ms  " +
-            f"median $med%6d ms  total $tot%7d ms  " +
-            s"ratio ${if (med > 0) f"${mx.toDouble / med}%.1f" else "inf"}" +
-            s"  ${taskTimes.label(sid)}")
-        }
+      val run = Harness.run(fn(spark, dir))
+      val stages = taskTimes.stages()
+      run match {
+        case Left(e) => println(s"== $name: FAILED: ${e.getMessage}")
+        case Right(t) => println(f"== $name: ${t.secs}%.2f s, ${stages.map(_.tasks).sum} tasks, " +
+          s"${stages.length} stages")
+      }
+      stages.foreach { s =>
+        println(f"  stage ${s.id}%4d: ${s.tasks}%4d tasks  max ${s.maxMs}%6d ms  " +
+          f"median ${s.medianMs}%6d ms  total ${s.totalMs}%7d ms  " +
+          s"ratio ${if (s.medianMs > 0) f"${s.maxMs.toDouble / s.medianMs}%.1f" else "inf"}" +
+          s"  ${s.label}")
+      }
+      run.isLeft
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[stageaudit] failed: ${failed.map(_._1).mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

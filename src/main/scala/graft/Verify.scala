@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,26 +7,12 @@ object Verify {
     require(args.length >= 2, "usage: graft.Verify <sfDir> <outDir>")
     val sfDir = args(0)
     val outDir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     // optional trailing args restrict the dump to the named queries (the
     // iteration mode — tools/verify_local.py compares whatever is dumped);
     // the driver passes none and gets the full surface
-    val selected =
-      if (args.length <= 2) SparkEntry.queries
-      else {
-        val want = args.drop(2).toSet
-        val unknown = want.diff(SparkEntry.queries.keySet)
-        require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-        SparkEntry.queries.view.filterKeys(want).toMap
-      }
+    val selected = Harness.select(args.toSeq.drop(2))
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    new java.io.File(outDir).mkdirs()
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

@@ -855,9 +855,13 @@ final class AdtlParser private (
     * one-task Spark write leaves (see writeLocalCsv). That skips the write
     * job's second plan, the Hadoop conf shipped with its task and the
     * output committer. Larger or unsized sources, streaming frames and an
-    * empty or ambiguous header keep the Spark write (and its errors). */
-  def writeCsv(tables: Map[String, DataFrame], tname: String, path: String): Unit =
-    observedWrite(tname, readTable(tables, tname)) { df =>
+    * empty or ambiguous header keep the Spark write (and its errors). A
+    * frame that reads a file under `path` is refused before the output is
+    * touched, as by writeParquet. */
+  def writeCsv(tables: Map[String, DataFrame], tname: String, path: String): Unit = {
+    val table = readTable(tables, tname)
+    AdtlParser.verifyNotReadPath(table, path)
+    observedWrite(tname, table) { df =>
       val rendered = renderForCsv(df)
       val qe = rendered.queryExecution
       val names = rendered.columns.map(_.toLowerCase(java.util.Locale.ROOT))
@@ -872,6 +876,7 @@ final class AdtlParser private (
       } else
         AdtlParser.sinkWriter(rendered.coalesce(1)).options(AdtlParser.CsvWriteOptions).csv(path)
     }
+  }
 
   /** CSV rendering: deterministic sorted header, validation columns first,
     * arrays rendered Python-repr style, booleans as True/False
@@ -898,13 +903,18 @@ final class AdtlParser private (
     }: _*)
   }
 
+  /** The table as parquet in the directory `path`, validation columns
+    * first. A frame that reads a file under `path` is refused before the
+    * output is touched. */
   def writeParquet(tables: Map[String, DataFrame], tname: String, path: String): Unit = {
     // reference guard: returnUnmatched yields mixed-type columns that the
     // reference blocks from parquet (cli.py:72-73); same contract here
     if (spec.header.returnUnmatched)
       throw new IllegalArgumentException(
         "returnUnmatched is not compatible with parquet output")
-    observedWrite(tname, readTable(tables, tname)) { df =>
+    val table = readTable(tables, tname)
+    AdtlParser.verifyNotReadPath(table, path)
+    observedWrite(tname, table) { df =>
       val validationCols = List("adtl_valid", "adtl_error").filter(df.columns.contains)
       val dataCols = df.columns.filterNot(validationCols.contains).toList
       AdtlParser.sinkWriter(df.select((validationCols ++ dataCols).map(col): _*))
@@ -983,6 +993,31 @@ object AdtlParser {
   private val SinkFsOptions = Map(
     "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
     "fs.file.impl.disable.cache" -> "true")
+
+  /** Refuse, before the output is touched, to overwrite `path` with a
+    * frame whose analyzed plan reads a file under it: the overwrite would
+    * delete the input before the rows are read (Spark checks this for
+    * inserts into catalog tables only; a path write deletes the output and
+    * then fails with FAILED_READ_FILE.FILE_NOT_EXIST). */
+  private def verifyNotReadPath(df: DataFrame, path: String): Unit = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val reads = df.queryExecution.analyzed.collectLeaves().flatMap {
+      case l: LogicalRelation => l.relation match {
+        case r: HadoopFsRelation => r.location.rootPaths
+        case _ => Nil
+      }
+      case _ => Nil
+    }
+    if (reads.nonEmpty) {
+      val out = new Path(path)
+      val target = out.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+        .makeQualified(out)
+      if (reads.exists(p => Iterator.iterate(p)(_.getParent).takeWhile(_ != null).contains(target)))
+        throw new IllegalArgumentException(
+          s"Cannot overwrite a path that is also being read from: $target")
+    }
+  }
 
   /** The CSV sink's writer options. */
   private val CsvWriteOptions = Map("header" -> "true", "emptyValue" -> "")

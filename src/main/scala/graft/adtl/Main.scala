@@ -29,13 +29,16 @@ object Main {
         |       adtlspark check <spec> [data.csv]""".stripMargin)
 
   /** true when this process (not an embedding caller) owns the session. */
-  private def ownsSession: Boolean = SparkSession.getActiveSession.isEmpty &&
+  private[adtl] def ownsSession: Boolean = SparkSession.getActiveSession.isEmpty &&
     SparkSession.getDefaultSession.isEmpty
 
-  private def session(): SparkSession = {
+  /** The CLIs' session (this one's and `adtlspark-autoparser`'s): master
+    * `SPARK_MASTER` (default `local[*]`), `SPARK_SHUFFLE_PARTITIONS`
+    * shuffle partitions (default 32), UTC, no UI, WARN logs. */
+  private[adtl] def session(appName: String = "adtlspark"): SparkSession = {
     val s = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("adtlspark")
+      .appName(appName)
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
       .config("spark.sql.session.timeZone", "UTC")

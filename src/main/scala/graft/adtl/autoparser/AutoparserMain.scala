@@ -21,21 +21,7 @@ object AutoparserMain {
       |  create-parser <mappings.csv> <schema_path> [-o name] [--description d] [-c config.toml]
       |  create-mapping                                     (LLM stage - not supported)""".stripMargin)
 
-  private def ownsSession: Boolean = SparkSession.getActiveSession.isEmpty &&
-    SparkSession.getDefaultSession.isEmpty
-
-  private def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("adtlspark-autoparser")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private def session(): SparkSession = graft.adtl.Main.session("adtlspark-autoparser")
 
   /** No config file → the reference's defaults (column mappings, counts). */
   private def configOr(path: Option[String]): AutoparserConfig = path match {
@@ -98,7 +84,7 @@ object AutoparserMain {
   private def createDictCmd(args: Array[String]): Unit = {
     val (pos, flags) = parseFlags(args, Set("-c", "--config", "-o", "--output"))
     if (pos.isEmpty) { usage(); sys.exit(1) }
-    val owned = ownsSession
+    val owned = graft.adtl.Main.ownsSession
     val spark = session()
     val cfg = configOr(flags.get("-c").orElse(flags.get("--config")))
     val df = graft.sources.DataReader.readData(spark, pos.head)
@@ -117,7 +103,7 @@ object AutoparserMain {
   private def formatDictCmd(args: Array[String]): Unit = {
     val (pos, flags) = parseFlags(args, Set("-c", "--config", "-o", "--output"))
     if (pos.isEmpty) { usage(); sys.exit(1) }
-    val owned = ownsSession
+    val owned = graft.adtl.Main.ownsSession
     val spark = session()
     val cfg = configOr(flags.get("-c").orElse(flags.get("--config")))
     val entries = cfg.dictionary(spark, pos.head)
@@ -139,7 +125,7 @@ object AutoparserMain {
     val (pos, flags) = parseFlags(args,
       Set("-c", "--config", "-o", "--output", "--description"))
     if (pos.size < 2) { usage(); sys.exit(1) }
-    val owned = ownsSession
+    val owned = graft.adtl.Main.ownsSession
     val spark = session()
     val cfg = configOr(flags.get("-c").orElse(flags.get("--config")))
     val name = flags.get("-o").orElse(flags.get("--output")).getOrElse("globalhealth")

@@ -29,15 +29,6 @@ object Dedup {
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
       .filter(col("n_dups") > 1)
 
-  /** Keep one row per fingerprint (the min id) — the actual dedup. */
-  def dropExactDuplicates(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val fp = TextAnalysis.fingerprint(col(textCol))
-    df.withColumn("__fp", fp)
-      .withColumn("__keep", min_by(col(idCol), col(idCol)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("__fp"))) === col(idCol))
-      .filter(col("__keep")).drop("__fp", "__keep")
-  }
-
   /** Materialize a shared base projection consumed by several plan
     * branches: parquet at `path` when given — the cluster-safe form (any
     * reachable filesystem, survives executor loss under dynamic
@@ -155,45 +146,22 @@ object Dedup {
     * CPU-DENSE per shuffled byte, so AQE's byte-targeted coalescing
     * under-parallelizes the verify stage (measured at 100×: 25 uniform
     * ~40 s tasks — balanced, but each task held 40 s of work). In the
-    * wide regime ([[widen]]) both join sides are pre-partitioned on the
-    * join key at [[verifyWidth]]: the joins REUSE that partitioning
-    * (same exchange count and bytes as the plain plan — these are the
-    * shuffles the joins needed anyway), and user-numbered repartitions
-    * are exempt from AQE coalescing, so the kernel runs wider and max
-    * task drops volume/W; below it the joins' own AQE-coalescible
-    * exchanges win (round-14 near-empty-task tax). */
-  /** CPU-dense-stage width: input-keyed via [[Pipeline.cpuWidth]] — the
-    * explicit (AQE-exempt) partition count for stages whose cost is
-    * compute per row, not bytes (packed-set intersection, gram-hash pack
-    * builds). Scales with the frame's estimated bytes between the
-    * session shuffle width (small inputs — avoids the measured sf0.1
-    * near-empty-task tax) and 8× it (the width the 100× audit needed). */
-  private def verifyWidth(frame: DataFrame): Int = Pipeline.cpuWidth(frame)
-
-  private def widen(df: DataFrame, w: Int, cols: Column*): DataFrame =
-    Pipeline.widen(df, w, cols: _*)
-
-  /** Rebalance for a CPU-dense kernel that runs BEFORE the frame's first
-    * exchange (gram/pack/shingle builds straight off the scan): unlike
-    * [[widen]] there is NO downstream exchange to parallelize the stage —
-    * a no-op below session width leaves the kernel bound to the parquet
-    * split count (sf0.1 documents is ONE split; measured as the
-    * d_prefix_jaccard 1.53× A/B regression when these sites briefly rode
-    * [[widen]]). Always exchanges at `w` (≥ session width by the
-    * cpuWidth clamp floor); the narrow doc shuffle is kilobytes-per-row
-    * against gram CPU. */
-  private def scanRebalance(df: DataFrame, w: Int, cols: Column*): DataFrame =
-    df.repartition(w, cols: _*)
-
+    * wide regime ([[Pipeline.widen]]) both join sides are pre-partitioned
+    * on the join key at [[Pipeline.cpuWidth]]: the joins REUSE that
+    * partitioning (same exchange count and bytes as the plain plan —
+    * these are the shuffles the joins needed anyway), and user-numbered
+    * repartitions are exempt from AQE coalescing, so the kernel runs
+    * wider and max task drops volume/W; below it the joins' own
+    * AQE-coalescible exchanges win (round-14 near-empty-task tax). */
   private def verifyTail(pairs: DataFrame, grams: DataFrame,
       threshold: Double): DataFrame = {
     val spark = grams.sparkSession
-    val w = verifyWidth(grams)
-    widen(widen(pairs, w, col("id_a"))
-      .join(widen(grams.select(col("id").as("id_a"), col("g").as("g_a"),
+    val w = Pipeline.cpuWidth(grams)
+    Pipeline.widen(Pipeline.widen(pairs, w, col("id_a"))
+      .join(Pipeline.widen(grams.select(col("id").as("id_a"), col("g").as("g_a"),
         col("nc").as("n_a")), w, col("id_a"))
         .hint("SHUFFLE_HASH"), "id_a"), w, col("id_b"))
-      .join(widen(grams.select(col("id").as("id_b"), col("g").as("g_b"),
+      .join(Pipeline.widen(grams.select(col("id").as("id_b"), col("g").as("g_b"),
         col("nc").as("n_b")), w, col("id_b"))
         .hint("SHUFFLE_HASH"), "id_b")
       .withColumn("inter", graft.functions.PackedLongs
@@ -342,10 +310,11 @@ object Dedup {
     * Not persisted — columnar caching of array/binary columns costs far
     * more than recomputing this narrow projection per join side (the
     * two sides share the ReusedExchange in the triangle and recompute
-    * only the pack kernel). Rebalanced BEFORE the gram kernel ONLY in
-    * the wide regime ([[widen]]): the pack is CPU-dense per byte and at
-    * audit scale the whole scan otherwise runs in the input's few
-    * parquet splits; at small inputs the pinned exchange is pure tax.
+    * only the pack kernel). Rebalanced BEFORE the gram kernel at the
+    * input-keyed width ([[Pipeline.cpuWidth]]), at every scale: no later
+    * exchange would spread the pack, which is CPU-dense per byte and
+    * otherwise runs in the input's few parquet splits (sf0.1 documents
+    * is ONE split).
     *
     * Oversize guard: chunking spreads the in-block quadratic work but
     * cannot reduce it (measured 16× time at 10× data on a fixed
@@ -358,8 +327,8 @@ object Dedup {
   private def packedGuardedGrams(df: DataFrame, idCol: String,
       textCol: String, blockCol: String, n: Int, chunks: Int,
       maxBlockSize: Int, opName: String): (DataFrame, DataFrame) = {
-    val grams = scanRebalance(df.select(col(blockCol).as("blk"), col(idCol).as("id"),
-        col(textCol).as("__txt")), verifyWidth(df), col("id"))
+    val grams = df.select(col(blockCol).as("blk"), col(idCol).as("id"),
+        col(textCol).as("__txt")).repartition(Pipeline.cpuWidth(df), col("id"))
       .select(col("blk"), col("id"),
         graft.functions.PackedLongs.packSortedSet(df.sparkSession,
           graft.functions.TextHashExprs.ngramHashes(df.sparkSession,
@@ -395,8 +364,8 @@ object Dedup {
       textCol: String, blockCol: String, n: Int, w: Int,
       materializePath: Option[String]): DataFrame = {
     val spark = df.sparkSession
-    val base = scanRebalance(df.select(col(blockCol).as("blk"), col(idCol).as("id"),
-        col(textCol).as("__txt")), w, col("id"))
+    val base = df.select(col(blockCol).as("blk"), col(idCol).as("id"),
+        col(textCol).as("__txt")).repartition(w, col("id"))
       .select(col("blk"), col("id"), array_distinct(
         graft.functions.TextHashExprs.ngramHashes(spark,
           TextAnalysis.tokens(col("__txt")), n)).as("gs"))
@@ -435,8 +404,9 @@ object Dedup {
     * the MIN-set side as a, Jaccard keeps id order); output is
     * (blk, id_a, id_b, inter: int, n_a: long, n_b: long).
     *
-    * Width discipline: all three exchanges go through [[widen]] — pinned
-    * AQE-exempt at [[verifyWidth]] only when the input-keyed width
+    * Width discipline: all three exchanges go through
+    * [[Pipeline.widen]] — pinned AQE-exempt at [[Pipeline.cpuWidth]]
+    * only when the input-keyed width
     * exceeds the session width (the 100×-audit straggler regime); below
     * it the join/agg exchanges stay AQE-coalescible (the round-14 sf0.1
     * regression was exactly these pinned near-empty stages). */
@@ -447,7 +417,7 @@ object Dedup {
       .agg(count(lit(1)).as("__df"))
       .filter(col("__df") > maxGramDf)
       .limit(1)
-    val aSide = widen(toks.select(col("blk"), col("g"), col("id").as("id_a"),
+    val aSide = Pipeline.widen(toks.select(col("blk"), col("g"), col("id").as("id_a"),
         col("nset").as("n_a")), w, col("blk"), col("g"))
       .join(broadcast(hot), Seq("blk", "g"), "left")
       .filter(when(col("__df").isNotNull, raise_error(concat(
@@ -458,14 +428,14 @@ object Dedup {
           .cast("boolean"))
         .otherwise(lit(true)))
       .drop("__df")
-    val bSide = widen(toks.select(col("blk"), col("g"), col("id").as("id_b"),
+    val bSide = Pipeline.widen(toks.select(col("blk"), col("g"), col("id").as("id_b"),
         col("nset").as("n_b")), w, col("blk"), col("g"))
     // pair-key exchange pre-partitioned at w ONLY in the wide regime: the
     // pair count aggregates tens of millions of DISTINCT keys (partial
     // combine only folds same-pair rows, ~1.7×), and at the session
     // width the final agg held 32 tasks at ~12 s median in the 100×
     // audit; the complete agg reuses this exchange
-    widen(aSide.join(bSide.hint("SHUFFLE_HASH"), Seq("blk", "g"))
+    Pipeline.widen(aSide.join(bSide.hint("SHUFFLE_HASH"), Seq("blk", "g"))
         .filter(keepPair(col("id_a"), col("n_a"), col("id_b"), col("n_b"))),
         w, col("blk"), col("id_a"), col("id_b"))
       .groupBy("blk", "id_a", "id_b")
@@ -495,7 +465,7 @@ object Dedup {
     if (pickTriangle(df, engine, materializePath))
       ngramJaccardPairs(df, idCol, textCol, blockCol, n, threshold)
     else {
-      val w = verifyWidth(df)
+      val w = Pipeline.cpuWidth(df)
       val toks = blockedTokFrame(df, idCol, textCol, blockCol, n, w,
         materializePath)
       blockedPairCounts(toks, w, maxGramDf, "blockedJaccardPairs",
@@ -592,7 +562,7 @@ object Dedup {
         blockCol, n, 8, maxBlockSize, "containmentPairs")
       triangleContainment(guarded, grams, threshold, 8)
     } else {
-      val w = verifyWidth(df)
+      val w = Pipeline.cpuWidth(df)
       val toks = blockedTokFrame(df, idCol, textCol, blockCol, n, w,
         materializePath)
       blockedPairCounts(toks, w, maxGramDf, "containmentPairs",
@@ -693,15 +663,15 @@ object Dedup {
     // SHUFFLE_HASH: a broadcast build of wide rows measured ~2.5× slower
     // than a shuffled hash join here, and SMJ adds a useless sort.
     // Both sides pre-partitioned on the join key at the input-keyed CPU
-    // width IN THE WIDE REGIME ([[widen]]): the probe is
+    // width IN THE WIDE REGIME ([[Pipeline.widen]]): the probe is
     // intersect-CPU-dense per shuffled byte, and AQE's byte-targeted
     // coalescing otherwise folds the whole triangle into a handful of
     // tasks (measured 14.4 s single probe task at 10× while the packed
     // grams totalled a few MB). User-numbered repartitions are
     // AQE-exempt; the joins reuse these exchanges.
-    val w = verifyWidth(loSrc)
-    widen(lo, w, col("blk"), col("lo"), col("hi"))
-      .join(widen(hi, w, col("blk"), col("lo"), col("hi"))
+    val w = Pipeline.cpuWidth(loSrc)
+    Pipeline.widen(lo, w, col("blk"), col("lo"), col("hi"))
+      .join(Pipeline.widen(hi, w, col("blk"), col("lo"), col("hi"))
         .hint("SHUFFLE_HASH"), Seq("blk", "lo", "hi"))
       // same-chunk tasks see both orientations — keep one; cross-chunk
       // tasks see exactly one — keep it and reorient on output
@@ -939,7 +909,7 @@ object Dedup {
     // set build is gram-explode CPU bound to the parquet split count
     // otherwise (100×: 25 uniform ~57 s scan tasks while 256 verify tasks
     // idled); one narrow doc shuffle bounds it at volume/width
-    val grams = scanRebalance(df, verifyWidth(df), col(idCol))
+    val grams = df.repartition(Pipeline.cpuWidth(df), col(idCol))
       .select(col(idCol).as("id"),
         graft.functions.PackedLongs.packSortedSet(spark, gramHashes).as("g"))
       .withColumn("nc", (length(col("g")) / 8).cast("int"))
@@ -980,8 +950,8 @@ object Dedup {
     // gram build is CPU bound to the parquet split count otherwise
     // (100×: two 25-task scan stages at ~55 s/task owned the runtime);
     // the narrow doc shuffle is kilobytes-per-row against gram CPU
-    val base = scanRebalance(df.select(col(idCol).as("id"), col(textCol).as("__txt")),
-        verifyWidth(df), col("id"))
+    val base = df.select(col(idCol).as("id"), col(textCol).as("__txt"))
+      .repartition(Pipeline.cpuWidth(df), col("id"))
       .select(col("id"), array_distinct(shingles(col("__txt"), n)).as("gs"))
     // explode_OUTER + post-filter, NOT explode: an inner explode makes
     // InferFiltersFromGenerate add `size(gs) > 0 AND isnotnull(gs)`,
@@ -1001,7 +971,7 @@ object Dedup {
     // collect+sort_array is CPU-dense per byte, so pre-partition by id at
     // verify width (replaces the aggregation's own exchange, exempt from
     // AQE byte-coalescing) — measured 15.6 s max task at 32-wide, 100×
-    val perDoc = widen(ranked, verifyWidth(df), col("id"))
+    val perDoc = Pipeline.widen(ranked, Pipeline.cpuWidth(df), col("id"))
       .groupBy("id")
       .agg(sort_array(collect_list(struct(col("gdf"), col("g")))).as("st"),
         count(lit(1)).as("nset"))

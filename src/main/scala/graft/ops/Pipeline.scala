@@ -32,7 +32,7 @@ object Pipeline {
 
   /** The session's configured shuffle width — [[cpuWidth]]'s clamp floor
     * and the threshold above which an explicit AQE-exempt exchange is
-    * worth pinning (see Dedup.widen). */
+    * worth pinning (see [[widen]]). */
   private[graft] def sessionWidth(spark: org.apache.spark.sql.SparkSession): Int =
     try spark.conf.get("spark.sql.shuffle.partitions").toInt
     catch { case _: Throwable => spark.sparkContext.defaultParallelism }
@@ -45,7 +45,14 @@ object Pipeline {
     * doesn't, and it taxes small inputs: user-numbered repartitions are
     * exempt from AQE coalescing, so every downstream stage holds `w`
     * near-empty tasks — measured round 14 as the correlated 1.2–2.2×
-    * dedup-family sf0.1 A/B regression. */
+    * dedup-family sf0.1 A/B regression.
+    *
+    * Not for a CPU-dense kernel that runs BEFORE the frame's first
+    * exchange (gram/pack/shingle builds straight off the scan): no later
+    * exchange parallelizes that stage, so a no-op here leaves it bound to
+    * the parquet split count (measured as the d_prefix_jaccard 1.53× A/B
+    * regression). Those sites repartition at [[cpuWidth]] always; the
+    * narrow doc shuffle is kilobytes-per-row against gram CPU. */
   private[graft] def widen(df: DataFrame, w: Int, cols: Column*): DataFrame =
     if (w > sessionWidth(df.sparkSession)) df.repartition(w, cols: _*)
     else df
@@ -120,9 +127,9 @@ object Pipeline {
     * ONLY while the frame's estimated natural split count
     * ([[leafBytes]] / `spark.sql.files.maxPartitionBytes`) is below the
     * session width — a 100 TB scan already carries thousands of splits
-    * and skips the exchange entirely, paying nothing. Width is the
-    * leaf-bytes form of the [[cpuWidth]] rule (256 KB of source bytes
-    * per task, clamped to [session width, 8×]). An unavailable estimate
+    * and skips the exchange entirely, paying nothing. Width is
+    * [[cpuWidthLeaf]] (256 KB of source bytes per task, clamped to
+    * [session width, 8×]). An unavailable estimate
     * (≤ 0: no stats, e.g. an RDD-backed frame) leaves the frame alone —
     * the conservative choice at scale; a localCheckpoint leaf DOES
     * carry stats (its block size) and the rebalance may fire on it.
@@ -162,15 +169,8 @@ object Pipeline {
       val naturalSplits = (est + (maxSplit - 1)) / maxSplit
       val parts = sessionWidth(spark)
       if (naturalSplits >= BigInt(parts)) df
-      else {
-        // width keyed to the leaf bytes (the cpuWidth rule at
-        // BytesPerTask of source bytes per task), clamped to
-        // [session width, 8x]
-        val w = ((est + BytesPerTask - 1) / BytesPerTask)
-          .min(BigInt(parts * 8)).max(BigInt(parts)).toInt
-        if (cols.isEmpty) df.repartition(w)
-        else df.repartition(w, cols: _*)
-      }
+      else if (cols.isEmpty) df.repartition(cpuWidthLeaf(df))
+      else df.repartition(cpuWidthLeaf(df), cols: _*)
     }
   }
 

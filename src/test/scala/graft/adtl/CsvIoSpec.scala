@@ -335,15 +335,35 @@ class CsvIoSpec extends SparkSpec {
       .exists(_._1.startsWith("part-")))
   }
 
-  test("csv sink: a frame that reads its own output path fails as the Spark write fails") {
+  test("sinks: a frame that reads its own output path is refused, the output unchanged") {
     val d = tmp()
-    val tables = parser.parseDataFrame(spark, spark.createDataFrame(Seq(
+    val small = parser.parseDataFrame(spark, spark.createDataFrame(Seq(
       ("1", "x", "2.5"))).toDF("id", "v", "n"))
-    def self(out: String) = Map("t" -> spark.read.option("header", "true").csv(out))
-    // the output is deleted before the rows are read back from it
-    val left = failureParity(d.toString, tables("t"),
-      out => parser.writeCsv(self(out), "t", out), out => stockCsv(self(out)("t"), out))
-    assert(left.map(_._1) == Seq(""))
+    // over one per-task unit: the CSV sink's Spark write path
+    val rows = (1 to 12000).map(i => s"$i,value-$i,$i.5").mkString("\n")
+    val large = parser.parseCsv(spark, write(d, "in.csv", s"id,v,n\n$rows\n"))
+    def refused(out: String, earlier: => Unit, reread: String => DataFrame,
+        sink: (Map[String, DataFrame], String) => Unit): Unit = {
+      earlier
+      val before = contents(out)
+      val e = intercept[IllegalArgumentException](sink(Map("t" -> reread(out)), out))
+      assert(e.getMessage.contains("Cannot overwrite a path that is also being read from"))
+      assert(contents(out) == before, out)
+    }
+    val csv = (out: String) => spark.read.option("header", "true").csv(out)
+    refused(s"$d/small.csv", stockCsv(small("t"), s"$d/small.csv"), csv,
+      parser.writeCsv(_, "t", _))
+    refused(s"$d/large.csv", stockCsv(large("t"), s"$d/large.csv"), csv,
+      parser.writeCsv(_, "t", _))
+    // a frame that reads one part file under the output is refused too
+    refused(s"$d/large.csv", (), out => csv(Files.list(Paths.get(out)).iterator().asScala
+      .map(_.toString).find(_.endsWith(".csv")).get), parser.writeCsv(_, "t", _))
+    refused(s"$d/small.parquet", parser.writeParquet(small, "t", s"$d/small.parquet"),
+      spark.read.parquet(_), parser.writeParquet(_, "t", _))
+    // a frame that reads elsewhere still writes
+    parser.writeParquet(Map("t" -> spark.read.parquet(s"$d/small.parquet")), "t",
+      s"$d/copy.parquet")
+    assert(spark.read.parquet(s"$d/copy.parquet").count() == 1)
   }
 
   test("csv sink: every golden spec × source pair that parses writes as the stock writer writes") {

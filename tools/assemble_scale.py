@@ -8,7 +8,10 @@ Usage:
 
 Each input file holds one ScaleBench JSON line. The sf1 form embeds the
 skew run as a `skew_run` block; per-query notes are kept minimal and
-factual (rows ratios speak for themselves).
+factual (rows ratios speak for themselves). A query that failed (listed
+under "failed", or with rows -1 in lines from before that key) or that
+has no time in one of the runs is entered as {"pass": false, "failed":
+true}, and its time is left out of the totals.
 """
 import json
 import sys
@@ -30,12 +33,30 @@ def metric_version(run):
     return run.get("straggler_metric_version", 1)
 
 
+def failed(run):
+    """Queries the run attempted that did not pass: those listed under
+    "failed", and, in artifacts from before that key, the rows == -1
+    sentinel (a failed query used to be timed with rows -1)."""
+    return set(run.get("failed", [])) | {
+        q for q, r in run.get("rows", {}).items() if r < 0}
+
+
+def attempted(run):
+    return sorted(set(run["queries"]) | set(run.get("failed", [])))
+
+
 def per_query(c1, big, copies):
+    # every query the big run attempted: one that failed in either run,
+    # or has no time in either, never reads as a scaling pass (the silent
+    # hole found in round 11 when a transient failure at 100x produced
+    # sec_big=0.05 / rows_big=-1 / pass=true)
     out = {}
-    for q, sec_big in big["queries"].items():
-        sec_1x = c1["queries"].get(q)
-        if sec_1x is None:
+    bad = failed(c1) | failed(big)
+    for q in attempted(big):
+        if q in bad or q not in c1["queries"] or q not in big["queries"]:
+            out[q] = {"pass": False, "failed": True}
             continue
+        sec_1x, sec_big = c1["queries"][q], big["queries"][q]
         rows_1x = c1["rows"][q]
         rows_big = big["rows"][q]
         ratio = sec_big / sec_1x if sec_1x > 0 else float("inf")
@@ -48,11 +69,7 @@ def per_query(c1, big, copies):
             "time_ratio_at_big_data": round(ratio, 2),
             "vs_linear_extrapolation": round(ratio / copies, 3),
             "task_max_over_median_big": float(big["task_max_over_median"][q]),
-            # rows == -1 is ScaleBench's query-failed sentinel: a query
-            # that errored must NEVER read as a scaling pass (the silent
-            # hole found in round 11 when a transient failure at 100x
-            # produced sec_big=0.05 / rows_big=-1 / pass=true)
-            "pass": ratio <= 2 * copies and rows_big >= 0 and rows_1x >= 0,
+            "pass": ratio <= 2 * copies,
         }
         if "task_max_sec" in big:
             out[q]["task_max_sec_big"] = float(big["task_max_sec"][q])
@@ -63,6 +80,11 @@ def per_query(c1, big, copies):
         if "max_task_stage" in big and big["max_task_stage"].get(q):
             out[q]["max_task_stage_big"] = big["max_task_stage"][q]
     return out
+
+
+def passed_secs(run):
+    bad = failed(run)
+    return sum(v for q, v in run["queries"].items() if q not in bad)
 
 
 def main():
@@ -78,7 +100,12 @@ def main():
         copies = big["copies"]
         queries = per_query(c1, big, copies)
         skew_queries = {}
-        for q, sec in skew["queries"].items():
+        skew_bad = failed(skew)
+        for q in attempted(skew):
+            if q in skew_bad:
+                skew_queries[q] = {"pass": False, "failed": True}
+                continue
+            sec = skew["queries"][q]
             entry = {
                 "sec_skew": round(sec, 3),
                 "rows_skew": skew["rows"][q],
@@ -90,7 +117,7 @@ def main():
                 entry["worst_stage"] = skew["worst_stage"][q]
             if "max_task_stage" in skew and skew["max_task_stage"].get(q):
                 entry["max_task_stage"] = skew["max_task_stage"][q]
-            if q in queries:
+            if q in queries and not queries[q].get("failed"):
                 # skewed docs volume is ~1.9x the uniform 10x run
                 lin = queries[q]["sec_1x"] * copies * 1.9
                 entry["linear_expectation_sec"] = round(lin, 3)
@@ -107,8 +134,8 @@ def main():
             "gate": "no query > 2x its linear extrapolation "
                     f"({copies}x the copies=1 time)",
             "queries": queries,
-            "total_1x": round(sum(c1["queries"].values()), 3),
-            "total_10x": round(sum(big["queries"].values()), 3),
+            "total_1x": round(passed_secs(c1), 3),
+            "total_10x": round(passed_secs(big), 3),
             "skew_run": {
                 "harness": skew_note,
                 "gate": "total <= 2x the linear expectation from the uniform "
@@ -142,8 +169,11 @@ def main():
         f.write("\n")
     print(f"wrote {out_path}")
     for q, e in doc["queries"].items():
-        print(f"  {q}: {e['vs_linear_extrapolation']}x of linear, "
-              f"pass={e['pass']}")
+        if e.get("failed"):
+            print(f"  {q}: FAILED, pass=False")
+        else:
+            print(f"  {q}: {e['vs_linear_extrapolation']}x of linear, "
+                  f"pass={e['pass']}")
 
 
 if __name__ == "__main__":

@@ -27,19 +27,23 @@ PREV="$(git rev-parse --verify "${1:-HEAD}^{commit}")"
 shift $(( $# > 0 ? 1 : 0 ))
 BENCH="runMain graft.Bench${*:+ $*}"
 
-WT=/tmp/graft_prev_wt
-git worktree remove --force "$WT" 2>/dev/null || true
-# set -e: a mid-script failure must not leak the worktree
-trap 'git worktree remove --force "$WT" 2>/dev/null || true' EXIT
-git worktree add --detach "$WT" "$PREV" >/dev/null
-# Run BOTH sides on the CURRENT measurement harness: Bench.scala is the
-# stopwatch, not the code under test. Round 12 switched it from count()
-# (which let Catalyst prune projection-only queries to metadata scans
-# and eliminate row-preserving left joins — under-measuring narrow
-# operators since round 1) to a noop-sink write; comparing a count-basis
-# prev against a noop-basis cur manufactures phantom 20-140x
-# "regressions" on exactly the queries count() never really ran.
-cp src/main/scala/graft/Bench.scala "$WT/src/main/scala/graft/Bench.scala"
+# the previous commit as a `git archive` copy (no worktree registered in
+# the repository), removed on exit
+WT="$(mktemp -d "${TMPDIR:-/tmp}/graft_prev.XXXXXX")"
+trap 'rm -rf "$WT"' EXIT
+git archive "$PREV" | tar -x -C "$WT"
+# Run BOTH sides on the CURRENT measurement harness: it is the stopwatch,
+# not the code under test. Round 12 switched it from count() (which let
+# Catalyst prune projection-only queries to metadata scans and eliminate
+# row-preserving left joins — under-measuring narrow operators since
+# round 1) to a noop-sink write; comparing a count-basis prev against a
+# noop-basis cur manufactures phantom 20-140x "regressions" on exactly
+# the queries count() never really ran. Every harness file is copied:
+# Bench.scala alone would not compile against a previous TaskTimes or
+# Harness, and the other mains must compile against the copied ones.
+for f in Bench Harness TaskTimes ScaleBench StageAudit Verify ExplainAudit; do
+  cp "src/main/scala/graft/$f.scala" "$WT/src/main/scala/graft/$f.scala"
+done
 
 # Prefer the bench_full line (full per-query map; emitted since round
 # 11 — the driver-facing last line is compact and carries only the 20
