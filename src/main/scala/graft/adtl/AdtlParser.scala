@@ -288,17 +288,18 @@ final class AdtlParser private (
     spec.tables.collect { case (t, m) if m.kind == "groupBy" => t }.toList
 
   /** The input-prep step shared by every entry point: assign the order id,
-    * scrub `emptyFields` sentinels to "" (stringifying every column — CSV
-    * semantics), and build the rule compiler over the source columns. */
+    * scrub the `emptyFields` sentinel to "" (stringifying every column —
+    * CSV semantics) in the same projection, and build the rule compiler
+    * over the source columns. */
   private def prepare(source: DataFrame, rowId: Column): (DataFrame, RuleCompiler) = {
     Uuid5Expr.register(source.sparkSession) // codegen'd uuid5 for generate rules
-    val df = spec.header.emptyFields.foldLeft(source.withColumn(ROW_ID, rowId)) {
-      (d, sentinel) =>
-        d.select(d.columns.map { c =>
-          if (c == ROW_ID) col(c)
-          else when(col(c).cast("string") === sentinel, "")
-            .otherwise(col(c).cast("string")).as(c)
-        }: _*)
+    val df = spec.header.emptyFields match {
+      case None => source.withColumn(ROW_ID, rowId)
+      case Some(sentinel) =>
+        source.select(source.columns.map { c =>
+          val s = col(c).cast("string")
+          when(s === sentinel, "").otherwise(s).as(c)
+        } :+ rowId.as(ROW_ID): _*)
     }
     val compiler = new RuleCompiler(
       df.columns.filterNot(_ == ROW_ID).toSeq, spec.header, spec.dateFields.toSet,
@@ -459,7 +460,7 @@ final class AdtlParser private (
   private def execOneToOne(df: DataFrame, compiler: RuleCompiler, tname: String): DataFrame = {
     val rules = spec.tableRules(tname).asInstanceOf[Raw]
     val cols = spec.fieldNames(tname).map { attr =>
-      compiler.compile(rules(attr), attr, coerceTypeFor(tname, attr)).as(attr)
+      compiler.compile(rules(attr), attr, coerceTypeFor(tname, attr)).col.as(attr)
     }
     df.select(cols: _*)
   }
@@ -507,8 +508,8 @@ final class AdtlParser private (
     val parsed = df.select(
       (col(ROW_ID) +:
         compiler.compile(rules(groupField), groupField, coerceTypeFor(tname, groupField))
-          .as(groupField) +:
-        attrs.map(a => compiler.compile(rules(a), a, coerceTypeFor(tname, a)).as(a))): _*)
+          .col.as(groupField) +:
+        attrs.map(a => compiler.compile(rules(a), a, coerceTypeFor(tname, a)).col.as(a))): _*)
     (parsed, groupField, attrs)
   }
 
@@ -526,8 +527,6 @@ final class AdtlParser private (
     * non-empty values; combinedType aggregation modes per parser.py:551-637. */
   private def execGroupBy(df: DataFrame, compiler: RuleCompiler, tname: String,
       meta: TableMeta): DataFrame = {
-    val rules = spec.tableRules(tname).asInstanceOf[Raw]
-    val aggregation = effectiveAggregation(tname, meta)
     val (parsed, groupField, attrs) = groupParsed(df, compiler, tname, meta)
 
     def valid(a: String): Column = validIn(parsed, a)
@@ -537,28 +536,17 @@ final class AdtlParser private (
     // pre-aggregation projection: numKey and the allNumeric guard both
     // need try_cast(cast-to-string, double), and as inline aggregate
     // argument expressions it evaluated twice per row per attr.
-    val numAttrs = attrs.filter { a =>
-      val rule = rules(a)
-      aggregation == "applyCombinedType" &&
-        rule.isInstanceOf[Raw @unchecked] &&
-        (rule.asInstanceOf[Raw].get("combinedType").map(_.toString) match {
-          case Some(ct) => ct == "min" || ct == "max"
-          case None => false
-        })
-    }
+    val numAttrs = attrs.filter(a =>
+      appliedCombinedType(tname, meta, a).exists(ct => ct == "min" || ct == "max"))
     val parsedNum = numAttrs.foldLeft(parsed) { (d, a) =>
       d.withColumn(s"__gnum_$a", try_cast(col(a).cast("string"), "double"))
     }
 
     val aggCols: Seq[Column] = attrs.map { a =>
-      val rule = rules(a)
-      val isCombined = rule.isInstanceOf[Raw @unchecked] &&
-        rule.asInstanceOf[Raw].contains("combinedType")
       val v = when(valid(a), col(a))
       val rid = when(valid(a), col(ROW_ID))
-      val out: Column =
-        if (isCombined && aggregation == "applyCombinedType") {
-          val ct = rule.asInstanceOf[Raw]("combinedType").toString
+      val out: Column = appliedCombinedType(tname, meta, a) match {
+        case Some(ct) =>
           // numeric-aware cross-row min/max: numeric strings compare as
           // numbers (Python auto-cast), falling back to lexical when any
           // group value is non-numeric (e.g. ISO dates)
@@ -588,7 +576,8 @@ final class AdtlParser private (
                 x => x.isNotNull)))
             case other => max_by(v, rid)
           }
-        } else max_by(v, rid) // lastNotNull: last non-empty value in file order
+        case None => max_by(v, rid) // lastNotNull: last non-empty value in file order
+      }
       out.as(a)
     }
 
@@ -632,18 +621,15 @@ final class AdtlParser private (
   private def effectiveAggregation(tname: String, meta: TableMeta): String =
     aggOverrides.getOrElse(tname, meta.aggregation.getOrElse("lastNotNull"))
 
-  /** Attributes of a groupBy table that take the lastNotNull overwrite path
-    * (no combinedType, or the table is not in applyCombinedType mode). */
-  private def overwritePathAttrs(tname: String, meta: TableMeta,
-      attrs: Seq[String]): Seq[String] = {
-    val rules = spec.tableRules(tname).asInstanceOf[Raw]
-    val aggregation = effectiveAggregation(tname, meta)
-    attrs.filter { a =>
-      val isCombined = rules(a).isInstanceOf[Raw @unchecked] &&
-        rules(a).asInstanceOf[Raw].contains("combinedType")
-      !(isCombined && aggregation == "applyCombinedType")
+  /** The combinedType a groupBy attribute aggregates by: its rule's, when
+    * the table is in applyCombinedType mode. None routes the attribute
+    * through the lastNotNull overwrite path. */
+  private def appliedCombinedType(tname: String, meta: TableMeta, attr: String): Option[String] =
+    if (effectiveAggregation(tname, meta) != "applyCombinedType") None
+    else spec.tableRules(tname).asInstanceOf[Raw](attr) match {
+      case m: Raw @unchecked => m.get("combinedType").map(_.toString)
+      case _ => None
     }
-  }
 
   /** Scale-safe overwrite diagnostics for groupBy tables: per table, per
     * overwrite-path attribute, the number of groups holding MORE THAN ONE
@@ -687,7 +673,7 @@ final class AdtlParser private (
       compiler: RuleCompiler): Map[String, Map[String, Long]] =
     spec.tables.collect { case (tname, meta) if meta.kind == "groupBy" =>
       val (parsed, groupField, attrs) = groupParsed(df, compiler, tname, meta)
-      val watch = overwritePathAttrs(tname, meta, attrs)
+      val watch = attrs.filter(appliedCombinedType(tname, meta, _).isEmpty)
       tname -> (if (watch.isEmpty) Map.empty[String, Long]
       else {
         val cds = watch.map(a =>
@@ -710,67 +696,31 @@ final class AdtlParser private (
       meta: TableMeta): DataFrame = {
     val entries = oneToManyRules(tname)
     val fields = spec.fieldNames(tname)
-    val common: Map[String, Any] =
-      fields.filter(a => a != "if" && meta.common.contains(a)).map(a => a -> meta.common(a)).toMap
+    val common = fields.filter(a => a != "if" && meta.common.contains(a))
     val entryFields = fields.filterNot(common.contains)
 
-    // resolve one output type per attribute so entry structs align. Rules
-    // compile in entry order, so the first failing rule names the error;
-    // a common rule compiles with the first entry only.
-    val ruleCVs: List[(String, Any, RuleCompiler.CV)] = entries.zipWithIndex.flatMap {
+    // Each rule compiles once, in entry order, so the first failing rule
+    // names the error; a common rule compiles with the first entry only.
+    // One output type per attribute, unified over its compiled values, so
+    // the entry structs align.
+    val cvs: List[((Int, String), RuleCompiler.CV)] = entries.zipWithIndex.flatMap {
       case (e, i) => (e.keySet - "if").toList.filter(a => i == 0 || !meta.common.contains(a))
-        .map(a => (a, e(a), compiler.compileUnhashed(e(a), a)))
+        .map(a => (i, a) -> compiler.compile(e(a), a, coerceTypeFor(tname, a)))
     }
-    def targetType(attr: String): String = {
-      import RuleCompiler._
-      val coerced = coerceTypeFor(tname, attr).map(_.toString)
-      // mirror compile()'s output type: sensitive → string; schema-coerced
-      // string inputs become string-typed canonical-or-raw unions (the
-      // reference returns the raw value on cast failure)
-      val effVts: List[VT] = ruleCVs.collect {
-        case (a, rule, cv) if a == attr && !cv.statNull => (rule, cv.vt)
-      }.map { case (rule, vt0) =>
-        val sensitive = rule match {
-          case m: Raw @unchecked => m.get("sensitive").contains(true)
-          case _ => false
-        }
-        if (sensitive) VStr
-        else coerced match {
-          case Some("integer") => vt0 match {
-            case VLong | VBool | VDbl => VLong
-            case VArr => VArr
-            case _ => VStr
-          }
-          case Some("number") => vt0 match {
-            case VDbl | VLong | VBool => VDbl
-            case VArr => VArr
-            case _ => VStr
-          }
-          case Some("string") => VStr
-          case _ => vt0
-        }
-      }
-      if (effVts.nonEmpty && effVts.forall(_ == VArr)) "array<string>"
-      else if (effVts.nonEmpty && effVts.forall(_ == VBool)) "boolean"
-      else if (effVts.nonEmpty && effVts.forall(_ == VLong)) "bigint"
-      else if (effVts.nonEmpty && effVts.forall(v => v == VDbl || v == VLong)) "double"
-      else "string"
-    }
-    val types = fields.map(a => a -> targetType(a)).toMap
-    def compiled(attr: String, rule: Any): Column =
-      compiler.compile(rule, attr, coerceTypeFor(tname, attr)).cast(types(attr)).as(attr)
+    val compiled = cvs.toMap
+    val types = fields.map(a =>
+      a -> RuleCompiler.unifiedType(cvs.collect { case ((_, `a`), cv) => cv })).toMap
+    // the attribute as entry i compiles it; null where the entry has no rule
+    def typed(i: Int, attr: String): Column =
+      compiled.get((i, attr)).fold(lit(null))(_.col).cast(types(attr)).as(attr)
 
-    val structs: List[Column] = entries.map { e =>
+    val structs: List[Column] = entries.zipWithIndex.map { case (e, i) =>
       val cond = compiler.compileIf(e("if").asInstanceOf[Raw])
-      val fcols = entryFields.map { attr =>
-        if (e.contains(attr)) compiled(attr, e(attr))
-        else lit(null).cast(types(attr)).as(attr)
-      }
-      when(coalesce(cond, lit(false)), struct(fcols: _*))
+      when(coalesce(cond, lit(false)), struct(entryFields.map(typed(i, _)): _*))
     }
 
     df.select(explode(filter(array(structs: _*), x => x.isNotNull)).as("__e") +:
-        common.toList.map { case (a, r) => compiled(a, r) }: _*)
+        common.map(typed(0, _)): _*)
       .select(fields.map(f => if (common.contains(f)) col(f) else col(s"__e.$f").as(f)): _*)
   }
 

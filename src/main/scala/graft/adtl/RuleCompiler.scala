@@ -48,21 +48,17 @@ final class RuleCompiler(
   // ---- public API -------------------------------------------------------
 
   /** Compile a full rule for an output attribute, with optional JSON-schema
-    * type coercion (get_value, get_value.py:137-170). */
-  def compile(rule: Any, attr: String, coerceType: Option[Any]): Column = {
+    * type coercion (get_value, get_value.py:137-170): the column and its
+    * type after sensitive hashing and coercion. Every table kind takes
+    * the attribute's value and type from here. */
+  def compile(rule: Any, attr: String, coerceType: Option[Any]): CV = {
     val cv = compileUnhashed(rule, attr)
-    val hashed = rule match {
+    rule match {
       case m: Raw @unchecked if m.get("sensitive").contains(true) =>
         // the reference hashes str(value) — Python renderings (True/False,
-        // 7.0 keeps its .0), not SQL cast renderings
-        CV(sha2(renderPyStr(cv), 256), VStr)
-      case _ => cv
-    }
-    coerceType match {
-      case Some(t) if !(rule.isInstanceOf[Raw @unchecked] &&
-          rule.asInstanceOf[Raw].get("sensitive").contains(true)) =>
-        coerce(hashed, t).col
-      case _ => hashed.col
+        // 7.0 keeps its .0), not SQL cast renderings — and never coerces
+        cv.copy(col = sha2(renderPyStr(cv), 256), vt = VStr, truthyOverride = None)
+      case _ => coerceType.fold(cv)(coerce(cv, _))
     }
   }
 
@@ -75,42 +71,44 @@ final class RuleCompiler(
     * rendering of the converted value with the raw value as fallback — the
     * only Spark-typable union of "int or unconvertible raw string". CSV
     * output is identical to the typed form on clean data, and validation
-    * (string-cast based) still flags unconvertible values. */
+    * (string-cast based) still flags unconvertible values. A statically
+    * null value stays marked as such. */
   private def coerce(cv: CV, t: Any): CV = {
     val types: List[String] = t match {
       case s: String => List(s)
       case l: List[_] => l.map(_.toString)
       case _ => Nil
     }
+    def to(c: Column, vt: VT) = CV(c, vt, statNull = cv.statNull)
     types.find(x => x == "string" || x == "integer" || x == "number") match {
       case Some("integer") => cv.vt match {
         case VLong => cv
-        case VBool => CV(cv.col.cast("bigint"), VLong) // int(True) == 1
-        case VDbl => CV(cv.col.cast("bigint"), VLong) // int(float) truncates
+        case VBool => to(cv.col.cast("bigint"), VLong) // int(True) == 1
+        case VDbl => to(cv.col.cast("bigint"), VLong) // int(float) truncates
         case VArr => cv // int(list) raises → value unchanged
         case _ =>
           val s = cv.col.cast("string")
-          CV(coalesce(
+          to(coalesce(
             try_cast(s, "bigint").cast("string"),
             bround(try_cast(s, "double")).cast("bigint").cast("string"),
             s), VStr)
       }
       case Some("number") => cv.vt match {
         case VDbl => cv
-        case VLong | VBool => CV(cv.col.cast("double"), VDbl)
+        case VLong | VBool => to(cv.col.cast("double"), VDbl)
         case VArr => cv
         case _ =>
           val s = cv.col.cast("string")
-          CV(coalesce(pyNumStr(try_cast(s, "double")), s), VStr)
+          to(coalesce(pyNumStr(try_cast(s, "double")), s), VStr)
       }
-      case Some("string") => CV(renderString(cv), VStr)
+      case Some("string") => to(renderString(cv), VStr)
       case _ => cv
     }
   }
 
   // ---- rule pipeline ----------------------------------------------------
 
-  def compileUnhashed(rule: Any, attr: String): CV = rule match {
+  private def compileUnhashed(rule: Any, attr: String): CV = rule match {
     case null => CV(lit(null).cast("string"), VStr)
     case s: String => CV(lit(s), VStr)
     case b: Boolean => CV(lit(b), VBool)
@@ -700,6 +698,20 @@ object RuleCompiler {
   final case class CV(col: Column, vt: VT,
       truthyOverride: Option[Column] = None,
       statNull: Boolean = false)
+
+  /** The one Spark type that holds every compiled value of an attribute
+    * (a oneToMany attribute has one per entry): statically-null values do
+    * not count, integers widen to double beside doubles, and any other mix
+    * is string. */
+  def unifiedType(cvs: Seq[CV]): String = {
+    val vts = cvs.filterNot(_.statNull).map(_.vt)
+    if (vts.isEmpty) "string"
+    else if (vts.forall(_ == VArr)) "array<string>"
+    else if (vts.forall(_ == VBool)) "boolean"
+    else if (vts.forall(_ == VLong)) "bigint"
+    else if (vts.forall(v => v == VDbl || v == VLong)) "double"
+    else "string"
+  }
 
   /** Static result types of the transformation library (for the ""→null and
     * truthiness decisions downstream). Under returnUnmatched, pass-through

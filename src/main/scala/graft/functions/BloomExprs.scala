@@ -116,7 +116,7 @@ object BloomExprs {
     * once per task with the plan, the [[LmScoreExpr]] pattern), so the
     * corpus scan stays a single narrow whole-stage-codegen projection. */
   case class BloomCountContainedExpr(child: Expression, words: Array[Long],
-      numHashes: Int) extends UnaryExpression {
+      numHashes: Int) extends UnaryExpression with DigestArrayArgs {
     override def dataType: DataType = IntegerType
     override def prettyName: String = "graft_bloom_count_contained"
     override protected def nullSafeEval(a: Any): Any =

@@ -40,7 +40,7 @@ import org.apache.spark.unsafe.types.UTF8String
 case class LmScoreExpr(child: Expression,
     bgW1: Array[Array[Byte]], bgW2: Array[Array[Byte]], bgCnt: Array[Long],
     ctxW1: Array[Array[Byte]], ctxCnt: Array[Long],
-    addK: Double, denomK: Double) extends UnaryExpression {
+    addK: Double, denomK: Double) extends UnaryExpression with DigestArrayArgs {
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_bigrams", LongType, nullable = false),
@@ -123,7 +123,7 @@ case class LmScoreExpr(child: Expression,
   * bit-identical to the explode+join+aggregate form at any parallelism. */
 case class NbScoreExpr(child: Expression,
     words: Array[Array[Byte]], lo: Array[JBigDecimal],
-    unseen: JBigDecimal) extends UnaryExpression {
+    unseen: JBigDecimal) extends UnaryExpression with DigestArrayArgs {
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_tokens", LongType, nullable = false),
@@ -203,7 +203,7 @@ case class NbScoreExpr(child: Expression,
 case class NbArgmaxExpr(child: Expression, gramN: Int,
     words: Array[Array[Byte]], loUnscaled: Array[Array[Long]],
     unseenUnscaled: Array[Long], langs: Array[String])
-    extends UnaryExpression {
+    extends UnaryExpression with DigestArrayArgs {
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_tokens", LongType, nullable = false),

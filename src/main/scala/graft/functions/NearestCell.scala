@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
   * strict comparison).
   */
 case class NearestCellExpr(child: Expression, cells: Array[Int],
-    flat: Array[Double], dim: Int) extends UnaryExpression {
+    flat: Array[Double], dim: Int) extends UnaryExpression with DigestArrayArgs {
 
   override def dataType: DataType = IntegerType
   override def prettyName: String = "graft_nearest_cell"
@@ -66,7 +66,7 @@ case class NearestCellExpr(child: Expression, cells: Array[Int],
   * min(k, nCells) cell ids in probe order.
   */
 case class NearestCellsTopKExpr(child: Expression, cells: Array[Int],
-    flat: Array[Double], dim: Int, k: Int) extends UnaryExpression {
+    flat: Array[Double], dim: Int, k: Int) extends UnaryExpression with DigestArrayArgs {
 
   require(k >= 1, s"nearestCellsTopK: k must be >= 1, got $k " +
     "(nProbe = 0 probes no cells)")

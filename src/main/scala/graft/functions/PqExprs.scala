@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * loops, like the other vector kernels).
   */
 case class PqLutExpr(child: Expression, flat: Array[Double],
-    sizes: Array[Int], dsub: Int) extends UnaryExpression {
+    sizes: Array[Int], dsub: Int) extends UnaryExpression with DigestArrayArgs {
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "graft_pq_lut"

@@ -27,7 +27,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * sets every bit — identical in both engines.
   */
 case class SrpBitsExpr(child: Expression, as: Array[Long], bs: Array[Long])
-    extends UnaryExpression {
+    extends UnaryExpression with DigestArrayArgs {
 
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_srp_bits"

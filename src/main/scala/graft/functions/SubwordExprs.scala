@@ -29,7 +29,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `substr` counts, so an engine re-deriving the greedy walk lands on
   * identical pieces. */
 case class SubwordTokenizeExpr(child: Expression, vocab: Array[UTF8String])
-    extends UnaryExpression {
+    extends UnaryExpression with DigestArrayArgs {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_subword_tokenize"

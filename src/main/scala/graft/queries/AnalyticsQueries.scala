@@ -787,8 +787,7 @@ object AnalyticsQueries {
     // so the stream's emit-on-close rows are hash-pinned against DuckDB,
     // not just spec-pinned against the batch twin.
     "q_session_rows_stream" -> { (s, d) =>
-      val src = java.nio.file.Files.createTempDirectory("graft_sessrows")
-        .toString
+      val src = TempDirs.create("sessrows").toString
       val ev = Tables.events(s, d).select("user_id", "ts", "event_id")
       ev.write.mode("overwrite").parquet(src)
       val schema = s.read.parquet(src).schema

@@ -458,7 +458,7 @@ object EngineQueries {
     // functions); engine users ship the schema next to the spec like the
     // reference does.
     "p12_coercion" -> { (s, d) =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft-p12")
+      val tmp = TempDirs.create("p12")
       java.nio.file.Files.writeString(tmp.resolve("coerce-schema.json"), coercionSchema)
       AdtlParser.fromSpec(graft.adtl.SpecLoader.parseJson(coercionSpec),
           specDir = Some(tmp.toString))
@@ -471,7 +471,7 @@ object EngineQueries {
     // predicates. Validation never drops rows. (Temp schema file =
     // harness-only plumbing, as in p12_coercion.)
     "v_schema_validate" -> { (s, d) =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft-vsv")
+      val tmp = TempDirs.create("vsv")
       java.nio.file.Files.writeString(tmp.resolve("obs-schema.json"), validationSchema)
       AdtlParser.fromSpec(graft.adtl.SpecLoader.parseJson(validationSpec),
           specDir = Some(tmp.toString))
@@ -494,7 +494,7 @@ object EngineQueries {
     // filtered groupBy names the "No validator found" fallback rows; the
     // tiny result is re-lifted into a DataFrame for the hash compare)
     "v_report_errors" -> { (s, d) =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft-vre")
+      val tmp = TempDirs.create("vre")
       java.nio.file.Files.writeString(tmp.resolve("obs-schema.json"), validationSchema)
       val p = AdtlParser.fromSpec(graft.adtl.SpecLoader.parseJson(validationSpec),
         specDir = Some(tmp.toString))
@@ -512,8 +512,7 @@ object EngineQueries {
     "v_csv_sink" -> { (s, d) =>
       val p = AdtlParser.fromJsonString(oneToOneSpec)
       val tables = p.parseDataFrame(s, ordersInput(s, d))
-      val dir = java.nio.file.Files.createTempDirectory("graft-vcs")
-        .toString + "/order_fact"
+      val dir = TempDirs.create("vcs").toString + "/order_fact"
       p.writeCsv(tables, "order_fact", dir)
       s.read.option("header", "true").csv(dir).orderBy("order_key")
     },
@@ -523,8 +522,7 @@ object EngineQueries {
     "v_parquet_sink" -> { (s, d) =>
       val p = AdtlParser.fromJsonString(oneToOneSpec)
       val tables = p.parseDataFrame(s, ordersInput(s, d))
-      val dir = java.nio.file.Files.createTempDirectory("graft-vps")
-        .toString + "/order_fact"
+      val dir = TempDirs.create("vps").toString + "/order_fact"
       p.writeParquet(tables, "order_fact", dir)
       s.read.parquet(dir).orderBy("order_key")
     },

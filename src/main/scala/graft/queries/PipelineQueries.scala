@@ -96,9 +96,7 @@ object PipelineQueries {
     },
     // MinHash+LSH near-dup candidate pairs over the md5-affine family: the
     // full pipeline (banding, bucket cap, pair dedup, agreement estimate)
-    // is hash-checked against the DuckDB oracle. The xxhash64 production
-    // family runs the same lshFromSignatures machinery (kernel parity in
-    // TextHashExprsSpec + OpsSpec).
+    // is hash-checked against the DuckDB oracle.
     "d_minhash_lsh" -> { (s, d) =>
       // 4 minima per band: 2-minima band keys collide ~J² and flood the
       // buckets on a self-similar corpus; 4 minima collide ~J⁴
@@ -131,8 +129,7 @@ object PipelineQueries {
     },
     // SimHash near-dup pairs over the 31-bit md5 signature: bucketing,
     // pair dedup and Hamming verify are all hash-checked against the
-    // oracle (the 64-bit xxhash64 family runs the same pair machinery,
-    // pinned by kernel parity tests)
+    // oracle
     "d_simhash" -> { (s, d) =>
       Dedup.simhashPairsMd5(Tables.documents(s, d), "doc_id", "text",
         maxHamming = 10, maxBucketSize = 200)
@@ -1321,8 +1318,7 @@ object PipelineQueries {
     // ORC sink round-trip — the third columnar format next to parquet and
     // csv: typed write + read-back, byte fidelity pinned via md5(text)
     "v_orc_sink" -> { (s, d) =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-orc")
-        .toString + "/docs"
+      val dir = TempDirs.create("orc").toString + "/docs"
       Tables.documents(s, d).select("doc_id", "text", "source", "n_chars")
         .write.mode("overwrite").orc(dir)
       s.read.orc(dir)
@@ -1382,8 +1378,7 @@ object PipelineQueries {
     // schemas and null-fills — the append-only ingest contract when a
     // source adds columns mid-stream
     "v_schema_merge" -> { (s, d) =>
-      val root = java.nio.file.Files.createTempDirectory("graft-merge")
-        .toString
+      val root = TempDirs.create("merge").toString
       val docs = Tables.documents(s, d)
       docs.select("doc_id", "text")
         .write.mode("overwrite").parquet(root + "/batch1")
@@ -1483,8 +1478,7 @@ object PipelineQueries {
     // (no inference pass to schedule over 100 TB; malformed rows → null
     // columns, the PERMISSIVE contract), byte fidelity via md5(text)
     "v_jsonl_source" -> { (s, d) =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-jsonl")
-        .toString + "/docs"
+      val dir = TempDirs.create("jsonl").toString + "/docs"
       Tables.documents(s, d)
         .select("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").json(dir)
@@ -1500,8 +1494,7 @@ object PipelineQueries {
     // directory (PartitionFilters, checked by ExplainAudit), never list
     // the full table
     "v_partitioned_write" -> { (s, d) =>
-      val root = java.nio.file.Files.createTempDirectory("graft-part")
-        .toString + "/docs"
+      val root = TempDirs.create("part").toString + "/docs"
       Tables.documents(s, d).select("doc_id", "text", "source")
         .write.mode("overwrite").partitionBy("source").parquet(root)
       s.read.parquet(root).filter(col("source") === "src1")

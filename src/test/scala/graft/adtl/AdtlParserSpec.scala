@@ -522,6 +522,68 @@ class AdtlParserSpec extends SparkSpec {
     assert(obs.columns.toSeq == Seq("admission", "is_present", "name"))
   }
 
+  /** The CSV text of a table written through writeCsv. */
+  private def csvText(p: AdtlParser, tables: Map[String, DataFrame], tname: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val dir = graft.queries.TempDirs.create("csv").resolve(tname)
+    p.writeCsv(tables, tname, dir.toString)
+    java.nio.file.Files.list(dir).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-"))
+      .flatMap(f => java.nio.file.Files.readAllLines(f).asScala).toSeq
+  }
+
+  test("one rule under union schema types writes the same cells in oneToOne and oneToMany") {
+    val tmp = graft.queries.TempDirs.create("union")
+    val schema =
+      """{"properties": {
+        |  "name": {"type": "string"},
+        |  "n": {"type": ["integer", "null"]},
+        |  "s": {"type": ["string", "null"]},
+        |  "d": {"type": ["number", "null"]}}}""".stripMargin
+    java.nio.file.Files.writeString(tmp.resolve("one.json"), schema)
+    java.nio.file.Files.writeString(tmp.resolve("many.json"), schema)
+    // a numeric values map under integer and string; an integer-typed
+    // rule under number
+    val rules =
+      """"name": "x",
+        |"n": {"field": "k", "values": {"1": 7, "2": 8.5}},
+        |"s": {"field": "k", "values": {"1": 7, "2": 8.5}},
+        |"d": 7""".stripMargin
+    java.nio.file.Files.writeString(tmp.resolve("spec.json"),
+      s"""{
+        |  "adtl": {"name": "s", "description": "d", "tables": {
+        |    "one": {"kind": "oneToOne", "schema": "one.json"},
+        |    "many": {"kind": "oneToMany", "schema": "many.json", "discriminator": "name"}}},
+        |  "one": {$rules},
+        |  "many": [{"if": {"k": {"!=": ""}}, $rules}]
+        |}""".stripMargin)
+    val p = AdtlParser.fromFile(tmp.resolve("spec.json").toString)
+    val tables = p.parseDataFrame(spark, strDf(Seq("k"), Seq(Seq("1"), Seq("2"))),
+      skipValidation = true)
+    // the reference: int(7), int(8.5); str(7), str(8.5); float(7)
+    val expected = Seq("d,n,name,s", "7.0,7,x,7", "7.0,8,x,8.5")
+    assert(csvText(p, tables, "one") == expected)
+    assert(csvText(p, tables, "many") == expected)
+  }
+
+  test("oneToMany: rules compile in entry order, then the ifs; the first failing one names the error") {
+    def err(entries: String): String = intercept[Spec.SpecValidationError] {
+      AdtlParser.fromJsonString(
+        s"""{"adtl": {"name": "s", "description": "d", "tables": {
+           |  "t": {"kind": "oneToMany", "discriminator": "name"}}},
+           |  "t": [$entries]}""".stripMargin)
+        .parseDataFrame(spark, strDf(Seq("k"), Seq(Seq("1"))))
+    }.getMessage
+    // attribute "z" of entry 0 fails before attribute "a" of entry 1
+    assert(err("""{"if": {"k": "1"}, "name": "p", "z": {"field": "first"}},
+                 |{"if": {"k": "1"}, "name": "q", "a": {"field": "second"}}""".stripMargin) ==
+      "Column 'first' not found.")
+    // every entry's rules compile before entry 0's if
+    assert(err("""{"if": {"gone": "1"}, "name": "p", "z": {"field": "k"}},
+                 |{"if": {"k": "1"}, "name": "q", "a": {"field": "second"}}""".stripMargin) ==
+      "Column 'second' not found.")
+  }
+
   test("uuid5 generation is deterministic and seed-order sensitive") {
     val spec =
       """{

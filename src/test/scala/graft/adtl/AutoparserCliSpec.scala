@@ -14,7 +14,7 @@ class AutoparserCliSpec extends SparkSpec {
     "src/test/resources/golden/autoparser").getAbsolutePath
   private lazy val tmp = {
     spark // CLI reuses the suite session
-    Files.createTempDirectory("graft-apcli").toFile.getAbsolutePath
+    graft.queries.TempDirs.create("apcli").toFile.getAbsolutePath
   }
 
   test("create-dict infers a dictionary with config column names") {

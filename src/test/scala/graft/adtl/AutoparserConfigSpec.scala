@@ -106,7 +106,7 @@ class AutoparserConfigSpec extends SparkSpec {
   }
 
   test("config drives DictReader end to end (column mappings + delimiters)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-apc").toFile.getAbsolutePath
+    val dir = graft.queries.TempDirs.create("apc").toFile.getAbsolutePath
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/cfg.toml"),
       s"""language = "fr"
          |[schemas]

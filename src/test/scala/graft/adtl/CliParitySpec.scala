@@ -25,7 +25,7 @@ class CliParitySpec extends SparkSpec {
 
   private lazy val tmp = {
     spark // CLI reuses the suite session (ownsSession is false)
-    val dir = Files.createTempDirectory("graft-cli").toFile.getAbsolutePath
+    val dir = graft.queries.TempDirs.create("cli").toFile.getAbsolutePath
     Files.writeString(java.nio.file.Paths.get(s"$dir/spec.toml"),
       """[adtl]
         |  name = "ow"

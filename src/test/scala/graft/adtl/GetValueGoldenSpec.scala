@@ -27,7 +27,7 @@ class GetValueGoldenSpec extends SparkSpec {
     val schema = StructType(cols.map(c => StructField(c, StringType, nullable = true)))
     val df = spark.createDataFrame(
       java.util.List.of(Row(cols.map(row): _*)), schema)
-    val out = df.select(compiler.compile(rule, "x", None).as("r")).collect()(0)
+    val out = df.select(compiler.compile(rule, "x", None).col.as("r")).collect()(0)
     if (out.isNullAt(0)) null else out.get(0)
   }
 

@@ -191,7 +191,7 @@ class MappingParserGoldenSpec extends SparkSpec {
   test("combine_duplicates config: the FULL generated parser file carries " +
       "the firstNonNull block and executes end-to-end") {
     import graft.adtl.autoparser.{AutoparserConfig, ParserGenerator}
-    val dir = java.nio.file.Files.createTempDirectory("graftcombine")
+    val dir = graft.queries.TempDirs.create("combine")
     def write(name: String, text: String): String = {
       val p = dir.resolve(name)
       java.nio.file.Files.writeString(p, text)

@@ -20,7 +20,7 @@ class SchemaUtilGoldenSpec extends SparkSpec {
       java.util.List.of(Row(value)),
       StructType(Seq(StructField("v", StringType, nullable = true))))
     val out = df.select(
-      compiler.compile(Map("field" -> "v"), "x", Some(target)).as("r")).collect()(0)
+      compiler.compile(Map("field" -> "v"), "x", Some(target)).col.as("r")).collect()(0)
     if (out.isNullAt(0)) null else out.get(0)
   }
 

@@ -197,7 +197,7 @@ class ValuePipelinePropertySpec extends SparkSpec {
       Map("field" -> "s", "apply" -> Map("function" -> "isNotNull"),
         "values" -> Map("True" -> "present"), "ignoreMissingKey" -> true))
     val got = df.select(rules.zipWithIndex.map { case (r, i) =>
-      c.compile(r, s"r$i", None).as(s"r$i") }: _*).collect()
+      c.compile(r, s"r$i", None).col.as(s"r$i") }: _*).collect()
       .map(_.toSeq.map(v => if (v == null) null else v.toString))
     assert(got.toSeq == Seq(
       Seq("present", "one", "true", "one", "present"),
@@ -220,7 +220,7 @@ class ValuePipelinePropertySpec extends SparkSpec {
 
     val rules = (0 until 60).map(_ => genRule(rng))
     val outCols = rules.zipWithIndex.map { case (r, i) =>
-      compiler.compile(toRaw(r), s"r$i", None).as(s"r$i")
+      compiler.compile(toRaw(r), s"r$i", None).col.as(s"r$i")
     }
     val got = df.select(outCols: _*).collect()
 

@@ -149,7 +149,7 @@ class ClusterSpec extends SparkSpec {
   }
 
   test("parquet materialization path yields identical clusters") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc").toString
+    val dir = graft.queries.TempDirs.create("cc").toString
     val ps = pairsDf(Seq((1L, 2L), (2L, 3L), (7L, 9L)))
     val a = Cluster.connectedComponents(ps, "id_a", "id_b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

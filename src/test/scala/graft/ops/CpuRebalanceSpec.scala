@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   */
 class CpuRebalanceSpec extends SparkSpec {
   private def smallScan() = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cpur").toString
+    val dir = graft.queries.TempDirs.create("cpur").toString
     spark.range(0, 1000).select(col("id"), (col("id") % 7).as("k"))
       .coalesce(1).write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir)

@@ -111,7 +111,7 @@ class IvfPqSpec extends SparkSpec {
 
   test("index persists partitioned by cell and searches identically after load") {
     val (codes, cents, books) = smallIndex
-    val dir = java.nio.file.Files.createTempDirectory("graftivfpq").toString
+    val dir = graft.queries.TempDirs.create("ivfpq").toString
     IvfPq.save(codes, cents, books, dir)
     val cellDirs = new java.io.File(s"$dir/codes").listFiles()
       .filter(_.getName.startsWith("cell=")).map(_.getName).toSet

@@ -124,7 +124,7 @@ class NearestCellsTopKSpec extends SparkSpec {
 
   test("materialized-assignment route returns identical multi-probe pairs") {
     val e = embeddings.filter(col("vec_id") < 300)
-    val dir = java.nio.file.Files.createTempDirectory("graftcellmat")
+    val dir = graft.queries.TempDirs.create("cellmat")
       .toString + "/assign"
     def run(path: Option[String]) =
       Dedup.embeddingNearDupPairsByCell(e, "vec_id", "embedding",

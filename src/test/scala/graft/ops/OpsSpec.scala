@@ -131,7 +131,7 @@ class OpsSpec extends SparkSpec {
   test("IVF index persists partitioned by cell and searches identically after load") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val (assigned, centroids) = IvfIndex.build(e, "vec_id", "embedding", nCells = 8)
-    val dir = java.nio.file.Files.createTempDirectory("graftivf").toString
+    val dir = graft.queries.TempDirs.create("ivf").toString
     IvfIndex.save(assigned, centroids, dir)
     // on-disk inverted file: one directory per cell (partition pruning =
     // a probe reads only its cells' files)
@@ -322,7 +322,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("sliding window agg: streaming form matches the batch form") {
-    val src = java.nio.file.Files.createTempDirectory("graftslide").toString
+    val src = graft.queries.TempDirs.create("slide").toString
     val events = graft.queries.Tables.events(spark, "/root/testdata/sf0.001")
     events.write.mode("overwrite").parquet(src)
     val schema = spark.read.parquet(src).schema
@@ -350,7 +350,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("sessionRowsStream: closed sessions == batch sessionize rows (batch == stream)") {
-    val src = java.nio.file.Files.createTempDirectory("graftsess").toString
+    val src = graft.queries.TempDirs.create("sess").toString
     val events = graft.queries.Tables.events(spark, "/root/testdata/sf0.001")
       .select("user_id", "ts", "event_id")
     // split by TIME (per-user ordered arrival — the documented lateness
@@ -967,7 +967,7 @@ class OpsSpec extends SparkSpec {
       s"final job re-read the raw source: ${scans.value} vs $afterBuild")
     // cluster-durable form: materializePath writes real parquet stages and
     // produces identical output
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mix").toString
+    val tmp = graft.queries.TempDirs.create("mix").toString
     val viaPath = graft.ops.Pipeline.assembleTrainingMix(df, "doc_id",
       "text", "source", spanN = 8, posSource = "A", negSource = "B",
       minLogOdds = -100.0, budgets = Map.empty, defaultBudget = 1000L,
@@ -1212,7 +1212,7 @@ class OpsSpec extends SparkSpec {
       pmod(xxhash64(col("id")), lit(64)).as("b"))
     val bits = 6 // 64 bins per dimension, 2 dims * 6 bits = 12-bit z
     val cuts = graft.ops.Layout.longCuts(0L, 63L, bits)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_z").toString
+    val tmp = graft.queries.TempDirs.create("z").toString
     base.withColumn("zval", graft.ops.Layout.zvalue(
         Seq(col("a") -> cuts, col("b") -> cuts), bits))
       .repartitionByRange(16, col("zval")).sortWithinPartitions("zval")

@@ -229,7 +229,7 @@ class PairOpsInvarianceSpec extends SparkSpec {
   }
 
   test("lshVerifiedPairsMd5 parquet materialization equals localCheckpoint") {
-    val dir = java.nio.file.Files.createTempDirectory("graftlshmat").toString + "/base"
+    val dir = graft.queries.TempDirs.create("lshmat").toString + "/base"
     def run(path: Option[String]) =
       Dedup.lshVerifiedPairsMd5(nearDupDocs, "doc_id", "text",
         n = 2, numHashes = 16, bands = 8, materializePath = path)
@@ -242,7 +242,7 @@ class PairOpsInvarianceSpec extends SparkSpec {
   }
 
   test("parquet materialization route returns pairs identical to localCheckpoint") {
-    val dir = java.nio.file.Files.createTempDirectory("graftmat").toString + "/base"
+    val dir = graft.queries.TempDirs.create("mat").toString + "/base"
     val viaCheckpoint = Dedup.ngramJaccardPairsBounded(nearDupDocs, "doc_id",
       "text", "source", 2, 0.5, maxBlockSize = 5)
       .select("blk", "id_a", "id_b", "jaccard")

@@ -93,7 +93,7 @@ class SrpLshSpec extends SparkSpec {
 
   test("parquet materialization route returns identical pairs") {
     val e = embeddings.filter(col("vec_id") < 300)
-    val dir = java.nio.file.Files.createTempDirectory("graftsrp")
+    val dir = graft.queries.TempDirs.create("srp")
       .toString + "/base"
     def run(path: Option[String]) =
       Dedup.embeddingSrpLshPairs(e, "vec_id", "embedding",

@@ -102,7 +102,7 @@ class WinnowSpec extends SparkSpec {
 
   test("parquet materialization route returns identical pairs") {
     val docs = documents.select("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graftwin")
+    val dir = graft.queries.TempDirs.create("win")
       .toString + "/fps"
     def run(path: Option[String]) =
       TextAnalysis.winnowOverlapPairs(docs, "doc_id", "text",

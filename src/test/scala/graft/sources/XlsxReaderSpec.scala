@@ -95,7 +95,7 @@ class XlsxReaderSpec extends SparkSpec {
 
   test("read_data dispatch: csv, parquet, xlsx, and the unsupported error") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-readdata").toFile.getAbsolutePath
+    val tmp = graft.queries.TempDirs.create("readdata").toFile.getAbsolutePath
     Seq(("a", "1"), ("b", "2")).toDF("k", "v")
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/t.parquet")
     assert(DataReader.readData(spark, s"$tmp/t.parquet").count() == 2)
